@@ -68,9 +68,15 @@ object BenchExtra {
     for (_ <- 0 until rounds; n <- wanted) {
       val t = timeOnce(n)
       spark.catalog.clearCache()
-      best(n) = best.get(n).filter(_ >= 0).map(math.min(_, t)).getOrElse(t)
+      // a failed round (t < 0) never displaces a valid time
+      if (t >= 0) best(n) = best.get(n).fold(t)(math.min(_, t))
     }
-    best.foreach { case (n, t) => println(f"[benchextra] $n%-40s ${t}%.3f s") }
+    wanted.distinct.foreach { n =>
+      best.get(n) match {
+        case Some(t) => println(f"[benchextra] $n%-40s ${t}%.3f s")
+        case None => println(f"[benchextra] $n%-40s FAILED (every round)")
+      }
+    }
     if (profile) {
       import scala.jdk.CollectionConverters._
       stages.asScala.toSeq.sortBy(-_._2).take(40).foreach { case (n, d, sr, sw) =>

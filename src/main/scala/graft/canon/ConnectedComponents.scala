@@ -1,9 +1,9 @@
 package graft.canon
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import scala.util.chaining._
 
 /** Connected components over alias/sameAs edges as iterative DataFrame
   * self-joins — small-label propagation with pointer jumping (SURVEY.md §4,
@@ -21,12 +21,10 @@ import scala.util.chaining._
   *
   * Scale notes:
   *  - edges are symmetrized once up front;
-  *  - each round's frame is eagerly checkpointed: this truncates the
+  *  - each round's frame is eagerly materialized: this truncates the
   *    logical plan, which otherwise grows exponentially across iterations
-  *    (every round re-embeds the previous round's join tree). Pass
-  *    `checkpointDir` for reliable fault-tolerant `checkpoint()` on a real
-  *    cluster (round frames survive executor loss); the default is
-  *    `localCheckpoint` — the single-JVM mode (identical output, spec-pinned);
+  *    (every round re-embeds the previous round's join tree). Lifecycle,
+  *    durability and `checkpointDir`: [[graft.tables.Checkpoints]];
   *  - supernode skew (one hub with millions of neighbors) rides on AQE skew
   *    splitting; the `spark.sql.adaptive.skewJoin` knobs are the knob, not
   *    custom salting, because the join keys here are already maximally
@@ -39,81 +37,51 @@ object ConnectedComponents {
 
   /** edges(src, dst) → (id, component) with component = min id in the
     * component (string min). Nodes = every id appearing in edges ∪ `nodes`.
-    */
-  /** Reliable-checkpoint lifecycle (checkpointDir mode): `setCheckpointDir`
-    * is SparkContext-GLOBAL, so this call saves the session's previous dir
-    * and restores it before returning — two pipelines (or unrelated code
-    * calling `.checkpoint()`) in one session cannot silently write into each
-    * other's dirs. Caveat (Spark has no unset API): when the session had NO
-    * previous dir, the dir passed here necessarily remains installed after
-    * the call — later unrelated `.checkpoint()` calls would write into it;
-    * a warning is logged in that case rather than claiming full isolation.
-    * Spark does NOT auto-delete reliable checkpoints: the
-    * RETURNED frame depends on its checkpoint files until the caller has
-    * consumed (or re-materialized) it, after which the caller owns deleting
-    * `checkpointDir`; set `spark.cleaner.referenceTracking.cleanCheckpoints=
-    * true` to let the ContextCleaner reclaim the per-round intermediates as
-    * they fall out of scope.
+    * Lifecycle and `checkpointDir`: [[graft.tables.Checkpoints]].
     */
   def run(spark: SparkSession, edges: DataFrame, nodes: DataFrame,
           maxIterations: Int = 50, checkpointDir: Option[String] = None): DataFrame =
-    // reliable (fault-tolerant) checkpointing when a dir is given — the real-
-    // cluster mode: round frames survive executor loss. localCheckpoint is
-    // the single-JVM default (no HDFS in the sandbox); the global-dir
-    // save/warn/restore dance lives in ONE place, Checkpoints.withDir.
-    graft.tables.Checkpoints.withDir(spark, checkpointDir) { materialize =>
-    val sym = edges.select(col("src"), col("dst"))
+    Checkpoints.superstep(spark, checkpointDir) { s =>
+    val sym = s.hold(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     sym.count()
 
-    var labels = nodes.select(col("id"))
+    val start = s.materialize(nodes.select(col("id"))
       .unionByName(sym.select(col("src").as("id")))
       .distinct()
-      .withColumn("component", col("id"))
-      .pipe(materialize)
+      .withColumn("component", col("id")))
 
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIterations) {
+    val (labels, changed) = s.rounds((start, 1L), maxIterations) { case ((labels, _), _) =>
       // neighbor-min: for each node, the min component among its neighbors
       val neighborMin = sym
         .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("component")).as("nmin"))
 
-      val stepped = labels
+      // both jump-join sides read it: never run the neighbor-min shuffle
+      // twice per round (held for the round, not materialized — lineage is
+      // truncated by `next`'s materialize anyway)
+      val stepped = s.holdRound(labels
         .join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
-          (col("nmin").isNotNull && col("nmin") < col("component")).as("_changed"))
-        .persist() // both jump-join sides read it: never run the neighbor-min
-                   // shuffle twice per round (persist, not localCheckpoint —
-                   // it must be releasable below; lineage is truncated by
-                   // `next`'s checkpoint anyway)
+          (col("nmin").isNotNull && col("nmin") < col("component")).as("_changed")))
 
       // pointer jump: component(u) := component(component(u)) — component
       // values are node ids, so one more equi-join halves the remaining
       // chain length every round
       val parents = stepped.select(col("id").as("_pid"), col("component").as("_pcomp"))
-      val next = stepped
+      val next = s.materialize(stepped
         .join(parents, stepped("component") === col("_pid"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("_pcomp"), col("component"))).as("component"),
           (col("_changed") ||
-            (col("_pcomp").isNotNull && col("_pcomp") < col("component"))).as("_changed"))
-        .pipe(materialize) // truncate lineage: plans must not compound
+            (col("_pcomp").isNotNull && col("_pcomp") < col("component"))).as("_changed")))
 
-      changed = next.filter(col("_changed")).count()
-      // `next` is materialized (eager checkpoint + count): this round's
-      // intermediate is no longer needed. Old rounds' checkpoint blocks are
-      // reclaimed by the ContextCleaner once unreferenced.
-      stepped.unpersist()
-      labels = next.drop("_changed")
-      iter += 1
+      val changed = next.filter(col("_changed")).count()
+      ((next.drop("_changed"), changed), changed > 0)
     }
-    sym.unpersist()
     // exhausting the round budget while labels were still moving would mean
     // silently-wrong component ids for any component with diameter >
     // maxIterations — fail loudly instead (callers pick the budget; a
@@ -145,32 +113,34 @@ object ConnectedComponents {
     *
     * Returns the same FULL-assignment shape as [[run]] covering base ids ∪
     * delta endpoints. The remap join is on the contracted-component result
-    * (bounded by the delta size), broadcast by default — the world-sized
-    * base frame never shuffles; pass `broadcastRemap = false` for deltas
-    * too large for the driver and it degrades to a shuffle join on the
-    * label key. `materializeResult = false` returns the un-checkpointed
-    * frame (plan inspectable; the caller then owns unpersisting the
-    * internal assign/delta caches — test-only escape hatch).
+    * (bounded by the delta size) and broadcast — the world-sized base frame
+    * never shuffles. The result is materialized with the same durability
+    * as the CC rounds, and the internal assign/delta caches are released
+    * on return or throw ([[graft.tables.Checkpoints]]).
+    * `materializeResult = false` returns the un-materialized frame (plan
+    * inspectable; the caller then owns unpersisting the assign/delta
+    * caches — test-only escape hatch).
     */
   def runIncremental(spark: SparkSession, baseAssign: DataFrame,
                      deltaEdges: DataFrame, maxIterations: Int = 50,
                      checkpointDir: Option[String] = None,
-                     broadcastRemap: Boolean = true,
-                     materializeResult: Boolean = true): DataFrame = {
+                     materializeResult: Boolean = true): DataFrame =
+    Checkpoints.superstep(spark, checkpointDir) { s =>
+    // un-materialized result: the caller keeps (and releases) the caches
+    val hold: DataFrame => DataFrame =
+      if (materializeResult) s.hold else _.persist(StorageLevel.MEMORY_AND_DISK)
     val base = baseAssign.select(col("id"), col("component"))
     // delta edges are scanned three times below (endpoint union + both
-    // contraction joins) — persist so an expensive upstream (a crawl
-    // parse) runs once
-    val delta = deltaEdges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // contraction joins) — hold so an expensive upstream (a crawl parse)
+    // runs once
+    val delta = hold(deltaEdges.select(col("src"), col("dst")))
     // endpoints unseen by the base crawl are their own base component
     val deltaNodes = delta.select(col("src").as("id"))
       .unionByName(delta.select(col("dst").as("id")))
       .distinct()
     val newNodes = deltaNodes.join(base, Seq("id"), "left_anti")
       .withColumn("component", col("id"))
-    val assign = base.unionByName(newNodes)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val assign = hold(base.unionByName(newNodes))
 
     // contract delta edges to base labels; re-asserted edges become
     // self-loops and are dropped BEFORE the small CC run
@@ -188,17 +158,11 @@ object ConnectedComponents {
       .select(col("id").as("component"), col("component").as("_merged"))
 
     val out = assign
-      .join(if (broadcastRemap) broadcast(remap) else remap, Seq("component"), "left")
+      .join(broadcast(remap), Seq("component"), "left")
       .select(col("id"), coalesce(col("_merged"), col("component")).as("component"))
-    if (!materializeResult) return out // caller owns assign/delta lifecycle
-    // route the FINAL (world-sized) materialization through the same
-    // durability choice as the CC rounds: with a checkpointDir the result
-    // survives executor loss; localCheckpoint would strand its lineage in
-    // executor block managers right after the reliable rounds paid for
-    // fault tolerance
-    val materialized = graft.tables.Checkpoints.eager(out, checkpointDir)
-    assign.unpersist()
-    delta.unpersist()
-    materialized
-  }
+    // with a checkpointDir the world-sized result survives executor loss;
+    // localCheckpoint would strand its lineage in executor block managers
+    // right after the reliable rounds paid for fault tolerance
+    if (materializeResult) s.materialize(out) else out
+    }
 }

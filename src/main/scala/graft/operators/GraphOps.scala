@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,34 +67,32 @@ object GraphOps {
     * oracle unrolls the same ten iterations; float PageRank could never
     * hash-match across engines because shuffle order perturbs low bits).
     *
-    * Scale shape = the ConnectedComponents discipline: the edge+outdeg
-    * frame is persisted once and re-joined per round; the rank frame is
-    * eagerly checkpointed every `checkpointInterval` rounds so the logical
-    * plan stays bounded (a few join/agg levels between cuts — fewer job
-    * boundaries than per-round cuts, same total work) and per-round cost is
-    * one shuffle join + one groupBy on node ids. Pass `checkpointDir` for
-    * reliable (executor-loss-surviving) checkpoints on a real cluster —
-    * same save/restore-the-global-dir contract as
-    * [[graft.canon.ConnectedComponents.run]]. Dangling mass (no-out-edge
-    * nodes) is dropped, not redistributed — both engines state the same
-    * rule. Fixed `iters`, no convergence race. Returns (id, rank).
+    * Scale shape: the edge+outdeg frame is held once and re-joined per
+    * round; per-round cost is one shuffle join + one groupBy on node ids.
+    * The rank frame is materialized every 5 rounds and after the last, so
+    * a plan spans at most five join/agg levels (fewer job boundaries than
+    * per-round cuts, same total work). Each round probes the previous
+    * rank frame twice, so the plan between cuts holds 2^5 copies of the
+    * last cut — the interval is fixed because a larger one grows analysis
+    * cost exponentially. Lifecycle and `checkpointDir`:
+    * [[graft.tables.Checkpoints]]. Dangling mass (no-out-edge nodes) is
+    * dropped, not redistributed — both engines state the same rule. Fixed
+    * `iters`, no convergence race. Returns (id, rank).
     */
   def pageRankInt(edges0: DataFrame, iters: Int = 10,
                   scale: Long = 1000000000000L,
-                  checkpointInterval: Int = 5,
                   checkpointDir: Option[String] = None): DataFrame =
-    graft.tables.Checkpoints.withDir(edges0.sparkSession, checkpointDir) { materialize =>
-      import scala.util.chaining._
-      // persist the deduped edge set FIRST: outdeg, edgesOd and nodes all
+    Checkpoints.superstep(edges0.sparkSession, checkpointDir) { s =>
+      // hold the deduped edge set FIRST: outdeg, edgesOd and nodes all
       // derive from it — without this the caller's upstream pipeline
       // (mention detection at kg15) re-runs once per derivation (the
       // self-join recompute trap triangles documents)
-      val edges = edges0.select("src", "dst").distinct().persist()
+      val edges = s.hold(edges0.select("src", "dst").distinct())
       val outdeg = edges.groupBy("src").agg(count(lit(1)).as("od"))
-      val edgesOd = edges.join(outdeg, Seq("src")).persist()
-      val nodes = edges.select(col("src").as("id"))
+      val edgesOd = s.hold(edges.join(outdeg, Seq("src")))
+      val nodes = s.hold(edges.select(col("src").as("id"))
         .unionByName(edges.select(col("dst").as("id")))
-        .distinct().persist()
+        .distinct())
       val n = nodes.count()
       require(n > 0, "pageRankInt needs at least one edge")
       edgesOd.count() // materialize, then release the raw edge set
@@ -101,8 +100,7 @@ object GraphOps {
       val init = scale / n
       val base = (scale * 15L / 100L) / n
 
-      var ranks = nodes.withColumn("rank", lit(init)).pipe(materialize)
-      for (i <- 1 to iters) {
+      s.rounds(s.materialize(nodes.withColumn("rank", lit(init))), iters) { (ranks, i) =>
         val contribs = edgesOd
           .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
           .select(col("dst").as("id"), expr("rank div od").as("c"))
@@ -112,15 +110,12 @@ object GraphOps {
         // within a checkpoint block the previous round's join output is
         // already hash-partitioned by id — joining `nodes` instead paid one
         // extra Exchange of the node set per round (round-6 measurement)
-        ranks = ranks.select(col("id"))
+        val next = ranks.select(col("id"))
           .join(contribs, Seq("id"), "left")
           .select(col("id"),
             (lit(base) + expr("(coalesce(sc, 0L) * 85) div 100")).as("rank"))
-        if (i % checkpointInterval == 0 || i == iters)
-          ranks = materialize(ranks) // truncate lineage: plans must not compound
+        (if (i % 5 == 0 || i == iters) s.materialize(next) else next, true)
       }
-      edgesOd.unpersist(); nodes.unpersist()
-      ranks
     }
 
   /** Association (lift) scores for co-occurring entity pairs:
@@ -166,37 +161,25 @@ object GraphOps {
     * kg16 oracle unrolls the same hops as chained CTEs). Fixed `maxHops`,
     * stops early when a frontier empties (cannot change the result).
     * `seeds` = one `id` column; returns (seed, id, dist), dist 0..maxHops.
-    */
-  /** Pass `checkpointDir` for reliable (executor-loss-surviving) per-hop
-    * checkpoints on a real cluster — the same [[graft.tables.Checkpoints]]
-    * contract as [[pageRankInt]]; None keeps the cheap localCheckpoint of
-    * the single-JVM sandbox. Both modes are spec-pinned identical.
+    * Lifecycle and `checkpointDir`: [[graft.tables.Checkpoints]].
     */
   def bfsDistances(edges0: DataFrame, seeds: DataFrame, maxHops: Int,
                    checkpointDir: Option[String] = None): DataFrame =
-    graft.tables.Checkpoints.withDir(edges0.sparkSession, checkpointDir) { materialize =>
-      val edges = edges0.select("src", "dst").distinct().persist()
+    Checkpoints.superstep(edges0.sparkSession, checkpointDir) { s =>
+      val edges = s.hold(edges0.select("src", "dst").distinct())
       edges.count()
-      var known = materialize(seeds.select(col("id").as("seed"))
+      val start = s.materialize(seeds.select(col("id").as("seed"))
         .withColumn("id", col("seed")).withColumn("dist", lit(0)))
-      var frontier = known
-      var hop = 1
-      var live = true
-      while (live && hop <= maxHops) {
-        val next = materialize(frontier
+      s.rounds((start, start), maxHops) { case ((known, frontier), hop) =>
+        val next = s.materialize(frontier
           .join(edges, frontier("id") === edges("src"))
           .select(col("seed"), col("dst").as("id"), lit(hop).as("dist"))
           .distinct()
           .join(known, Seq("seed", "id"), "left_anti")) // truncate lineage per hop
-        live = !next.isEmpty
-        if (live) {
-          known = known.unionByName(next) // unions of checkpoints: no recompute
-          frontier = next
-        }
-        hop += 1
-      }
-      edges.unpersist()
-      known
+        // unions of checkpoints: no recompute
+        if (next.isEmpty) ((known, frontier), false)
+        else ((known.unionByName(next), next), true)
+      }._1
     }
 
   /** Bounded-round weighted shortest paths (Bellman-Ford relaxation over
@@ -211,30 +194,28 @@ object GraphOps {
     * Bounded rounds rather than run-to-fixpoint is the scale choice, same
     * as the kg16 BFS: on a small-world KG the interesting neighborhood is
     * a few hops, and each round is one shuffle join + one min-groupBy on
-    * (seed, id) scalars. The dist frame is materialized per round
-    * (checkpoint discipline of [[pageRankInt]]) so plans never compound;
-    * pass `checkpointDir` for reliable checkpoints on a real cluster.
+    * (seed, id) scalars. The dist frame is materialized per round so plans
+    * never compound. Lifecycle and `checkpointDir`:
+    * [[graft.tables.Checkpoints]].
     *
     * Input: directed (src, dst, cost) with cost ≥ 0; seeds (id). Output:
     * (seed, id, dist), one row per reached node per seed.
     */
   def ssspBounded(edges0: DataFrame, seeds: DataFrame, rounds: Int,
                   checkpointDir: Option[String] = None): DataFrame =
-    graft.tables.Checkpoints.withDir(edges0.sparkSession, checkpointDir) { materialize =>
-      val edges = edges0.select("src", "dst", "cost").distinct().persist()
+    Checkpoints.superstep(edges0.sparkSession, checkpointDir) { s =>
+      val edges = s.hold(edges0.select("src", "dst", "cost").distinct())
       edges.count()
-      var dist = materialize(seeds.select(col("id").as("seed"))
+      val start = s.materialize(seeds.select(col("id").as("seed"))
         .withColumn("id", col("seed")).withColumn("dist", lit(0L)))
-      for (_ <- 1 to rounds) {
+      s.rounds(start, rounds) { (dist, _) =>
         val relaxed = dist
           .join(edges, dist("id") === edges("src"))
           .select(col("seed"), col("dst").as("id"),
             (col("dist") + col("cost")).as("dist"))
-        dist = materialize(dist.unionByName(relaxed)
-          .groupBy("seed", "id").agg(min(col("dist")).as("dist")))
+        (s.materialize(dist.unionByName(relaxed)
+          .groupBy("seed", "id").agg(min(col("dist")).as("dist"))), true)
       }
-      edges.unpersist()
-      dist
     }
 
   /** Bounded-round k-core peeling (Matula & Beck 1983's algorithm with a
@@ -254,7 +235,8 @@ object GraphOps {
     * plus one partial-aggregated degree count — ids and one long cross the
     * shuffle, never adjacency lists. The survivor frame is materialized per
     * round so plans never compound. Stops early when a round peels nothing
-    * (cannot change the result).
+    * (cannot change the result). Lifecycle and `checkpointDir`:
+    * [[graft.tables.Checkpoints]].
     *
     * Input: symmetric edges (src, dst). Output: (id, deg) for surviving
     * nodes, deg = degree within the surviving core (0 if every neighbor
@@ -262,31 +244,24 @@ object GraphOps {
     */
   def kcoreBounded(edges0: DataFrame, k: Int, rounds: Int,
                    checkpointDir: Option[String] = None): DataFrame =
-    graft.tables.Checkpoints.withDir(edges0.sparkSession, checkpointDir) { materialize =>
+    Checkpoints.superstep(edges0.sparkSession, checkpointDir) { s =>
       require(k >= 1, s"k must be >= 1, got $k")
-      val edges = edges0.select("src", "dst").distinct().persist()
+      val edges = s.hold(edges0.select("src", "dst").distinct())
       edges.count()
       def survivorDegrees(nodes: DataFrame): DataFrame = edges
         .join(nodes.withColumnRenamed("id", "src"), Seq("src"), "leftsemi")
         .join(nodes.withColumnRenamed("id", "dst"), Seq("dst"), "leftsemi")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      var nodes = materialize(edges.select(col("src").as("id")).distinct())
-      var nNodes = nodes.count()
-      var live = true
-      var round = 1
-      while (live && round <= rounds) {
-        nodes = materialize(
-          survivorDegrees(nodes).filter(col("deg") >= k).select("id"))
-        val n2 = nodes.count()
-        live = n2 != nNodes
-        nNodes = n2
-        round += 1
+      val all = s.materialize(edges.select(col("src").as("id")).distinct())
+      val (nodes, _) = s.rounds((all, all.count()), rounds) { case ((cur, n), _) =>
+        val next = s.materialize(
+          survivorDegrees(cur).filter(col("deg") >= k).select("id"))
+        val n2 = next.count()
+        ((next, n2), n2 != n)
       }
-      val out = materialize(nodes
+      s.materialize(nodes
         .join(survivorDegrees(nodes), Seq("id"), "left")
         .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")))
-      edges.unpersist()
-      out
     }
 
   /** Synchronous weighted label propagation (Raghavan et al. 2007, made
@@ -299,24 +274,24 @@ object GraphOps {
     * famously run-order-dependent and could never sit under a hash gate).
     * Weights are exact integers, so the per-label vote sums are too.
     *
-    * Scale shape = [[pageRankInt]]'s: the (deduped, persisted) edge frame
-    * is re-joined per round, each round is one shuffle join + two
+    * Scale shape = [[pageRankInt]]'s: the (deduped, held) edge frame is
+    * re-joined per round, each round is one shuffle join + two
     * partial-aggregated groupBys on (id, label) scalars, and the label
     * frame is materialized per round so plans never compound. The argmax
     * is `min(struct(-votes, label))` — a bounded aggregate, never a
     * per-node window sort. Vote-less nodes (none in a symmetric graph)
     * keep their label, mirrored by the oracle's LEFT JOIN + coalesce.
+    * Lifecycle and `checkpointDir`: [[graft.tables.Checkpoints]].
     *
     * Input: symmetric weighted edges (src, dst, w). Output: (id, community).
     */
   def labelPropagation(edges0: DataFrame, rounds: Int,
                        checkpointDir: Option[String] = None): DataFrame =
-    graft.tables.Checkpoints.withDir(edges0.sparkSession, checkpointDir) { materialize =>
-      val edges = edges0.select("src", "dst", "w").distinct().persist()
+    Checkpoints.superstep(edges0.sparkSession, checkpointDir) { s =>
+      val edges = s.hold(edges0.select("src", "dst", "w").distinct())
       edges.count()
       val nodes = edges.select(col("src").as("id")).distinct()
-      var lab = materialize(nodes.withColumn("label", col("id")))
-      for (_ <- 1 to rounds) {
+      s.rounds(s.materialize(nodes.withColumn("label", col("id"))), rounds) { (lab, _) =>
         val votes = edges
           .join(lab.withColumnRenamed("id", "src"), Seq("src"))
           .groupBy(col("dst").as("id"), col("label"))
@@ -324,11 +299,9 @@ object GraphOps {
         val winners = votes.groupBy("id")
           .agg(min(struct((-col("sw")).as("nw"), col("label").as("l"))).as("b"))
           .select(col("id"), col("b").getField("l").as("win"))
-        lab = materialize(lab.join(winners, Seq("id"), "left")
-          .select(col("id"), coalesce(col("win"), col("label")).as("label")))
-      }
-      edges.unpersist()
-      lab.select(col("id"), col("label").as("community"))
+        (s.materialize(lab.join(winners, Seq("id"), "left")
+          .select(col("id"), coalesce(col("win"), col("label")).as("label"))), true)
+      }.select(col("id"), col("label").as("community"))
     }
 
   /** Triangle enumeration with degree-ordered orientation (compact-forward):
@@ -341,17 +314,18 @@ object GraphOps {
     * closed by the oriented edge between the other two.
     *
     * Input: (a, b, ...) undirected edges with a < b. Output: one row per
-    * triangle, corners sorted by id — (q1, q2, q3).
+    * triangle, corners sorted by id — (q1, q2, q3). Lifecycle and
+    * `checkpointDir`: [[graft.tables.Checkpoints]].
     */
   def triangles(edges0: DataFrame,
                 checkpointDir: Option[String] = None): DataFrame =
-    graft.tables.Checkpoints.withDir(edges0.sparkSession, checkpointDir) { materialize =>
+    Checkpoints.superstep(edges0.sparkSession, checkpointDir) { s =>
     // the edge frame feeds the degree count AND both orientation joins, and
     // the oriented frame feeds both wedge sides plus the closing semi-join:
-    // persist each for the duration of the call or the upstream subtree
+    // hold each for the duration of the call or the upstream subtree
     // re-derives once per reference (the self-join recompute trap), then
-    // materialize the (small) triangle rows and release
-    val edges = edges0.select("a", "b").persist()
+    // materialize the (small) triangle rows
+    val edges = s.hold(edges0.select("a", "b"))
     val deg = edges.select(col("a").as("id"))
       .unionByName(edges.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
@@ -361,11 +335,10 @@ object GraphOps {
     // orient u -> v with u the (degree, id)-lexicographic minimum; a < b
     // already, so the id tie-break is simply a
     val aFirst = col("da") < col("db") || (col("da") === col("db"))
-    val oriented = withDeg.select(
+    val oriented = s.hold(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .persist()
+      when(aFirst, col("db")).otherwise(col("da")).as("dv")))
 
     // wedges at u, enumerated in the SAME total order the orientation used,
     // so the closing edge is oriented x -> y by construction
@@ -373,14 +346,12 @@ object GraphOps {
     val e2 = oriented.select(col("u"), col("v").as("y"), col("dv").as("dy"))
     val wedges = e1.join(e2, Seq("u"))
       .filter(col("dx") < col("dy") || (col("dx") === col("dy") && col("x") < col("y")))
-    val out = materialize(wedges
+    s.materialize(wedges
       .join(oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"), "leftsemi")
       .select(array_sort(array(col("u"), col("x"), col("y"))).as("t"))
       .select(element_at(col("t"), 1).as("q1"),
         element_at(col("t"), 2).as("q2"),
         element_at(col("t"), 3).as("q3")))
-    edges.unpersist(); oriented.unpersist()
-    out
   }
 
   /** kg30: deterministic random walks over a (src, dst) edge frame — the
@@ -404,48 +375,42 @@ object GraphOps {
     * Σ deg(frontier) rows per step (a hub's FULL adjacency once per
     * visiting walk, every step) and sorted them in a per-walk window; this
     * hop moves one row per live walk and no window exists. Each frontier
-    * is eagerly materialized (the [[graft.tables.Checkpoints]] contract —
-    * pass `checkpointDir` for reliable checkpoints on a real cluster), so
-    * level i's plan no longer embeds levels 0..i−1 and DeepWalk-scale
-    * walkLen (40–80) keeps bounded lineage; the materialized levels also
-    * make the final union read each level once instead of recomputing the
-    * whole prefix per level.
+    * is eagerly materialized, so level i's plan no longer embeds levels
+    * 0..i−1 and DeepWalk-scale walkLen (40–80) keeps bounded lineage; the
+    * materialized levels also make the final union read each level once
+    * instead of recomputing the whole prefix per level. Lifecycle and
+    * `checkpointDir`: [[graft.tables.Checkpoints]].
     */
   def randomWalks(edges: DataFrame, walkLen: Int,
                   walksPerNode: Int = 1,
                   checkpointDir: Option[String] = None,
                   maxDegree: Int = 1000000): DataFrame =
-    graft.tables.Checkpoints.withDir(edges.sparkSession, checkpointDir) { materialize =>
+    Checkpoints.superstep(edges.sparkSession, checkpointDir) { s =>
       // one adjacency array per node, neighbors sorted ascending so the
       // kernel's first-minimum tie-break equals the window's (hash, dst)
       // order; degree-bounded loudly (the cooccurEdges guard discipline:
       // a 10⁶-neighbor hub row is ~20 MB — beyond maxDegree the caller
       // must pre-slice its hubs, not silently build gigarows)
-      val adj = edges
+      val adj = s.hold(edges
         .groupBy(col("src"))
         .agg(sort_array(collect_set(col("dst"))).as("_adj"))
         .select(col("src"),
           when(size(col("_adj")) <= maxDegree, col("_adj"))
             .otherwise(raise_error(concat(
               lit(s"randomWalks: node degree exceeds maxDegree=$maxDegree at '"),
-              col("src"), lit("'")))).as("adj"))
-        .persist()
+              col("src"), lit("'")))).as("adj")))
       val starts = adj.select(col("src"))
         .select(col("src"),
           explode(array((0 until walksPerNode).map(w => lit(w.toString)): _*)).as("w"))
         .select(concat_ws("#", col("src"), col("w")).as("walk_id"),
           col("src").as("node"))
-      var frontier = materialize(starts)
-      val levels = Seq.newBuilder[DataFrame]
-      levels += frontier.withColumn("step", lit(0))
-      for (i <- 1 to walkLen) {
-        frontier = materialize(walkHop(frontier, adj, i))
-        levels += frontier.withColumn("step", lit(i))
-      }
-      val out = levels.result().reduce(_ unionByName _)
+      // levels newest first: the frontier is the head
+      s.rounds(List(s.materialize(starts)), walkLen) { (levels, i) =>
+        (s.materialize(walkHop(levels.head, adj, i)) :: levels, true)
+      }.reverse.zipWithIndex
+        .map { case (level, i) => level.withColumn("step", lit(i)) }
+        .reduce(_ unionByName _)
         .select("walk_id", "step", "node")
-      adj.unpersist()
-      out
     }
 
   /** One walk step over the adjacency frame — the seam the plan pin
@@ -454,10 +419,6 @@ object GraphOps {
     * in-row [[graft.functions.MinHashPick]] argmin. No Window, no
     * row_number, no per-edge row expansion.
     */
-  /** [[walkHop]] for the round-6 plan-capture main (package-private seam). */
-  def walkHopForPlanDump(frontier: DataFrame, adj: DataFrame,
-                         step: Int): DataFrame = walkHop(frontier, adj, step)
-
   private[operators] def walkHop(frontier: DataFrame, adj: DataFrame,
                                  step: Int): DataFrame =
     frontier.join(adj, frontier("node") === adj("src"))

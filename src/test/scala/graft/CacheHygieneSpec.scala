@@ -1,5 +1,9 @@
 package graft
 
+import graft.canon.ConnectedComponents
+import graft.operators.GraphOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, raise_error}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator follows: persist for the duration of the call, eagerly
   * materialize the (small) result (`localCheckpoint(true)`), unpersist
   * before returning. This spec is the 20-line closure of the class: run
-  * every query, then assert the SQL cache registry is empty.
+  * every query, then assert the SQL cache registry is empty. The failure
+  * path gets the same check: each iterative graph operator, fed an input
+  * that throws mid-call, must still leave the registry empty.
   */
 class CacheHygieneSpec extends AnyFunSuite {
 
@@ -27,6 +33,44 @@ class CacheHygieneSpec extends AnyFunSuite {
         assert(Bridge.cacheIsEmpty(spark),
           s"$name left cached plans behind (persist without a paired unpersist)")
       }
+    }
+  }
+
+  private def failingCalls: Seq[(String, () => DataFrame)] = {
+    val spark2 = spark
+    import spark2.implicits._
+    // a raise_error edge column fails the first action inside the call
+    // (over a range, not a local Seq: the optimizer would evaluate a
+    // projection of local rows while planning, before anything is cached)
+    val boom = raise_error(lit("boom")).cast("string")
+    val bad = spark.range(2).select($"id".cast("string").as("src"), boom.as("dst"),
+      lit(1L).as("w"))
+    val seeds = Seq("a").toDF("id")
+    val hub = (0 until 50).map(i => ("hub", s"n$i")).toDF("src", "dst")
+    val chain = (0 until 8).map(i => (s"c$i", s"c${i + 1}")).toDF("src", "dst")
+    Seq(
+      "pageRankInt" -> (() => GraphOps.pageRankInt(bad)),
+      "bfsDistances" -> (() => GraphOps.bfsDistances(bad, seeds, maxHops = 2)),
+      "ssspBounded" -> (() =>
+        GraphOps.ssspBounded(bad.withColumnRenamed("w", "cost"), seeds, rounds = 2)),
+      "kcoreBounded" -> (() => GraphOps.kcoreBounded(bad, k = 1, rounds = 2)),
+      "labelPropagation" -> (() => GraphOps.labelPropagation(bad, rounds = 2)),
+      "randomWalks (maxDegree guard)" -> (() =>
+        GraphOps.randomWalks(hub, walkLen = 1, maxDegree = 10)),
+      "ConnectedComponents.run" -> (() => ConnectedComponents.run(spark, bad, seeds)),
+      "triangles" -> (() =>
+        GraphOps.triangles(bad.select($"src".as("a"), $"dst".as("b")))),
+      "ConnectedComponents.runIncremental (round budget)" -> (() =>
+        ConnectedComponents.runIncremental(spark,
+          ConnectedComponents.run(spark, chain.limit(0), chain.select($"src".as("id"))),
+          chain, maxIterations = 1)))
+  }
+
+  failingCalls.foreach { case (name, call) =>
+    test(s"$name releases its caches when it throws") {
+      spark.catalog.clearCache()
+      intercept[Exception](call())
+      assert(Bridge.cacheIsEmpty(spark), s"$name left cached plans behind on its failure path")
     }
   }
 }

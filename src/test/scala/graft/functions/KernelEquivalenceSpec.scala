@@ -93,10 +93,15 @@ class KernelEquivalenceSpec extends AnyFunSuite {
 
   test("RemoveCovered == filter(!array_contains) portable form") {
     // covered sets of varying density, incl. empty, full, out-of-range
-    val staged = corpus.select(col("doc_id"), wordsCol(col("text")).as("w"))
+    val dense = corpus.select(col("doc_id"), wordsCol(col("text")).as("w"))
       .withColumn("cov",
         filter(transform(sequence(lit(1L), lit(15L)),
           j => when(pmod(col("doc_id") + j, lit(3)) === 0, j)), x => x.isNotNull))
+    // plus null covered sets, and covered sets holding a null
+    val nulls = dense.filter(pmod(col("doc_id"), lit(10)) === 0)
+    val staged = dense
+      .unionByName(nulls.withColumn("cov", lit(null).cast("array<bigint>")))
+      .unionByName(nulls.withColumn("cov", array(lit(2L), lit(null).cast("bigint"))))
     assertSame(staged.select(
       TextKernels.removeCovered(col("w"), col("cov")).as("a"),
       filter(col("w"), (_, i) =>

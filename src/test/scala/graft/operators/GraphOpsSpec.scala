@@ -124,7 +124,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // checkpoint cadence and reliable-checkpoint mode change nothing
     val tmp = java.nio.file.Files.createTempDirectory("pr-ckpt").toString
     try {
-      val got3 = GraphOps.pageRankInt(df, iters = 4, checkpointInterval = 1,
+      val got3 = GraphOps.pageRankInt(df, iters = 4,
         checkpointDir = Some(tmp)).as[(String, Long)].collect().toMap
       assert(got3 == want)
     } finally {
