@@ -7,9 +7,11 @@ import org.apache.spark.sql.SparkSession
   * min over N interleaved rounds, cache cleared between runs) — for
   * before/after isolation while optimizing, without touching the frozen
   * driver harness. Also supports a `noop:` prefix per query name to time the
-  * full-materialization noop sink instead of count().
+  * full-materialization noop sink instead of count(), and an `explain:`
+  * prefix to print the query's formatted physical plan (pushdown,
+  * broadcast choice, codegen spans) instead of timing it.
   *
-  * Usage: `sbt "runMain graft.BenchExtra d18_dup_spans noop:d20_winnow_fingerprints"`
+  * Usage: `sbt "runMain graft.BenchExtra d18_dup_spans noop:d20_winnow_fingerprints explain:kg4_triples"`
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ROUNDS as Bench.
   */
 object BenchExtra {
@@ -26,8 +28,12 @@ object BenchExtra {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val wanted = if (args.nonEmpty) args.toSeq else Seq.empty
-    require(wanted.nonEmpty, "pass query names (optionally noop:<name>)")
+    require(args.nonEmpty, "pass query names (optionally noop:<name> or explain:<name>)")
+    val (explains, wanted) = args.toSeq.partition(_.startsWith("explain:"))
+    explains.map(_.stripPrefix("explain:")).foreach { q =>
+      println(s"\n========== $q ==========")
+      SparkEntry.queries(q)(spark, sfDir).explain("formatted")
+    }
 
     // optional per-stage profile (SPARK_GRAFT_BENCH_PROFILE=1): top stages
     // by wall duration with their job description — guide §1's "where does

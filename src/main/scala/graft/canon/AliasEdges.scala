@@ -1,6 +1,8 @@
 package graft.canon
 
-import org.apache.spark.sql.DataFrame
+import graft.model.WikidataJson
+import graft.pipeline.{PagePayload, PagesGen}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Alias-identity candidate edges for canonicalization (north-star:
@@ -25,6 +27,18 @@ import org.apache.spark.sql.functions._
   * combine) → chain explode. Nothing broadcasts; nothing is quadratic.
   */
 object AliasEdges {
+
+  /** sameAs identity edges (src, dst) of a payload set: every QID-valued
+    * sameAs claim — the dump-semantics canonicalization input that the
+    * alias edges below optionally extend.
+    */
+  def sameAsEdges(payloads: Dataset[PagePayload]): DataFrame = {
+    import payloads.sparkSession.implicits._
+    payloads
+      .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.toClaimRows(_, "en")))
+      .filter(r => r.pid == PagesGen.sameAsPid && r.isQidValue)
+      .map(r => (r.qid, r.valueScalar)).toDF("src", "dst")
+  }
 
   /** labels(id, lang, label, is_property, aliases) → edges(src, dst). */
   def edges(labels: DataFrame, lang: String = "en",

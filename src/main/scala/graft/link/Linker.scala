@@ -28,6 +28,16 @@ object Linker {
     */
   val DefaultBroadcastBudgetChars: Long = 64L * 1000 * 1000
 
+  /** (surface → candidate ids) for the mention trie, from the en rows of a
+    * label dimension (id, lang, label, is_property, aliases). Stays a
+    * DataFrame: [[mentionsSharded]] decides whether it fits one broadcast.
+    */
+  def mentionDict(labels: DataFrame): DataFrame =
+    labels.filter(!col("is_property") && col("lang") === "en")
+      .select(col("id"), explode(array_union(array(col("label")), col("aliases"))).as("surface"))
+      .filter(length(col("surface")) > 0)
+      .groupBy("surface").agg(collect_list("id").as("ids"))
+
   /** texts(url, id, lang, text) → mentions(url, surface, begin, end, qid)
     * — one row per mention × candidate. Self-mentions (candidate == the
     * page's own entity) are dropped.

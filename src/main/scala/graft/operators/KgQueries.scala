@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.canon.AliasEdges
 import graft.link.{Embedder, Linker}
 import graft.model.WikidataJson
 import graft.pipeline.{PagesGen, TextifyStage}
@@ -40,15 +41,6 @@ object KgQueries {
   def extractText(spark: SparkSession, dir: String): DataFrame =
     TextifyStage.render(spark, payloads(spark), labels(spark))
 
-  /** (surface → candidate ids) dictionary — stays a DataFrame; the sharded
-    * mention path decides whether it fits one broadcast trie.
-    */
-  private def dictOf(labelsDf: DataFrame): DataFrame =
-    labelsDf.filter(!col("is_property") && col("lang") === "en")
-      .select(col("id"), explode(array_union(array(col("label")), col("aliases"))).as("surface"))
-      .filter(length(col("surface")) > 0)
-      .groupBy("surface").agg(collect_list("id").as("ids"))
-
   /** Mention detection over already-extracted texts. Under graft.Verify the
     * resolved pre-explode mention frame (url, self_id, surface, span, qids,
     * context) is materialized: the trie match is the non-SQL kernel, and the
@@ -58,7 +50,7 @@ object KgQueries {
   private def mentionsOf(spark: SparkSession, texts: DataFrame, labelsDf: DataFrame): DataFrame =
     Linker.explodeCandidates(
       materializeForOracle(
-        Linker.resolvedMentions(spark, texts, dictOf(labelsDf)), "kg2_mentions_raw"))
+        Linker.resolvedMentions(spark, texts, Linker.mentionDict(labelsDf)), "kg2_mentions_raw"))
 
   /** Mention detection over the extracted text. */
   def mentions(spark: SparkSession, dir: String): DataFrame =
@@ -106,7 +98,7 @@ object KgQueries {
   def linksLsh(spark: SparkSession, dir: String): DataFrame = {
     val labelsDf = labels(spark)
     val texts = TextifyStage.render(spark, payloads(spark), labelsDf).persist()
-    val resolved = Linker.resolvedMentions(spark, texts, dictOf(labelsDf))
+    val resolved = Linker.resolvedMentions(spark, texts, Linker.mentionDict(labelsDf))
     // bits=10: this corpus' embeddings are CORRELATED (shared vocabulary),
     // so 6-bit buckets collided ~3x above the uniform estimate and the
     // candidate stream hit ~5M rows; 1024 buckets keep it ~100k. bits is
@@ -123,17 +115,23 @@ object KgQueries {
     out
   }
 
+  /** The corpus payloads parsed to en claim rows (the non-SQL kernel of
+    * kg4/kg13/kg18/kg29).
+    */
+  private def claimRows(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    payloads(spark).map(_.payload).flatMap { line =>
+      WikidataJson.parseLine(line).map(WikidataJson.toClaimRows(_, "en")).getOrElse(Seq.empty)
+    }.toDF()
+  }
+
   /** Triple extraction over the corpus payloads. Under graft.Verify the
     * parsed claim-rows and label frames are materialized so the DuckDB
     * oracle replays the join/render half (see [[OracleFrames]]).
     */
   def triples(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = payloads(spark).map(_.payload).flatMap { line =>
-      WikidataJson.parseLine(line).map(WikidataJson.toClaimRows(_, "en")).getOrElse(Seq.empty)
-    }.toDF()
     Triples.fromClaimRows(spark,
-      materializeForOracle(rows, "kg4_claim_rows"),
+      materializeForOracle(claimRows(spark), "kg4_claim_rows"),
       materializeForOracle(labelsEn(spark).select("id", "label"), "kg4_labels"))
   }
 
@@ -143,16 +141,8 @@ object KgQueries {
     * transitive closure + min-label) — a from-first-principles check of the
     * pointer-jumped iterative-join implementation, not a replay of it.
     */
-  /** sameAs identity edges extracted from a payload set (the canon input). */
-  private def sameAsEdgesOf(pp: org.apache.spark.sql.Dataset[graft.pipeline.PagePayload]): DataFrame = {
-    import pp.sparkSession.implicits._
-    pp.flatMap(p => WikidataJson.parseLine(p.payload).toSeq.flatMap(WikidataJson.toClaimRows(_, "en")))
-      .filter(r => r.pid == PagesGen.sameAsPid && r.isQidValue)
-      .map(r => (r.qid, r.valueScalar)).toDF("src", "dst")
-  }
-
   def canon(spark: SparkSession, dir: String): DataFrame = {
-    val sameAs = sameAsEdgesOf(payloads(spark))
+    val sameAs = AliasEdges.sameAsEdges(payloads(spark))
     val nodes = labelsEn(spark).select("id")
     graft.canon.ConnectedComponents.run(spark,
       materializeForOracle(sameAs, "kg5_edges"),
@@ -180,11 +170,7 @@ object KgQueries {
     * the same (qid, pid) key the triple table is bucketed by.
     */
   def conflicts(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = payloads(spark).map(_.payload).flatMap { line =>
-      WikidataJson.parseLine(line).map(WikidataJson.toClaimRows(_, "en")).getOrElse(Seq.empty)
-    }.toDF()
-    materializeForOracle(rows.select("qid", "pid", "valueScalar"), "kg13_claim_rows")
+    materializeForOracle(claimRows(spark).select("qid", "pid", "valueScalar"), "kg13_claim_rows")
       .groupBy("qid", "pid")
       .agg(countDistinct("valueScalar").as("n_values"),
         concat_ws("|", array_sort(collect_set(col("valueScalar")))).as("values"))
@@ -204,12 +190,8 @@ object KgQueries {
     * bucketed by.
     */
   def dangling(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = payloads(spark).map(_.payload).flatMap { line =>
-      WikidataJson.parseLine(line).map(WikidataJson.toClaimRows(_, "en")).getOrElse(Seq.empty)
-    }.toDF()
     val qidRefs = materializeForOracle(
-      rows.filter(col("isQidValue")).select("qid", "pid", "valueScalar"),
+      claimRows(spark).filter(col("isQidValue")).select("qid", "pid", "valueScalar"),
       "kg18_qid_refs")
     val known = materializeForOracle(
       labelsEn(spark).select(col("id")).distinct(), "kg18_known_ids")
@@ -236,7 +218,7 @@ object KgQueries {
     */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
     val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), dictOf(labelsDf))
+    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
     val urlQid = Linker.explodeCandidates(
       materializeForOracle(resolved, "kg14_mentions")).select("url", "qid")
     GraphOps.triangles(GraphOps.cooccurEdges(urlQid, minShared = 2))
@@ -251,7 +233,7 @@ object KgQueries {
     */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), dictOf(labelsDf))
+    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
     val urlQid = Linker.explodeCandidates(resolved).select("url", "qid")
     // checkpoint the undirected edges ONCE: both union branches (and every
     // frame pageRankInt derives) would otherwise re-run the mention
@@ -271,7 +253,7 @@ object KgQueries {
     */
   def lift(spark: SparkSession, dir: String): DataFrame = {
     val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), dictOf(labelsDf))
+    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
     val urlQid = Linker.explodeCandidates(resolved).select("url", "qid").distinct()
     GraphOps.liftScores(materializeForOracle(urlQid, "kg17_urlqid"), minShared = 2)
       .orderBy(col("lift").desc, col("a"), col("b")).limit(50)
@@ -318,7 +300,7 @@ object KgQueries {
   private def hubGraph(spark: SparkSession, dir: String, frameName: String,
                        cost: Option[Column]): (DataFrame, DataFrame) = {
     val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), dictOf(labelsDf))
+    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
     val urlQid = Linker.explodeCandidates(resolved).select("url", "qid")
     // checkpointed once: seeds AND the traversal both read the edge frame
     // (see pagerank above for why)
@@ -538,8 +520,8 @@ object KgQueries {
     * equals the full recompute.
     */
   def canonDelta(spark: SparkSession, dir: String): DataFrame = {
-    val baseEdges = sameAsEdgesOf(payloads(spark))
-    val deltaEdges = sameAsEdgesOf(
+    val baseEdges = AliasEdges.sameAsEdges(payloads(spark))
+    val deltaEdges = AliasEdges.sameAsEdges(
       TextifyStage.payloads(spark, PagesGen.pagesDelta(spark, nPages)))
     val nodes = materializeForOracle(labelsEn(spark).select("id"), "kg21_nodes")
     val baseAssign = graft.canon.ConnectedComponents.run(spark,
@@ -729,12 +711,8 @@ object KgQueries {
     * the DuckDB oracle replays exactly.
     */
   def propertyProfile(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rows = payloads(spark).map(_.payload).flatMap { line =>
-      WikidataJson.parseLine(line).map(WikidataJson.toClaimRows(_, "en")).getOrElse(Seq.empty)
-    }.toDF()
     propertyProfileStats(materializeForOracle(
-      rows.select("qid", "pid", "isQidValue"), "kg29_claim_kinds"))
+      claimRows(spark).select("qid", "pid", "isQidValue"), "kg29_claim_kinds"))
   }
 
   /** The aggregate half of kg29 over (qid, pid, isQidValue) claim rows —

@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import graft.canon.ConnectedComponents
+import graft.canon.{AliasEdges, ConnectedComponents}
 import graft.link.{Embedder, Linker}
 import graft.model.WikidataJson
-import graft.tables.{Lineage, MergeTable}
+import graft.tables.{Checkpoints, Lineage, MergeTable}
 import graft.triples.Triples
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG construction over the pages corpus (north_star / SURVEY.md
@@ -21,6 +21,11 @@ import org.apache.spark.sql.functions._
   *  - triples:  label joins (broadcast PID dim + shuffle subject/value)
   *  - canon:    iterative CC self-joins
   * Everything else is narrow and pipelines into the scan.
+  *
+  * Every stage commits through [[Lineage.commit]] (the commit protocol is
+  * stated there once); each chain's run-scoped payload caches live in one
+  * [[Checkpoints.superstep]] scope, released when the chain returns or
+  * throws.
   */
 /** @param retention when set, every successful `run`/`ingest` ends with
   *   [[expireHistory]]`(keepLast = retention.get)` — the storage-bound
@@ -28,7 +33,7 @@ import org.apache.spark.sql.functions._
   *   because expiry trades time travel into reclaimed snapshots away.
   */
 final class KgPipeline(spark: SparkSession, root: String,
-                       nPages: Long = 2000, linkK: Int = 5,
+                       nPages: Long = 2000,
                        failAfterStage: Option[String] = None,
                        mentionBudgetChars: Long = Linker.DefaultBroadcastBudgetChars,
                        aliasEdgeMaxIds: Option[Int] = None,
@@ -73,6 +78,9 @@ final class KgPipeline(spark: SparkSession, root: String,
   val edgesTbl = new MergeTable(spark, s"$root/edges", Seq("src", "dst", "kind"))
   val lineage = new Lineage(spark, root)
 
+  /** Candidates kept per mention by the link stage. */
+  private val LinkK = 5
+
   private def checkFail(stage: String): Unit =
     if (failAfterStage.contains(stage))
       throw new RuntimeException(s"injected failure after stage $stage")
@@ -80,15 +88,7 @@ final class KgPipeline(spark: SparkSession, root: String,
   /** Run (or resume) the pipeline; returns the triples snapshot id. */
   def run(): Long = {
     // stage: ingest — the corpus lands as a MERGE table (idempotent by url)
-    val pagesSnap = lineage.runStage("ingest", 0L) {
-      val t0 = System.nanoTime()
-      val df = PagesGen.pages(spark, nPages)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = pagesTbl.merge(df)
-      lineage.capture("ingest", 0L, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    val pagesSnap = lineage.commit("ingest", 0L)(PagesGen.pages(spark, nPages))(pagesTbl.merge)
     checkFail("ingest")
     val out = runFrom(pagesSnap)
     retention.foreach(expireHistory(_))
@@ -113,7 +113,7 @@ final class KgPipeline(spark: SparkSession, root: String,
     * frozen before stage 3), and links cached against an entity whose text
     * this batch changed refresh only when their page is next touched.
     */
-  def ingest(newPages: org.apache.spark.sql.DataFrame, delta: Boolean = false): Long = {
+  def ingest(newPages: DataFrame, delta: Boolean = false): Long = {
     val pagesSnap = pagesTbl.merge(newPages)
     val out = if (delta) runDelta(newPages, pagesSnap) else runFrom(pagesSnap)
     retention.foreach(expireHistory(_))
@@ -139,214 +139,161 @@ final class KgPipeline(spark: SparkSession, root: String,
     (results.map(_._1.size).sum, results.map(_._2.size).sum)
   }
 
-  private def runFrom(pagesSnap: Long): Long = {
-
-    // Option-backed memo instead of lazy vals: the finally block below must
-    // unpersist ONLY what a stage actually forced (unpersisting a lazy would
-    // first materialize it), and it must run on the failure path too — a
-    // killed/failed ingest in a long-lived driver must not leak the cached
-    // corpus frames (failAfterStage exercises exactly this path).
-    var payloadsRef: Option[org.apache.spark.sql.Dataset[PagePayload]] = None
-    def payloads = payloadsRef.getOrElse {
-      val p = TextifyStage.payloads(spark, pagesTbl.read()).persist()
-      payloadsRef = Some(p); p
-    }
-    var resolvedRef: Option[org.apache.spark.sql.Dataset[(PagePayload, Map[String, String])]] = None
-    try {
+  private def runFrom(pagesSnap: Long): Long = Checkpoints.superstep(spark, None) { s =>
+    val payloads = s.hold(TextifyStage.payloads(spark, pagesTbl.read()))
+    def pages = pagesTbl.read()
 
     // stage: harvest — per-language label dimension (id, lang, label,
     // is_property, aliases) from the corpus itself: the reference normalizes
     // the whole DB once per LANGUAGE (src/wikidataDB.py:126-148)
-    val labelsSnap = lineage.runStage("harvest", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.harvestLabels(spark, payloads)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = labelsTbl.merge(df)
-      lineage.capture("harvest", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    val labelsSnap = lineage.commit("harvest", pagesSnap)(
+      TextifyStage.harvestLabels(spark, payloads))(labelsTbl.merge)
     checkFail("harvest")
 
     // stage: harvest_ids — P1 explode + S7 OR-merge aggregation
-    lineage.runStage("harvest_ids", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = payloads
-        .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.extractEntityIds(_, "en")))
-        .toDF("id", "in_wikipedia", "is_property")
-        .groupBy("id")
-        .agg(max("in_wikipedia").as("in_wikipedia"), max("is_property").as("is_property"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = idFlagsTbl.merge(df)
-      lineage.capture("harvest_ids", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    lineage.commit("harvest_ids", pagesSnap)(orMerge(entityFlags(payloads)))(idFlagsTbl.merge)
     checkFail("harvest_ids")
 
     // one gather-join feeds BOTH textify and docs (the two renderers resolve
-    // the same (url → label map) frame); persisting it halves the pipeline's
+    // the same (url → label map) frame); holding it halves the pipeline's
     // biggest shuffle (refs explode + label join + per-url regroup)
-    def resolved = resolvedRef.getOrElse {
-      val r = TextifyStage.withLabelMaps(
-        spark, gatePayloads(payloads), labelsTbl.read()).persist()
-      resolvedRef = Some(r); r
-    }
+    val resolved = s.hold(TextifyStage.withLabelMaps(spark, gatePayloads(payloads), labelsTbl.read()))
 
     // stage: textify — byte-identical extracted text per url (gated)
-    val textsSnap = lineage.runStage("textify", labelsSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.renderResolved(spark, resolved)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = textsTbl.mergeScoped(df, urlScope(pagesTbl.read()))
-      lineage.capture("textify", labelsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    val textsSnap = lineage.commit("textify", labelsSnap)(
+      TextifyStage.renderResolved(spark, resolved))(textsTbl.mergeScoped(_, urlScope(pages)))
     checkFail("textify")
 
-    // stage: mentions — Aho-Corasick over the label+alias trie, built via the
-    // size-guarded sharded path (single broadcast while the dictionary fits,
-    // hash-sharded multi-pass beyond the budget — never an unguarded
-    // full-dimension collect)
-    val mentionsSnap = lineage.runStage("mentions", textsSnap) {
-      val t0 = System.nanoTime()
-      val df = Linker.mentionsSharded(spark, textsTbl.read(), mentionDict(),
-        broadcastBudgetChars = mentionBudgetChars)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = mentionsTbl.mergeScoped(df, urlScope(pagesTbl.read()))
-      lineage.capture("mentions", textsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    // stage: mentions — Aho-Corasick over the label+alias trie
+    val mentionsSnap = lineage.commit("mentions", textsSnap)(
+      mentionsOf(textsTbl.read()))(mentionsTbl.mergeScoped(_, urlScope(pages)))
     checkFail("mentions")
 
-    // stage: link — batched stand-in embeddings + cosine top-K per mention.
-    // Entity vectors persist in their own MERGE table so incremental (delta)
-    // ingests embed only touched pages, never the whole corpus.
-    val linksSnap = lineage.runStage("link", mentionsSnap) {
-      val t0 = System.nanoTime()
-      val texts = textsTbl.read()
-      vecsTbl.mergeScoped(Embedder.embedDataset(
-        texts.select("id", "text").as[(String, String)]).toDF("id", "vec"),
-        idScope(pagesTbl.read(), "id"))
-      val df = Linker.link(spark, mentionsTbl.read(), vecsTbl.read(), linkK)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = linksTbl.mergeScoped(df, urlScope(pagesTbl.read()))
-      lineage.capture("link", mentionsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    // stage: link — embeddings + cosine top-K per mention
+    val linksSnap = lineage.commit("link", mentionsSnap)(
+      linksOf(textsTbl.read(), mentionsTbl.read(), pages))(linksTbl.mergeScoped(_, urlScope(pages)))
     checkFail("link")
 
-    // stage: docs — token-budget chunking + batched embedding into the
-    // vector-document table, deterministic _id = qid_lang_chunkIdx (the
-    // reference's stage 3: docker/3_Add_Wikidata_to_AstraDB/run.py:65-93,
-    // chunk T6, sink S8 — upsert by _id replaces the infinite-retry push).
-    // Label resolution is the gather-join (renderChunks), not a driver
-    // collect of the label dimension.
-    lineage.runStage("docs", textsSnap) {
-      val t0 = System.nanoTime()
-      val chunks = TextifyStage.renderChunksResolved(spark, resolved, maxTokens = 120)
-      val df = Embedder.embedDataset(
-        chunks.select("doc_id", "text").as[(String, String)]).toDF("doc_id", "vec")
-        .join(chunks, Seq("doc_id"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = docsTbl.mergeScoped(df, idScope(pagesTbl.read(), "qid"))
-      lineage.capture("docs", textsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    // stage: docs — token-budget chunks + embeddings into the vector-document table
+    lineage.commit("docs", textsSnap)(docsOf(resolved))(docsTbl.mergeScoped(_, idScope(pages, "qid")))
     checkFail("docs")
 
     // stage: triples — statement extraction with label-resolution joins
-    val triplesSnap = lineage.runStage("triples", labelsSnap) {
-      val t0 = System.nanoTime()
-      val df = Triples.fromLines(spark, payloads.map(_.payload),
-        labelsTbl.read().filter(col("lang") === "en").select("id", "label"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = triplesTbl.mergeScoped(df, idScope(pagesTbl.read(), "qid"))
-      lineage.capture("triples", labelsSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    val triplesSnap = lineage.commit("triples", labelsSnap)(
+      triplesOf(payloads))(triplesTbl.mergeScoped(_, idScope(pages, "qid")))
     checkFail("triples")
 
-    // stage: canon — CC over sameAs edges, canonical = min id per component.
-    // Edges land in their own MERGE table first, so delta ingests can extend
-    // the edge set without re-parsing the corpus.
-    val canonSnap = lineage.runStage("canon", triplesSnap) {
-      val t0 = System.nanoTime()
-      sameAsTbl.mergeScoped(sameAsEdges(payloads), idScope(pagesTbl.read(), "src"))
-      val nodes = labelsTbl.read().filter(col("lang") === "en").select("id")
-      // optional alias-identity candidate edges (north-star "alias/sameAs
-      // edges"): gated + chained, see AliasEdges; off by default because
-      // shared-surface identity is a policy choice, not dump semantics
-      val edges = aliasEdgeMaxIds.fold(sameAsTbl.read()) { maxIds =>
-        sameAsTbl.read().unionByName(
-          graft.canon.AliasEdges.edges(labelsTbl.read(), maxIds = maxIds))
-      }
-      val df = ConnectedComponents.run(spark, edges, nodes)
-        .withColumnRenamed("component", "canonical")
-      val snap = canonTbl.replace(df)
-      lineage.capture("canon", triplesSnap, df, (System.nanoTime() - t0) / 1000000)
-      snap
-    }
+    // stage: canon — CC over sameAs edges, canonical = min id per component
+    val canonSnap = lineage.commit("canon", triplesSnap)(canonOf(payloads, pages))(canonTbl.replace)
     checkFail("canon")
 
     // stage: materialize — nodes + edges with canonical ids rewritten
-    lineage.runStage("materialize", canonSnap)(materializeStage(canonSnap))
+    materialize("materialize", canonSnap)
     checkFail("materialize")
 
     triplesSnap
-    } finally {
-      // drop the run-scoped caches on success AND failure — a long-lived
-      // driver running (or retrying) repeated ingests must not accumulate
-      // cached corpus copies
-      resolvedRef.foreach(_.unpersist())
-      payloadsRef.foreach(_.unpersist())
+  }
+
+  /** Per-entity (id, in_wikipedia, is_property) flags of a payload set. */
+  private def entityFlags(payloads: Dataset[PagePayload]): DataFrame =
+    payloads
+      .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.extractEntityIds(_, "en")))
+      .toDF("id", "in_wikipedia", "is_property")
+
+  /** S7 OR-merge: one row per id, a flag true if any row has it true. */
+  private def orMerge(flags: DataFrame): DataFrame =
+    flags.groupBy("id")
+      .agg(max("in_wikipedia").as("in_wikipedia"), max("is_property").as("is_property"))
+
+  /** Mentions over `texts`, with the trie built via the size-guarded sharded
+    * path (single broadcast while the dictionary fits, hash-sharded
+    * multi-pass beyond the budget — never an unguarded full-dimension
+    * collect).
+    */
+  private def mentionsOf(texts: DataFrame): DataFrame =
+    Linker.mentionsSharded(spark, texts, Linker.mentionDict(labelsTbl.read()),
+      broadcastBudgetChars = mentionBudgetChars)
+
+  /** Top-K links of `mentions`. Entity vectors of `texts` first land in
+    * their own MERGE table (scoped to `pages`), so delta ingests embed only
+    * touched pages, never the whole corpus.
+    */
+  private def linksOf(texts: DataFrame, mentions: DataFrame, pages: DataFrame): DataFrame = {
+    vecsTbl.mergeScoped(Embedder.embedDataset(
+      texts.select("id", "text").as[(String, String)]).toDF("id", "vec"),
+      idScope(pages, "id"))
+    Linker.link(spark, mentions, vecsTbl.read(), LinkK)
+  }
+
+  /** Token-budget chunking + batched embedding, deterministic
+    * _id = qid_lang_chunkIdx (the reference's stage 3:
+    * docker/3_Add_Wikidata_to_AstraDB/run.py:65-93, chunk T6, sink S8 —
+    * upsert by _id replaces the infinite-retry push). Label resolution is
+    * the gather-join (`resolved`), not a driver collect of the label
+    * dimension.
+    */
+  private def docsOf(resolved: Dataset[(PagePayload, Map[String, String])]): DataFrame = {
+    val chunks = TextifyStage.renderChunksResolved(spark, resolved, maxTokens = 120)
+    Embedder.embedDataset(
+      chunks.select("doc_id", "text").as[(String, String)]).toDF("doc_id", "vec")
+      .join(chunks, Seq("doc_id"))
+  }
+
+  private def triplesOf(payloads: Dataset[PagePayload]): DataFrame =
+    Triples.fromLines(spark, payloads.map(_.payload),
+      labelsTbl.read().filter(col("lang") === "en").select("id", "label"))
+
+  /** The canon stage body, shared by both chains: the payloads' sameAs edges
+    * land in their own MERGE table first (scoped to `pages`), so delta
+    * ingests extend the edge set without re-parsing the corpus; then CC over
+    * the whole (edge-set-sized) table — O(graph), not O(corpus).
+    */
+  private def canonOf(payloads: Dataset[PagePayload], pages: DataFrame): DataFrame = {
+    sameAsTbl.mergeScoped(AliasEdges.sameAsEdges(payloads), idScope(pages, "src"))
+    val nodes = labelsTbl.read().filter(col("lang") === "en").select("id")
+    // optional alias-identity candidate edges (north-star "alias/sameAs
+    // edges"): gated + chained, see AliasEdges; off by default because
+    // shared-surface identity is a policy choice, not dump semantics
+    val edges = aliasEdgeMaxIds.fold(sameAsTbl.read()) { maxIds =>
+      sameAsTbl.read().unionByName(AliasEdges.edges(labelsTbl.read(), maxIds = maxIds))
     }
+    ConnectedComponents.run(spark, edges, nodes).withColumnRenamed("component", "canonical")
   }
 
   /** Nodes + edges from the materialized tables (fully table-driven — shared
-    * by the full and delta paths).
+    * by the full and delta paths); the nodes write rides inside the stage.
     */
-  private def materializeStage(canonSnap: Long): Long = {
-    val t0 = System.nanoTime()
-    val canon = canonTbl.read()
-    val nodes = labelsTbl.read().filter(col("lang") === "en")
-      .join(canon, Seq("id"), "left")
-      .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"),
-        col("label"), col("is_property"))
-    nodesTbl.replace(nodes)
+  private def materialize(stage: String, inputSnapshot: Long): Long =
+    lineage.commit(stage, inputSnapshot) {
+      val canon = canonTbl.read()
+      nodesTbl.replace(labelsTbl.read().filter(col("lang") === "en")
+        .join(canon, Seq("id"), "left")
+        .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"),
+          col("label"), col("is_property")))
 
-    val linkEdges = linksTbl.read().filter(col("rank") === 1)
-      .join(textsTbl.read().select(col("url"), col("id").as("src")), Seq("url"))
-      .select(col("src"), col("qid").as("dst"), lit("mentions").as("kind"))
-    val sameAs = sameAsTbl.read().withColumn("kind", lit("sameAs"))
-    val canonSrc = canon.select(col("id").as("src"), col("canonical").as("src_canon"))
-    val canonDst = canon.select(col("id").as("dst"), col("canonical").as("dst_canon"))
-    val edges = linkEdges.unionByName(sameAs)
-      .join(canonSrc, Seq("src"), "left")
-      .join(canonDst, Seq("dst"), "left")
-      .select(
-        coalesce(col("src_canon"), col("src")).as("src"),
-        coalesce(col("dst_canon"), col("dst")).as("dst"),
-        col("kind"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val snap = edgesTbl.replace(edges)
-    lineage.capture("materialize", canonSnap, edges, (System.nanoTime() - t0) / 1000000)
-    snap
-  }
+      val linkEdges = linksTbl.read().filter(col("rank") === 1)
+        .join(textsTbl.read().select(col("url"), col("id").as("src")), Seq("url"))
+        .select(col("src"), col("qid").as("dst"), lit("mentions").as("kind"))
+      val sameAs = sameAsTbl.read().withColumn("kind", lit("sameAs"))
+      val canonSrc = canon.select(col("id").as("src"), col("canonical").as("src_canon"))
+      val canonDst = canon.select(col("id").as("dst"), col("canonical").as("dst_canon"))
+      linkEdges.unionByName(sameAs)
+        .join(canonSrc, Seq("src"), "left")
+        .join(canonDst, Seq("dst"), "left")
+        .select(
+          coalesce(col("src_canon"), col("src")).as("src"),
+          coalesce(col("dst_canon"), col("dst")).as("dst"),
+          col("kind"))
+        .filter(col("src") =!= col("dst"))
+        .distinct()
+    }(edgesTbl.replace)
 
   /** The J4 driving gate: only in_wikipedia entities are textified/chunked,
     * exactly the reference's stage-3 driving scan
     * (docker/3_Add_Wikidata_to_AstraDB/run.py:61). url=…/wiki/{id} is the
     * pages contract, so the gate is an equi-semi-join on the trailing id.
     */
-  private def gatePayloads(payloads: org.apache.spark.sql.Dataset[PagePayload])
-      : org.apache.spark.sql.Dataset[PagePayload] = {
+  private def gatePayloads(payloads: Dataset[PagePayload]): Dataset[PagePayload] = {
     val inWiki = idFlagsTbl.read().filter(col("in_wikipedia")).select(col("id").as("_gid"))
     payloads
       .joinWith(inWiki, substring_index(payloads("url"), "/", -1) === col("_gid"), "inner")
@@ -362,157 +309,50 @@ final class KgPipeline(spark: SparkSession, root: String,
   private def idScope(pages: DataFrame, as: String): DataFrame =
     pages.select(substring_index(col("url"), "/", -1).as(as))
 
-  /** (surface → candidate ids) for the mention trie, from the en label dim. */
-  private def mentionDict(): DataFrame =
-    labelsTbl.read().filter(!col("is_property") && col("lang") === "en")
-      .select(col("id"), explode(array_union(array(col("label")), col("aliases"))).as("surface"))
-      .filter(length(col("surface")) > 0)
-      .groupBy("surface").agg(collect_list("id").as("ids"))
-
-  private def sameAsEdges(payloads: org.apache.spark.sql.Dataset[PagePayload]): DataFrame = {
-    payloads
-      .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.toClaimRows(_, "en")))
-      .filter(r => r.pid == PagesGen.sameAsPid && r.isQidValue)
-      .map(r => (r.qid, r.valueScalar)).toDF("src", "dst")
-  }
-
   /** Delta-only ingest chain: per-page stages run over THIS BATCH's pages
     * only; global artifacts (id flags, canon, nodes/edges) update from the
     * materialized tables. No stage re-reads or re-parses the full corpus —
     * at 10^12 docs an increment costs O(batch) work plus the (edge-set-sized)
     * canonicalization, never O(corpus).
     */
-  private def runDelta(newPages: DataFrame, pagesSnap: Long): Long = {
-    val payloads = TextifyStage.payloads(spark, newPages).persist()
+  private def runDelta(newPages: DataFrame, pagesSnap: Long): Long = Checkpoints.superstep(spark, None) { s =>
+    val payloads = s.hold(TextifyStage.payloads(spark, newPages))
     val batchUrls = newPages.select("url")
+    def batchOf(t: MergeTable) = t.read().join(batchUrls, Seq("url"), "left_semi")
 
-    // mirror runFrom: unpersist on failure too (memo because a resumed run
-    // whose per-page stages are all marked done never forces `resolved`)
-    var resolvedRef: Option[org.apache.spark.sql.Dataset[(PagePayload, Map[String, String])]] = None
-    try {
+    lineage.commit("delta_harvest", pagesSnap)(
+      TextifyStage.harvestLabels(spark, payloads))(labelsTbl.merge)
 
-    lineage.runStage("delta_harvest", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.harvestLabels(spark, payloads)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = labelsTbl.merge(df)
-      lineage.capture("delta_harvest", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    lineage.runStage("delta_harvest_ids", pagesSnap) {
-      val t0 = System.nanoTime()
-      val batchFlags = payloads
-        .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.extractEntityIds(_, "en")))
-        .toDF("id", "in_wikipedia", "is_property")
+    lineage.commit("delta_harvest_ids", pagesSnap) {
+      val batchFlags = entityFlags(payloads)
       // S7 OR-merge across batches: fold in the existing flags of just the
       // touched ids (semi-join), so a true flag never regresses to false
       // (readOrEmpty: a delta ingest may be the root's first-ever operation)
       val existing = idFlagsTbl.readOrEmpty(batchFlags)
         .join(batchFlags.select("id").distinct(), Seq("id"), "left_semi")
-      val df = batchFlags.unionByName(existing)
-        .groupBy("id")
-        .agg(max("in_wikipedia").as("in_wikipedia"), max("is_property").as("is_property"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = idFlagsTbl.merge(df)
-      lineage.capture("delta_harvest_ids", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+      orMerge(batchFlags.unionByName(existing))
+    }(idFlagsTbl.merge)
 
-    def resolved = resolvedRef.getOrElse {
-      val r = TextifyStage.withLabelMaps(
-        spark, gatePayloads(payloads), labelsTbl.read()).persist()
-      resolvedRef = Some(r); r
-    }
+    val resolved = s.hold(TextifyStage.withLabelMaps(spark, gatePayloads(payloads), labelsTbl.read()))
 
-    lineage.runStage("delta_textify", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = TextifyStage.renderResolved(spark, resolved)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = textsTbl.mergeScoped(df, urlScope(newPages))
-      lineage.capture("delta_textify", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    lineage.commit("delta_textify", pagesSnap)(
+      TextifyStage.renderResolved(spark, resolved))(textsTbl.mergeScoped(_, urlScope(newPages)))
 
-    def batchTexts = textsTbl.read().join(batchUrls, Seq("url"), "left_semi")
+    lineage.commit("delta_mentions", pagesSnap)(
+      mentionsOf(batchOf(textsTbl)))(mentionsTbl.mergeScoped(_, urlScope(newPages)))
 
-    lineage.runStage("delta_mentions", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = Linker.mentionsSharded(spark, batchTexts, mentionDict(),
-        broadcastBudgetChars = mentionBudgetChars)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = mentionsTbl.mergeScoped(df, urlScope(newPages))
-      lineage.capture("delta_mentions", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    lineage.commit("delta_link", pagesSnap)(
+      linksOf(batchOf(textsTbl), batchOf(mentionsTbl), newPages))(linksTbl.mergeScoped(_, urlScope(newPages)))
 
-    lineage.runStage("delta_link", pagesSnap) {
-      val t0 = System.nanoTime()
-      vecsTbl.mergeScoped(Embedder.embedDataset(
-        batchTexts.select("id", "text").as[(String, String)]).toDF("id", "vec"),
-        idScope(newPages, "id"))
-      val batchMentions = mentionsTbl.read().join(batchUrls, Seq("url"), "left_semi")
-      val df = Linker.link(spark, batchMentions, vecsTbl.read(), linkK)
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = linksTbl.mergeScoped(df, urlScope(newPages))
-      lineage.capture("delta_link", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    lineage.commit("delta_docs", pagesSnap)(docsOf(resolved))(docsTbl.mergeScoped(_, idScope(newPages, "qid")))
 
-    lineage.runStage("delta_docs", pagesSnap) {
-      val t0 = System.nanoTime()
-      val chunks = TextifyStage.renderChunksResolved(spark, resolved, maxTokens = 120)
-      val df = Embedder.embedDataset(
-        chunks.select("doc_id", "text").as[(String, String)]).toDF("doc_id", "vec")
-        .join(chunks, Seq("doc_id"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = docsTbl.mergeScoped(df, idScope(newPages, "qid"))
-      lineage.capture("delta_docs", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
-
-    val triplesSnap = lineage.runStage("delta_triples", pagesSnap) {
-      val t0 = System.nanoTime()
-      val df = Triples.fromLines(spark, payloads.map(_.payload),
-        labelsTbl.read().filter(col("lang") === "en").select("id", "label"))
-      df.persist() // one materialization feeds the merge's scope collect, the write, and the lineage count
-      val snap = triplesTbl.mergeScoped(df, idScope(newPages, "qid"))
-      lineage.capture("delta_triples", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      df.unpersist()
-      snap
-    }
+    val triplesSnap = lineage.commit("delta_triples", pagesSnap)(
+      triplesOf(payloads))(triplesTbl.mergeScoped(_, idScope(newPages, "qid")))
 
     // global graph artifacts: extend the edge set with the batch's sameAs
-    // rows, then recompute CC over the (small) edge+node tables — O(graph),
-    // not O(corpus)
-    val canonSnap = lineage.runStage("delta_canon", pagesSnap) {
-      val t0 = System.nanoTime()
-      sameAsTbl.mergeScoped(sameAsEdges(payloads), idScope(newPages, "src"))
-      val nodes = labelsTbl.read().filter(col("lang") === "en").select("id")
-      // mirror runFrom: optional alias-identity edges over the (updated)
-      // labels table, so delta and full recompute converge on the same graph
-      val edges = aliasEdgeMaxIds.fold(sameAsTbl.read()) { maxIds =>
-        sameAsTbl.read().unionByName(
-          graft.canon.AliasEdges.edges(labelsTbl.read(), maxIds = maxIds))
-      }
-      val df = ConnectedComponents.run(spark, edges, nodes)
-        .withColumnRenamed("component", "canonical")
-      val snap = canonTbl.replace(df)
-      lineage.capture("delta_canon", pagesSnap, df, (System.nanoTime() - t0) / 1000000)
-      snap
-    }
-
-    lineage.runStage("delta_materialize", pagesSnap)(materializeStage(canonSnap))
+    // rows, then recompute CC and nodes/edges from the tables
+    lineage.commit("delta_canon", pagesSnap)(canonOf(payloads, newPages))(canonTbl.replace)
+    materialize("delta_materialize", pagesSnap)
     triplesSnap
-    } finally {
-      resolvedRef.foreach(_.unpersist())
-      payloads.unpersist()
-    }
   }
 }

@@ -1,13 +1,15 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Eager materialization with a choice of durability, and the one owner of
   * the "compute once, release the inputs" lifecycle in this library: the
   * Linker mention/link stages and EmbeddingCache call [[eager]]; the
   * iterative graph operators ([[graft.operators.GraphOps]],
-  * [[graft.canon.ConnectedComponents]]) run inside one [[superstep]] scope.
+  * [[graft.canon.ConnectedComponents]]) run inside one [[superstep]] scope,
+  * and so does each [[graft.pipeline.KgPipeline]] chain, which holds its
+  * run-scoped payload caches there.
   *
   * The lifecycle contract of a [[superstep]] call:
   *  - held frames ([[Superstep.hold]]) are persisted once and released
@@ -84,13 +86,13 @@ object Checkpoints {
 
   /** The scope of one [[superstep]] call. */
   final class Superstep private[Checkpoints] (val materialize: DataFrame => DataFrame) {
-    private var held = List.empty[DataFrame]
+    private var held = List.empty[Dataset[_]]
     private var roundHeld = List.empty[DataFrame]
 
-    /** Persist `df` until the call ends; the caller's first action on it
+    /** Persist `ds` until the call ends; the caller's first action on it
       * (the up-front count, where the operator has one) materializes it.
       */
-    def hold(df: DataFrame): DataFrame = { held ::= persist(df); df }
+    def hold[T](ds: Dataset[T]): Dataset[T] = { held ::= persist(ds); ds }
 
     /** Persist `df` until the current round ends. */
     def holdRound(df: DataFrame): DataFrame = { roundHeld ::= persist(df); df }
@@ -109,7 +111,7 @@ object Checkpoints {
       go(init, 1)
     }
 
-    private def persist(df: DataFrame) = df.persist(StorageLevel.MEMORY_AND_DISK)
+    private def persist[T](ds: Dataset[T]) = ds.persist(StorageLevel.MEMORY_AND_DISK)
 
     private def releaseRound(): Unit = { roundHeld.foreach(_.unpersist()); roundHeld = Nil }
 

@@ -2,26 +2,40 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Per-partition lineage + exactly-once stage resume (SURVEY.md §2.9, §7.1).
   *
   * Generalizes the reference's manual resume machinery (SKIPLINES line
   * offsets, SQL OFFSET, null-column filters + periodic pickles —
-  * README.md:25,61, docker/3:61, docker/4:68-87) into:
+  * README.md:25,61, docker/3:61, docker/4:68-87) into one commit protocol,
+  * owned by [[commit]]. A stage keyed by (stage, input snapshot):
   *
-  *  - lineage rows: one per (stage, input snapshot, partition) with row
-  *    counts and timing, appended to `<root>/_lineage` (parquet);
-  *  - stage markers: `<root>/_stages/<stage>@<inputSnapshot>` written after
-  *    the stage's MERGE commits. A killed job re-runs only stages without a
-  *    marker for their input snapshot; MERGE idempotency makes the replay
-  *    exactly-once at the table level.
+  *  1. is skipped when its marker exists (its recorded output snapshot is
+  *     returned);
+  *  1. otherwise builds its output frame and persists it once;
+  *  1. writes it (a MERGE/replace commit; MERGE idempotency makes a replay
+  *     converge to the same table);
+  *  1. captures its lineage rows — one per output partition with row count
+  *     and build+write duration, under `<root>/_lineage/<stage>@<input>/`.
+  *     A replay replaces that key's rows, so a kill between capture and
+  *     marker never double-counts;
+  *  1. writes its marker `<root>/_stages/<stage>@<input>` holding the output
+  *     snapshot — a temp file moved into place atomically, so a kill
+  *     mid-write leaves no marker (the stage re-runs) rather than a
+  *     truncated one.
+  *
+  * The output frame is unpersisted when the stage ends, also on a throw.
   */
 final class Lineage(spark: SparkSession, root: String) {
 
+  private def stagesDir = Paths.get(root, "_stages")
   private def stageMarker(stage: String, inputSnapshot: Long) =
-    Paths.get(root, "_stages", s"$stage@$inputSnapshot")
+    stagesDir.resolve(s"$stage@$inputSnapshot")
 
+  /** Only the exact marker name counts, never a temp file a killed
+    * [[markDone]] left behind.
+    */
   def isDone(stage: String, inputSnapshot: Long): Boolean =
     Files.exists(stageMarker(stage, inputSnapshot))
 
@@ -29,7 +43,8 @@ final class Lineage(spark: SparkSession, root: String) {
     Files.readString(stageMarker(stage, inputSnapshot)).trim.toLong
 
   /** Capture per-partition row counts of a stage output (one cheap extra
-    * aggregation over the already-computed frame).
+    * aggregation over the already-computed frame), replacing any rows an
+    * earlier capture of the same (stage, inputSnapshot) left.
     */
   def capture(stage: String, inputSnapshot: Long, df: DataFrame, durationMs: Long): Unit = {
     val rows = df
@@ -39,15 +54,26 @@ final class Lineage(spark: SparkSession, root: String) {
       .withColumn("input_snapshot", lit(inputSnapshot))
       .withColumn("duration_ms", lit(durationMs))
       .withColumn("recorded_ms", lit(System.currentTimeMillis()))
-    rows.write.mode("append").parquet(s"$root/_lineage")
+    rows.write.mode("overwrite").parquet(s"$root/_lineage/$stage@$inputSnapshot")
   }
 
+  /** Temp file `<stage>@<input>.tmp` in `_stages/`, then an atomic move onto
+    * the marker name (the `_current` pattern of [[MergeTable]]); a re-run
+    * overwrites a temp file a killed write left behind.
+    */
   def markDone(stage: String, inputSnapshot: Long, outputSnapshot: Long): Unit = {
-    Files.createDirectories(Paths.get(root, "_stages"))
-    Files.writeString(stageMarker(stage, inputSnapshot), outputSnapshot.toString)
+    Files.createDirectories(stagesDir)
+    val tmp = stagesDir.resolve(s"$stage@$inputSnapshot.tmp")
+    Files.writeString(tmp, outputSnapshot.toString)
+    Files.move(tmp, stageMarker(stage, inputSnapshot),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def lineageRows(): DataFrame = spark.read.parquet(s"$root/_lineage")
+  /** Every stage's rows; roots written before the per-key layout keep their
+    * flat files at the top of `_lineage/`, which are read too.
+    */
+  def lineageRows(): DataFrame =
+    spark.read.option("recursiveFileLookup", "true").parquet(s"$root/_lineage")
 
   /** Run `body` unless this (stage, inputSnapshot) already committed.
     * `body` must return the output snapshot id after its MERGE.
@@ -58,5 +84,20 @@ final class Lineage(spark: SparkSession, root: String) {
       val out = body
       markDone(stage, inputSnapshot, out)
       out
+    }
+
+  /** One stage under the commit protocol above: `df` builds the output
+    * (side writes inside it run only when the stage runs), `write` commits
+    * it and returns the output snapshot id.
+    */
+  def commit(stage: String, inputSnapshot: Long)(df: => DataFrame)(write: DataFrame => Long): Long =
+    runStage(stage, inputSnapshot) {
+      val t0 = System.nanoTime()
+      val out = df.persist()
+      try {
+        val snap = write(out)
+        capture(stage, inputSnapshot, out, (System.nanoTime() - t0) / 1000000)
+        snap
+      } finally out.unpersist()
     }
 }

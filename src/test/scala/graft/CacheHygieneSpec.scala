@@ -2,6 +2,7 @@ package graft
 
 import graft.canon.ConnectedComponents
 import graft.operators.GraphOps
+import graft.pipeline.{KgPipeline, PagesGen}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{lit, raise_error}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -18,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * before returning. This spec is the 20-line closure of the class: run
   * every query, then assert the SQL cache registry is empty. The failure
   * path gets the same check: each iterative graph operator, fed an input
-  * that throws mid-call, must still leave the registry empty.
+  * that throws mid-call, must still leave the registry empty — and so must
+  * a KgPipeline stage whose table write throws after its output was
+  * persisted.
   */
 class CacheHygieneSpec extends AnyFunSuite {
 
@@ -72,5 +75,30 @@ class CacheHygieneSpec extends AnyFunSuite {
       intercept[Exception](call())
       assert(Bridge.cacheIsEmpty(spark), s"$name left cached plans behind on its failure path")
     }
+  }
+
+  test("a KgPipeline stage whose write throws releases its persisted output") {
+    val root = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "kgtest-hygiene-")
+    val p = new KgPipeline(spark, root.toString, nPages = 20)
+    val spark2 = spark
+    import spark2.implicits._
+    p.textsTbl.merge(Seq((PagesGen.urlOf(PagesGen.qid(0)), PagesGen.qid(0), "en", "t"))
+      .toDF("url", "id", "lang", "text"))
+    // strip the layout stamp: the textify merge's validateLayout throws
+    // after the stage has built and persisted its output
+    val manifest = root.resolve("texts").resolve("_manifests")
+      .resolve(s"v${p.textsTbl.currentSnapshot.get}.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(java.nio.file.Files.readString(manifest))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("bucketCols")
+    java.nio.file.Files.writeString(manifest, mapper.writeValueAsString(node))
+
+    spark.catalog.clearCache()
+    val e = intercept[IllegalStateException](p.ingest(PagesGen.pages(spark, 20), delta = true))
+    assert(e.getMessage.contains("records no bucketCols"))
+    assert(!p.lineage.isDone("delta_textify", p.pagesTbl.currentSnapshot.get))
+    assert(Bridge.cacheIsEmpty(spark), "the textify stage left its output cached on its failure path")
   }
 }
