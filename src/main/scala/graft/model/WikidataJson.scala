@@ -34,9 +34,20 @@ object WikidataJson {
   /** Per-thread ObjectMapper — shared by all row-level parse/render code. */
   def mapper: ObjectMapper = mapperTL.get()
 
+  /** `line` without its leading and trailing `[] ,\n\r\t` dump wrappers:
+    * two index scans and one substring, no copy of the payload per side.
+    */
+  private[model] def trimLine(line: String): String = {
+    def wrapper(c: Char) = "[] ,\n\r\t".indexOf(c) >= 0
+    var from = 0
+    var to = line.length
+    while (from < to && wrapper(line.charAt(from))) from += 1
+    while (to > from && wrapper(line.charAt(to - 1))) to -= 1
+    line.substring(from, to)
+  }
+
   def parseLine(line: String): Option[JsonNode] = {
-    val trimmed = line.dropWhile(c => "[] ,\n\r\t".indexOf(c) >= 0)
-      .reverse.dropWhile(c => "[] ,\n\r\t".indexOf(c) >= 0).reverse
+    val trimmed = trimLine(line)
     if (trimmed.isEmpty) None
     else
       try {

@@ -1,8 +1,13 @@
 package graft.tables
 
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Per-partition lineage + exactly-once stage resume (SURVEY.md §2.9, §7.1).
   *
@@ -16,10 +21,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *  1. otherwise builds its output frame and persists it once;
   *  1. writes it (a MERGE/replace commit; MERGE idempotency makes a replay
   *     converge to the same table);
-  *  1. captures its lineage rows — one per output partition with row count
-  *     and build+write duration, under `<root>/_lineage/<stage>@<input>/`.
-  *     A replay replaces that key's rows, so a kill between capture and
-  *     marker never double-counts;
+  *  1. captures its lineage rows — one per non-empty output partition with
+  *     row count and build+write duration. The counts take one collect
+  *     with no shuffle of their own; the rows are written from the driver as one parquet
+  *     file, a hidden temp file moved atomically into
+  *     `<root>/_lineage/<stage>@<input>/`. A replay replaces that key's rows,
+  *     so a kill between capture and marker never double-counts;
   *  1. writes its marker `<root>/_stages/<stage>@<input>` holding the output
   *     snapshot — a temp file moved into place atomically, so a kill
   *     mid-write leaves no marker (the stage re-runs) rather than a
@@ -42,19 +49,45 @@ final class Lineage(spark: SparkSession, root: String) {
   def recordedOutput(stage: String, inputSnapshot: Long): Long =
     Files.readString(stageMarker(stage, inputSnapshot)).trim.toLong
 
-  /** Capture per-partition row counts of a stage output (one cheap extra
-    * aggregation over the already-computed frame), replacing any rows an
-    * earlier capture of the same (stage, inputSnapshot) left.
+  /** Capture per-partition row counts of a stage output, replacing any rows
+    * an earlier capture of the same (stage, inputSnapshot) left. Partitions
+    * without rows get no row, as with `groupBy(spark_partition_id())`. A
+    * capture killed mid-write leaves only a hidden temp file, which readers
+    * skip and the re-run overwrites.
     */
   def capture(stage: String, inputSnapshot: Long, df: DataFrame, durationMs: Long): Unit = {
-    val rows = df
-      .groupBy(spark_partition_id().as("partition"))
-      .agg(count(lit(1)).as("row_count"))
-      .withColumn("stage", lit(stage))
-      .withColumn("input_snapshot", lit(inputSnapshot))
-      .withColumn("duration_ms", lit(durationMs))
-      .withColumn("recorded_ms", lit(System.currentTimeMillis()))
-    rows.write.mode("overwrite").parquet(s"$root/_lineage/$stage@$inputSnapshot")
+    // a fresh plan over `df`, so a persisted frame is counted from its cache
+    val counts = df.select().queryExecution.toRdd.mapPartitionsWithIndex { (p, rows) =>
+      var n = 0L
+      while (rows.hasNext) { rows.next(); n += 1 }
+      if (n == 0) Iterator.empty else Iterator.single((p, n))
+    }.collect()
+    val recordedMs = System.currentTimeMillis()
+    val keyDir = Paths.get(root, "_lineage", s"$stage@$inputSnapshot")
+    Files.createDirectories(keyDir)
+    val tmp = keyDir.resolve(".rows.parquet.tmp")
+    val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+      .withType(Lineage.parquetSchema)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try counts.foreach { case (p, n) =>
+      val row = new SimpleGroup(Lineage.parquetSchema)
+      row.add("partition", p)
+      row.add("row_count", n)
+      row.add("stage", stage)
+      row.add("input_snapshot", inputSnapshot)
+      row.add("duration_ms", durationMs)
+      row.add("recorded_ms", recordedMs)
+      writer.write(row)
+    } finally writer.close()
+    // files of an earlier layout (Spark part files) go; the move replaces
+    // this layout's own file atomically
+    val rowsFile = keyDir.resolve("rows.parquet")
+    val st = Files.list(keyDir)
+    try st.iterator().asScala.filterNot(f => f == tmp || f == rowsFile).foreach(Files.delete)
+    finally st.close()
+    Files.move(tmp, rowsFile, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Temp file `<stage>@<input>.tmp` in `_stages/`, then an atomic move onto
@@ -100,4 +133,18 @@ final class Lineage(spark: SparkSession, root: String) {
         snap
       } finally out.unpersist()
     }
+}
+
+private object Lineage {
+
+  /** The lineage row schema, as Spark wrote the rows of earlier roots. */
+  val parquetSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required int32 partition;
+      |  required int64 row_count;
+      |  required binary stage (STRING);
+      |  required int64 input_snapshot;
+      |  required int64 duration_ms;
+      |  required int64 recorded_ms;
+      |}""".stripMargin)
 }

@@ -1,8 +1,12 @@
 package graft.tables
 
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-*semantics* table: bucketed Parquet + JSON snapshot manifests +
@@ -12,7 +16,8 @@ import scala.jdk.CollectionConverters._
   * Layout:
   *   path/data/snap-N/_bucket=K/ (parquet)  — data written by snapshot N
   *   path/_manifests/v{N}.json              — snapshot manifest:
-  *       {snapshotId, parent, rowCount, buckets: {K -> snap that owns K}}
+  *       {snapshotId, parent, rowCount, buckets: {K -> snap that owns K},
+  *        bucketRows: {K -> rows}, bucketCols, schema}
   *   path/_current                          — current snapshot id (atomic move)
   *
   * MERGE is read-merge-rewrite of *touched buckets only*: rows hash-bucket by
@@ -20,14 +25,16 @@ import scala.jdk.CollectionConverters._
   * anti-joins old-by-key, unions, and rewrites those buckets under a new
   * snapshot — unaffected buckets keep their old files (manifest pointers
   * carry over). At 100 TB this bounds merge I/O to O(touched data), the same
-  * contract as Iceberg MERGE with bucket partitioning.
+  * contract as Iceberg MERGE with bucket partitioning. Bucket files are read
+  * with the manifest's recorded schema (no schema-inference job), and a new
+  * snapshot's row counts come from the footers of the files it wrote.
   *
   * Idempotency: deterministic keys + MERGE ⇒ re-running a stage converges to
   * the same table (ref analog: `INSERT … ON CONFLICT` upserts +
   * deterministic `_id = qid_lang_chunk`, src/wikidataDB.py:46-76,
   * docker/3_Add_Wikidata_to_AstraDB/run.py:88).
-  */
-/** @param scopeCols when set, the table supports SCOPE-REPLACE merges: a
+  *
+  * @param scopeCols when set, the table supports SCOPE-REPLACE merges: a
   *   merge deletes every old row whose scope appears in the batch unless the
   *   batch re-emits it (a changed web page whose output SHRANK must shed its
   *   stale mentions/chunks/triples — MERGE-only upserts cannot delete).
@@ -48,19 +55,23 @@ final class MergeTable(spark: SparkSession, val path: String,
 
   def exists: Boolean = currentSnapshot.isDefined
 
-  /** (parent, bucket → owning snapshot, rowCount, bucket → row count).
-    * `bucketRows` lets merge carry untouched buckets' counts forward without
-    * re-reading their files (absent only in pre-upgrade manifests).
-    */
   private def manifestNode(v: Long) = mapper.readTree(Files.readString(manifestFile(v)))
 
-  private def readManifest(v: Long): (Long, Map[Int, Long], Long, Map[Int, Long]) = {
+  /** One snapshot manifest. `bucketRows` lets merge carry untouched buckets'
+    * counts forward without re-reading their files (absent only in
+    * pre-upgrade manifests); `schema` is absent only in manifests written
+    * before schema stamping.
+    */
+  private case class Manifest(buckets: Map[Int, Long], rowCount: Long,
+                              bucketRows: Map[Int, Long], schema: Option[StructType])
+
+  private def readManifest(v: Long): Manifest = {
     val node = manifestNode(v)
-    val buckets = node.get("buckets").properties().asScala
-      .map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
-    val bucketRows = Option(node.get("bucketRows")).map(_.properties().asScala
-      .map(e => e.getKey.toInt -> e.getValue.asLong()).toMap).getOrElse(Map.empty)
-    (node.get("parent").asLong(), buckets, node.get("rowCount").asLong(), bucketRows)
+    def intMap(n: com.fasterxml.jackson.databind.JsonNode): Map[Int, Long] =
+      n.properties().asScala.map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
+    Manifest(intMap(node.get("buckets")), node.get("rowCount").asLong(),
+      Option(node.get("bucketRows")).map(intMap).getOrElse(Map.empty),
+      Option(node.get("schema")).map(n => DataType.fromJson(n.toString).asInstanceOf[StructType]))
   }
 
   /** A table's bucket hashing is part of its on-disk layout: merging with a
@@ -88,7 +99,7 @@ final class MergeTable(spark: SparkSession, val path: String,
     }
   }
 
-  def rowCount: Long = currentSnapshot.map(readManifest(_)._3).getOrElse(0L)
+  def rowCount: Long = currentSnapshot.map(readManifest(_).rowCount).getOrElse(0L)
 
   private def bucketDir(snap: Long, bucket: Int): String =
     s"$path/data/snap-$snap/_bucket=$bucket"
@@ -107,29 +118,30 @@ final class MergeTable(spark: SparkSession, val path: String,
     * readable (Iceberg snapshot-read semantics).
     */
   def readSnapshot(v: Long): DataFrame = {
-    val (_, buckets, _, _) = readManifest(v)
-    val dirs = buckets.toSeq.map { case (b, snap) => bucketDir(snap, b) }
+    val m = readManifest(v)
+    val dirs = m.buckets.toSeq.map { case (b, snap) => bucketDir(snap, b) }
       .filter(d => Files.exists(Paths.get(d)))
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else {
+    if (dirs.nonEmpty) readParquet(m.schema, dirs)
+    else m.schema match {
       // a scope-replace/replace can legally empty the table: keep the last
       // recorded schema so downstream column references still resolve
-      val schema = Option(manifestNode(v).get("schema")).map(n =>
-        org.apache.spark.sql.types.DataType.fromJson(n.toString)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      schema match {
-        case Some(st) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-        case None => spark.emptyDataFrame
-      }
+      case Some(st) => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+      case None => spark.emptyDataFrame
     }
   }
 
-  /** All snapshot ids, oldest first. */
+  /** Bucket files read with the recorded `schema`, so no schema-inference
+    * job runs; Spark reads a user-given file schema as all-nullable, the
+    * same schema inference gives. Only a manifest without one infers.
+    */
+  private def readParquet(schema: Option[StructType], dirs: Seq[String]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
+
   /** Numeric ids parsed from a directory's entries via `pattern`'s first
     * group (shared by the manifest and data-dir listings).
     */
-  private def listIds(dir: java.nio.file.Path, pattern: scala.util.matching.Regex): Seq[Long] =
+  private def listIds(dir: Path, pattern: scala.util.matching.Regex): Seq[Long] =
     if (!Files.exists(dir)) Seq.empty
     else {
       val stream = Files.list(dir)
@@ -139,6 +151,7 @@ final class MergeTable(spark: SparkSession, val path: String,
       finally stream.close()
     }
 
+  /** All snapshot ids, oldest first. */
   def snapshots: Seq[Long] =
     listIds(Paths.get(path, "_manifests"), "v(\\d+)\\.json$".r)
 
@@ -183,10 +196,7 @@ final class MergeTable(spark: SparkSession, val path: String,
     val staging = newStagingDir()
     incoming.repartition(col("_bucket")).write.mode("overwrite").partitionBy("_bucket")
       .parquet(staging.toString)
-    val newBucketRows: Map[Int, Long] =
-      if (!dirHasBuckets(staging)) Map.empty // empty frame: only _SUCCESS written
-      else spark.read.parquet(staging.toString).groupBy("_bucket").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val newBucketRows = footerRows(stagedBuckets(staging))
     commitManifest(newSnap, parent,
       manifestJson(newSnap, parent, newBucketRows.keys.map(_ -> newSnap).toMap,
         newBucketRows, df.schema.json), staging)
@@ -198,13 +208,10 @@ final class MergeTable(spark: SparkSession, val path: String,
     val newSnap = allocateSnapshot()
     val incoming = df.dropDuplicates(keyCols).withColumn("_bucket", bucketExpr)
 
-    val (oldBuckets: Map[Int, Long], parent: Long, oldBucketRows: Map[Int, Long]) =
-      currentSnapshot match {
-        case Some(v) =>
-          val m = readManifest(v)
-          (m._2, v, m._4)
-        case None => (Map.empty[Int, Long], 0L, Map.empty[Int, Long])
-      }
+    val snap = currentSnapshot
+    val parent = snap.getOrElse(0L)
+    val current = snap.map(readManifest)
+    val oldBuckets = current.fold(Map.empty[Int, Long])(_.buckets)
 
     // buckets touched by this batch: from the processed SCOPES when given
     // (a scope may have zero incoming rows but still demand a rewrite),
@@ -218,7 +225,7 @@ final class MergeTable(spark: SparkSession, val path: String,
       if (touchedWithData.isEmpty) incoming
       else {
         val oldDirs = touchedWithData.toSeq.map(b => bucketDir(oldBuckets(b), b))
-        val old = spark.read.parquet(oldDirs: _*).withColumn("_bucket", bucketExpr)
+        val old = readParquet(current.flatMap(_.schema), oldDirs).withColumn("_bucket", bucketExpr)
         // key-anti for plain upsert; scope-anti replaces whole scopes
         val survivors = scopes match {
           case Some(s) => old.join(s, scopeCols.get, "left_anti")
@@ -242,31 +249,24 @@ final class MergeTable(spark: SparkSession, val path: String,
     merged.repartition(col("_bucket")).write.mode("overwrite").partitionBy("_bucket")
       .parquet(staging.toString)
 
-    // per-bucket counts of what we just wrote: counted from the staged
-    // files — a metadata-only scan (only the partition-dir column is
-    // referenced, so row counts come from parquet footers); the anti-join plan
-    // executes exactly once, in the write job (persisting it instead measured
-    // 5× slower on the partitioned write path)
-    val newBucketRows: Map[Int, Long] =
-      if (touched.isEmpty || !dirHasBuckets(staging)) Map.empty // nothing (re-)emitted
-      else spark.read.parquet(staging.toString)
-        .groupBy("_bucket").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // per-bucket counts of what we just wrote, read from the staged files'
+    // parquet footers on the driver (no Spark job): the anti-join plan
+    // executes exactly once, in the write job (persisting it instead
+    // measured 5× slower on the partitioned write path)
+    val newBucketRows = footerRows(stagedBuckets(staging))
 
     // new manifest: touched buckets point at newSnap (dropped entirely when
     // a scope-replace deleted their last row), others carry over — including
     // their row counts, so merge I/O stays O(touched data): no untouched
     // bucket is ever re-read just to recount it. (Pre-upgrade manifests
-    // without bucketRows pay one legacy recount, then carry.)
+    // without bucketRows pay one footer recount, then carry.)
     val untouched = oldBuckets.keySet -- touched
     val newBuckets = oldBuckets.view.filterKeys(untouched.contains).toMap ++
       newBucketRows.keys.map(_ -> newSnap)
+    val oldBucketRows = current.fold(Map.empty[Int, Long])(_.bucketRows)
     val untouchedRows: Map[Int, Long] =
       if (untouched.forall(oldBucketRows.contains)) untouched.map(b => b -> oldBucketRows(b)).toMap
-      else untouched.toSeq.map { b =>
-        val d = bucketDir(oldBuckets(b), b)
-        b -> (if (Files.exists(Paths.get(d))) spark.read.parquet(d).count() else 0L)
-      }.toMap
+      else footerRows(untouched.map(b => b -> Paths.get(bucketDir(oldBuckets(b), b))).toMap)
     commitManifest(newSnap, parent,
       manifestJson(newSnap, parent, newBuckets, untouchedRows ++ newBucketRows,
         df.schema.json), staging)
@@ -286,15 +286,35 @@ final class MergeTable(spark: SparkSession, val path: String,
        | "schema": $schemaJson}""".stripMargin
   }
 
-  /** Whether a written data dir contains any bucket partition (an empty
-    * frame's write leaves only _SUCCESS — unreadable as parquet).
+  /** The `_bucket=K` partition dirs of a staged write (none for an empty
+    * frame, whose write leaves only `_SUCCESS`).
     */
-  private def dirHasBuckets(dir: java.nio.file.Path): Boolean =
-    Files.exists(dir) && {
-      val st = Files.list(dir)
-      try st.anyMatch(p => p.getFileName.toString.startsWith("_bucket="))
-      finally st.close()
+  private def stagedBuckets(staging: Path): Map[Int, Path] =
+    listIds(staging, "_bucket=(\\d+)$".r).map(b => b.toInt -> staging.resolve(s"_bucket=$b")).toMap
+
+  /** Row count of each bucket dir, summed from the parquet footers of the
+    * files Spark would read (names starting with `.` or `_` are skipped),
+    * on the driver with no Spark job; a missing dir counts 0. The read
+    * options are built once per call: the default ones build a fresh Hadoop
+    * `Configuration` per file, about 10 ms each.
+    */
+  private def footerRows(dirs: Map[Int, Path]): Map[Int, Long] = {
+    val options = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
+    def fileRows(f: Path): Long = {
+      val reader = ParquetFileReader.open(new LocalInputFile(f), options)
+      try reader.getRecordCount finally reader.close()
     }
+    dirs.map { case (b, dir) =>
+      b -> (if (!Files.exists(dir)) 0L else {
+        val st = Files.list(dir)
+        try st.iterator().asScala.filterNot { f =>
+          val n = f.getFileName.toString
+          n.startsWith(".") || n.startsWith("_")
+        }.map(fileRows).sum
+        finally st.close()
+      })
+    }
+  }
 
   /** Next snapshot id: one past the max of every EXISTING manifest and the
     * current pointer — never `current + 1` alone. A writer that crashed
@@ -308,13 +328,13 @@ final class MergeTable(spark: SparkSession, val path: String,
     (snapshots :+ currentSnapshot.getOrElse(0L)).max + 1
 
   /** Writer-private staging dir for one commit attempt's data files. */
-  private def newStagingDir(): java.nio.file.Path =
+  private def newStagingDir(): Path =
     Paths.get(path, s"data/_staging-${java.util.UUID.randomUUID().toString.take(8)}")
 
-  private def deleteTreeIfExists(dir: java.nio.file.Path): Unit =
+  private def deleteTreeIfExists(dir: Path): Unit =
     if (Files.exists(dir)) {
       val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(p => Files.deleteIfExists(p))
       finally walk.close()
     }
@@ -354,7 +374,7 @@ final class MergeTable(spark: SparkSession, val path: String,
     // .toSeq before the swap: mapping the Map directly would key the result
     // by snapshot and silently collapse every bucket sharing one
     val referenced: Set[(Long, Int)] =
-      keep.flatMap(v => readManifest(v)._2.toSeq.map { case (b, snap) => (snap, b) })
+      keep.flatMap(v => readManifest(v).buckets.toSeq.map { case (b, snap) => (snap, b) })
     expired.foreach(v => Files.deleteIfExists(manifestFile(v)))
     val onDisk = listIds(Paths.get(path, "data"), "snap-(\\d+)$".r)
     val deletedDirs = onDisk.flatMap { snap =>
@@ -407,7 +427,7 @@ final class MergeTable(spark: SparkSession, val path: String,
     * never visible.
     */
   private def commitManifest(newSnap: Long, parent: Long, json: String,
-                             staging: java.nio.file.Path): Unit = {
+                             staging: Path): Unit = {
     onBeforeCommit()
     def abort(msg: String): Nothing = {
       deleteTreeIfExists(staging)

@@ -1,7 +1,7 @@
 package graft.tables
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.functions.{col, count, lit, spark_partition_id, sum}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
@@ -103,5 +103,56 @@ class LineageSpec extends AnyFunSuite {
     assert(Bridge.cacheIsEmpty(spark))
     assert(!lineage.isDone("link", 2L))
     assert(!Files.exists(root.resolve("_lineage")))
+  }
+
+  private def keyRows(lineage: Lineage, stage: String): Seq[(Int, Long)] =
+    lineage.lineageRows().filter(col("stage") === stage)
+      .select("partition", "row_count").as[(Int, Long)].collect().sorted.toSeq
+
+  test("capture skips empty partitions and records what groupBy(spark_partition_id()) counts") {
+    val df = spark.range(0, 10, 1, 4).filter(col("id") < 3).toDF("id")
+    // the Spark-side form lineage rows were captured with before
+    val old = df.groupBy(spark_partition_id().as("partition")).agg(count(lit(1)).as("row_count"))
+      .withColumn("stage", lit("old")).withColumn("input_snapshot", lit(0L))
+      .withColumn("duration_ms", lit(1L)).withColumn("recorded_ms", lit(1L))
+    val oldRoot = freshRoot()
+    old.write.parquet(oldRoot.resolve("_lineage").resolve("old@0").toString)
+    val oldLineage = new Lineage(spark, oldRoot.toString)
+
+    val lineage = new Lineage(spark, freshRoot().toString)
+    lineage.capture("filtered", 0L, df, 1L)
+    assert(keyRows(lineage, "filtered") == Seq((0, 2L), (1, 1L)))
+    assert(keyRows(lineage, "filtered") == keyRows(oldLineage, "old"))
+    assert(lineage.lineageRows().schema == oldLineage.lineageRows().schema)
+  }
+
+  test("a killed capture's hidden temp file is ignored by readers and replaced by the re-run") {
+    val root = freshRoot()
+    val lineage = new Lineage(spark, root.toString)
+    lineage.capture("harvest", 1L, spark.range(0, 6, 1, 2).toDF("id"), 1L)
+    // a kill mid-write: a truncated temp file in the key dir, no rows file
+    val keyDir = root.resolve("_lineage").resolve("textify@3")
+    Files.createDirectories(keyDir)
+    Files.writeString(keyDir.resolve(".rows.parquet.tmp"), "PAR1 truncated")
+    assert(lineage.lineageRows().select("stage").as[String].collect().toSet == Set("harvest"))
+
+    lineage.capture("textify", 3L, spark.range(0, 9, 1, 3).toDF("id"), 1L)
+    assert(keyRows(lineage, "textify") == Seq((0, 3L), (1, 3L), (2, 3L)))
+    assert(Files.list(keyDir).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("rows.parquet"))
+  }
+
+  test("a re-capture replaces a key's rows written by Spark in the per-key layout") {
+    val root = freshRoot()
+    val keyDir = root.resolve("_lineage").resolve("docs@4")
+    spark.range(0, 8, 1, 2).toDF("id")
+      .groupBy(spark_partition_id().as("partition")).agg(count(lit(1)).as("row_count"))
+      .withColumn("stage", lit("docs")).withColumn("input_snapshot", lit(4L))
+      .withColumn("duration_ms", lit(1L)).withColumn("recorded_ms", lit(1L))
+      .write.mode("overwrite").parquet(keyDir.toString)
+    val lineage = new Lineage(spark, root.toString)
+    assert(keyRows(lineage, "docs") == Seq((0, 4L), (1, 4L)))
+    lineage.capture("docs", 4L, spark.range(0, 3, 1, 1).toDF("id"), 1L)
+    assert(keyRows(lineage, "docs") == Seq((0, 3L)))
+    assert(Files.list(keyDir).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("rows.parquet"))
   }
 }

@@ -1,8 +1,11 @@
 package graft.tables
 
 import graft.SparkTestBase
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Unit contract of the Iceberg-semantics MERGE layer: upsert-by-key, new
   * wins, untouched buckets carry over by manifest pointer (no rewrite),
@@ -288,5 +291,115 @@ class MergeTableSpec extends AnyFunSuite {
     t.merge(Seq(("x", 1, "v9")).toDF("a", "b", "v"))
     val got = t.read().as[(String, Int, String)].collect().toSet
     assert(got == Set(("x", 1, "v9"), ("x", 2, "v2")))
+  }
+
+  private def manifestOf(t: MergeTable) = new com.fasterxml.jackson.databind.ObjectMapper()
+    .readTree(Files.readString(Paths.get(t.path, "_manifests", s"v${t.currentSnapshot.get}.json")))
+
+  /** The manifest's `bucketRows` and `rowCount` against a Spark count of
+    * `read()` per bucket.
+    */
+  private def assertCountsExact(t: MergeTable, bucketCols: Seq[String], numBuckets: Int): Unit = {
+    val m = manifestOf(t)
+    val recorded = m.get("bucketRows").properties().asScala
+      .map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
+    val counted = t.read()
+      .groupBy(pmod(xxhash64(bucketCols.map(col): _*), lit(numBuckets)).cast("int"))
+      .count().as[(Int, Long)].collect().toMap
+    assert(recorded == counted)
+    assert(m.get("buckets").properties().asScala.map(_.getKey.toInt).toSet == counted.keySet)
+    assert(m.get("rowCount").asLong() == t.read().count() && t.rowCount == counted.values.sum)
+  }
+
+  private def bucketOf(v: String, numBuckets: Int): Int =
+    Seq(v).toDF("k").select(pmod(xxhash64(col("k")), lit(numBuckets)).cast("int")).as[Int].head()
+
+  /** What Spark infers from the parquet files of the current snapshot. */
+  private def inferredSchema(path: String, snap: Long): StructType =
+    spark.read.parquet(Files.list(Paths.get(path, "data", s"snap-$snap")).iterator().asScala
+      .map(_.toString).filter(_.contains("_bucket=")).toSeq: _*).schema
+
+  private def allNullable(t: DataType): Boolean = t match {
+    case s: StructType => s.fields.forall(f => f.nullable && allNullable(f.dataType))
+    case a: ArrayType => a.containsNull && allNullable(a.elementType)
+    case m: MapType => m.valueContainsNull && allNullable(m.keyType) && allNullable(m.valueType)
+    case _ => true
+  }
+
+  test("read() uses the recorded schema: the inferred one, same field order, all fields nullable") {
+    val path = tmp()
+    val t = new MergeTable(spark, path, Seq("id"), numBuckets = 4)
+    val df = Seq(("a", 1, 2L, Seq(1, 2), Map("x" -> 1.5), ("s", 3)),
+      ("b", 4, 5L, Seq.empty[Int], Map.empty[String, Double], ("t", 6)))
+      .toDF("id", "i", "l", "arr", "m", "st")
+    assert(!allNullable(df.schema))
+    t.merge(df)
+    val schema = t.read().schema
+    assert(schema == inferredSchema(path, 1L))
+    assert(schema.fieldNames.toSeq == df.columns.toSeq && allNullable(schema))
+    // a merge reads its touched buckets with the same schema
+    t.merge(Seq(("a", 9, 9L, Seq(9), Map("y" -> 9.0), ("u", 9))).toDF("id", "i", "l", "arr", "m", "st"))
+    assert(t.read().schema == schema)
+    assert(t.read().filter(col("id") === "a").select("i").as[Int].head() == 9 && t.read().count() == 2)
+  }
+
+  test("an emptied table reads with its recorded schema, as before") {
+    val t = new MergeTable(spark, tmp(), Seq("id"), scopeCols = Some(Seq("id")))
+    val df = Seq(("a", 1)).toDF("id", "v")
+    t.merge(df)
+    t.mergeScoped(Seq.empty[(String, Int)].toDF("id", "v"), Seq("a").toDF("id"))
+    assert(t.read().schema == df.schema)
+  }
+
+  test("a manifest without a schema still reads and merges by inference") {
+    val path = tmp()
+    val t = new MergeTable(spark, path, Seq("id"), numBuckets = 4)
+    t.merge(Seq(("a", 1), ("b", 2)).toDF("id", "v"))
+    val mf = Paths.get(path, "_manifests", "v1.json")
+    Files.writeString(mf, Files.readString(mf).replaceAll("(?s),\\s*\"schema\":.*$", "}"))
+    assert(!manifestOf(t).has("schema"))
+    assert(t.read().schema == inferredSchema(path, 1L))
+    assert(t.read().as[(String, Int)].collect().toMap == Map("a" -> 1, "b" -> 2))
+    t.merge(Seq(("a", 10), ("c", 3)).toDF("id", "v"))
+    assert(t.read().as[(String, Int)].collect().toMap == Map("a" -> 10, "b" -> 2, "c" -> 3))
+  }
+
+  test("footer row counts are exact after a plain merge") {
+    val t = new MergeTable(spark, tmp(), Seq("id"), numBuckets = 8)
+    t.merge((1 to 50).map(i => (s"k$i", i)).toDF("id", "v"))
+    assertCountsExact(t, Seq("id"), 8)
+    t.merge(((1 to 10).map(i => (s"k$i", -i)) ++ (51 to 60).map(i => (s"k$i", i))).toDF("id", "v"))
+    assert(t.rowCount == 60)
+    assertCountsExact(t, Seq("id"), 8)
+  }
+
+  test("footer row counts are exact after a mergeScoped that empties a bucket") {
+    val t = new MergeTable(spark, tmp(), Seq("url", "begin"), numBuckets = 8,
+      scopeCols = Some(Seq("url")))
+    val emptied = bucketOf("u0", 8)
+    val others = (1 to 20).map(i => s"u$i").filter(bucketOf(_, 8) != emptied).take(5)
+    t.merge(((("u0", 0, "a") +: ("u0", 5, "b") +: others.map(u => (u, 0, "c"))))
+      .toDF("url", "begin", "v"))
+    assertCountsExact(t, Seq("url"), 8)
+    t.mergeScoped(Seq.empty[(String, Int, String)].toDF("url", "begin", "v"), Seq("u0").toDF("url"))
+    assert(!manifestOf(t).get("bucketRows").has(emptied.toString))
+    assert(t.rowCount == others.size)
+    assertCountsExact(t, Seq("url"), 8)
+  }
+
+  test("footer row counts are exact after a replace with an empty frame") {
+    val t = new MergeTable(spark, tmp(), Seq("id"), numBuckets = 8)
+    t.merge(Seq(("a", 1), ("b", 2)).toDF("id", "v"))
+    t.replace(Seq.empty[(String, Int)].toDF("id", "v"))
+    assert(t.rowCount == 0 && manifestOf(t).get("bucketRows").size() == 0)
+    assertCountsExact(t, Seq("id"), 8)
+  }
+
+  test("footer row counts are exact after a composite-key merge") {
+    val t = new MergeTable(spark, tmp(), Seq("a", "b"), numBuckets = 4)
+    t.merge((1 to 30).map(i => (s"x${i % 3}", i, "v")).toDF("a", "b", "v"))
+    t.merge(Seq(("x1", 1, "w"), ("x1", 31, "w"), ("x2", 2, "w")).toDF("a", "b", "v"))
+    assert(t.rowCount == 31)
+    assertCountsExact(t, Seq("a", "b"), 4)
   }
 }
