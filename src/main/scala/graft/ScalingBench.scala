@@ -4,6 +4,7 @@ import graft.link.Embedder
 import graft.mention.AhoCorasick
 import graft.model.WikidataJson
 import graft.pipeline.{PagesGen, TextifyStage}
+import graft.tables.Checkpoints
 import graft.textify.{LangVariant, Textifier}
 import graft.triples.Triples
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -99,16 +100,16 @@ object ScalingBench {
   }
 
   /** Shuffle path: gather-join textify + link joins + triple joins. */
-  def shuffleJob(spark: SparkSession, path: String): (Long, Long) = {
-    import spark.implicits._
-    val payloads = TextifyStage.payloads(spark, spark.read.parquet(path)).persist()
-    val labels = TextifyStage.harvestLabels(spark, payloads).persist()
-    val nTexts = TextifyStage.render(spark, payloads, labels).count()
-    val nTriples = Triples.fromLines(spark, payloads.map(_.payload),
-      labels.filter(col("lang") === "en").select("id", "label")).count()
-    payloads.unpersist(); labels.unpersist()
-    (nTexts, nTriples)
-  }
+  def shuffleJob(spark: SparkSession, path: String): (Long, Long) =
+    Checkpoints.superstep(spark, None) { s =>
+      import spark.implicits._
+      val payloads = s.hold(TextifyStage.payloads(spark, spark.read.parquet(path)))
+      val labels = s.hold(TextifyStage.harvestLabels(spark, payloads))
+      val nTexts = TextifyStage.render(spark, payloads, labels).count()
+      val nTriples = Triples.fromLines(spark, payloads.map(_.payload),
+        labels.filter(col("lang") === "en").select("id", "label")).count()
+      (nTexts, nTriples)
+    }
 
   /** Dimension prep (untimed): label map + trie from the corpus. */
   def prep(spark: SparkSession, path: String): (Map[String, String], AhoCorasick) = {

@@ -67,6 +67,11 @@ object ConnectedComponents {
         .select(col("id"),
           least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
           (col("nmin").isNotNull && col("nmin") < col("component")).as("_changed")))
+      // build its cache before the jump join is planned: over an unbuilt
+      // cache AQE submits one build per scan and plans the join's shuffles
+      // by which build it sees finish first, so the round's Spark jobs
+      // varied from run to run
+      stepped.count()
 
       // pointer jump: component(u) := component(component(u)) — component
       // values are node ids, so one more equi-join halves the remaining

@@ -1,6 +1,6 @@
 package graft.link
 
-import graft.tables.MergeTable
+import graft.tables.{Checkpoints, MergeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,34 +22,31 @@ final class EmbeddingCache(spark: SparkSession, table: MergeTable) {
   /** texts(id, text) → (id, vec), hitting the cache where possible and
     * persisting every newly computed vector. Returns (result, missCount).
     */
-  def embedWithCache(texts: DataFrame): (DataFrame, Long) = {
-    import spark.implicits._
-    val keyed = texts.select(col("id"), col("text"), md5(col("text")).as("text_key"))
+  def embedWithCache(texts: DataFrame): (DataFrame, Long) =
+    Checkpoints.superstep(spark, None) { s =>
+      import spark.implicits._
+      val keyed = texts.select(col("id"), col("text"), md5(col("text")).as("text_key"))
 
-    val cached = table.currentSnapshot match {
-      case Some(_) => table.read()
-      case None    => Seq.empty[(String, Seq[Float])].toDF("text_key", "vec")
+      val cached = table.currentSnapshot match {
+        case Some(_) => table.read()
+        case None    => Seq.empty[(String, Seq[Float])].toDF("text_key", "vec")
+      }
+
+      val joined = s.hold(keyed.join(cached, Seq("text_key"), "left"))
+      val misses = joined.filter(col("vec").isNull)
+        .select(col("text_key"), col("text")).dropDuplicates("text_key")
+
+      val fresh = s.hold(Embedder.embedDataset(misses.as[(String, String)])
+        .toDF("text_key", "vec"))
+      val nMisses = fresh.count()
+      if (nMisses > 0) table.merge(fresh)
+
+      val hits = joined.filter(col("vec").isNotNull).select(col("id"), col("vec"))
+      val filled = joined.filter(col("vec").isNull).select(col("id"), col("text_key"))
+        .join(fresh, Seq("text_key")).select(col("id"), col("vec"))
+      // the result is consumed lazily by the caller: materialize it before
+      // the scope releases its inputs, or the caller's evaluation recomputes
+      // the cache join twice
+      (s.materialize(hits.unionByName(filled)), nMisses)
     }
-
-    val joined = keyed.join(cached, Seq("text_key"), "left").persist()
-    val misses = joined.filter(col("vec").isNull)
-      .select(col("text_key"), col("text")).dropDuplicates("text_key")
-
-    val fresh = Embedder.embedDataset(misses.as[(String, String)])
-      .toDF("text_key", "vec").persist()
-    val nMisses = fresh.count()
-    if (nMisses > 0) table.merge(fresh)
-
-    val hits = joined.filter(col("vec").isNotNull).select(col("id"), col("vec"))
-    val filled = joined.filter(col("vec").isNull).select(col("id"), col("text_key"))
-      .join(fresh, Seq("text_key")).select(col("id"), col("vec"))
-    // the result is consumed lazily by the caller: eagerly materialize it
-    // (lineage truncation) BEFORE releasing the inputs — unpersisting first
-    // would force the caller's evaluation to recompute the cache join twice,
-    // and `fresh` would otherwise leak one cached frame per call
-    val result = hits.unionByName(filled).localCheckpoint(true)
-    joined.unpersist()
-    fresh.unpersist()
-    (result, nMisses)
-  }
 }

@@ -1,6 +1,7 @@
 package graft.link
 
 import graft.mention.AhoCorasick
+import graft.tables.Checkpoints
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,20 +39,14 @@ object Linker {
       .filter(length(col("surface")) > 0)
       .groupBy("surface").agg(collect_list("id").as("ids"))
 
-  /** texts(url, id, lang, text) → mentions(url, surface, begin, end, qid)
-    * — one row per mention × candidate. Self-mentions (candidate == the
-    * page's own entity) are dropped.
-    */
-  /** Context window text around a mention (map-side, no shuffle). */
   private val contextChars = 80
 
-  /** Mentions with their local context captured map-side while the full text
-    * is in hand — downstream linking never re-joins the (wide) texts table;
-    * only the small context window travels.
+  /** The context window around a mention, captured map-side while the full
+    * text is in hand — downstream linking never re-joins the (wide) texts
+    * table; only the small context window travels.
     */
-  def mentions(spark: SparkSession, texts: DataFrame, trie: Broadcast[AhoCorasick],
-               maxCandidates: Int = 50): DataFrame =
-    explodeCandidates(resolvedRows(spark, texts, trie), maxCandidates)
+  private def contextOf(text: String, begin: Int, end: Int): String =
+    text.substring(math.max(0, begin - contextChars), math.min(text.length, end + contextChars))
 
   /** Resolved (leftmost-longest) mentions BEFORE the candidate explode:
     * (url, self_id, surface, begin, end, qids, context) — one row per
@@ -66,10 +61,7 @@ object Linker {
     texts.select("url", "id", "text").as[(String, String, String)]
       .flatMap { case (url, selfId, text) =>
         trie.value.findMentions(text).map { m =>
-          val ctx = text.substring(
-            math.max(0, m.begin - contextChars),
-            math.min(text.length, m.end + contextChars))
-          (url, selfId, m.surface, m.begin, m.end, m.qids, ctx)
+          (url, selfId, m.surface, m.begin, m.end, m.qids, contextOf(text, m.begin, m.end))
         }
       }
       .toDF("url", "self_id", "surface", "begin", "end", "qids", "context")
@@ -175,10 +167,7 @@ object Linker {
         val trie = AhoCorasick.build(entries)
         tIt.flatMap { case (_, _, url, selfId, text) =>
           trie.findRawMentions(text).map { m =>
-            val ctx = text.substring(
-              math.max(0, m.begin - contextChars),
-              math.min(text.length, m.end + contextChars))
-            (url, selfId, m.surface, m.begin, m.end, m.qids, ctx)
+            (url, selfId, m.surface, m.begin, m.end, m.qids, contextOf(text, m.begin, m.end))
           }
         }
       }
@@ -198,7 +187,7 @@ object Linker {
           }
       }
       .toDF("url", "self_id", "surface", "begin", "end", "qids", "context")
-    graft.tables.Checkpoints.eager(resolved, checkpointDir)
+    Checkpoints.superstep(spark, checkpointDir)(_.materialize(resolved))
   }
 
   /** The non-SQL half of linking: each mention's local context embedded
@@ -244,29 +233,6 @@ object Linker {
            entityVecs: DataFrame, k: Int = 50): DataFrame =
     scoreTopK(contextVecs(mentionsDf), entityVecs, k)
 
-  /** LSH candidate generation (the north-star's alternative to the surface
-    * dictionary): mention context embeddings and entity item-text embeddings
-    * are sign-bucketed with the SAME seeded hyperplanes; same-bucket pairs
-    * across `tables` independent hash tables are the candidate set, scored
-    * exactly and re-ranked per mention. Finds candidates the surface trie
-    * cannot (paraphrases, unseen aliases) at |corpus|·tables/2^bits expected
-    * candidates per mention instead of |entities|.
-    *
-    * Same scale discipline as the ANN paths: the cosine is computed inside
-    * each table branch (narrow, vectors in hand) so the cross-table dedup
-    * shuffles only scalar rows, and the entity side is an equi-join on the
-    * bucket id — nothing broadcasts, nothing goes quadratic.
-    *
-    * Input: the pre-explode [[resolvedMentions]] frame (one row per mention
-    * span). Output: (url, begin, end, surface, qid, score, rank).
-    */
-  def linkLsh(spark: SparkSession, resolved: DataFrame, entityVecs: DataFrame,
-              k: Int = 5, bits: Int = 8, tables: Int = 4,
-              dimLen: Int = Embedder.dim,
-              checkpointDir: Option[String] = None): DataFrame =
-    linkLshScored(embedMentions(resolved), entityVecs, k, bits, tables, dimLen,
-      checkpointDir)
-
   /** The non-SQL half of LSH linking: one context embedding per mention span
     * (batched map). Output: (url, surface, begin, end, ctx_vec) — the kg11
     * oracle-frame seam; everything after is relational (the plane
@@ -287,30 +253,36 @@ object Linker {
       .toDF("url", "surface", "begin", "end", "ctx_vec")
   }
 
-  /** The relational half of LSH linking over a pre-embedded mention frame:
-    * per-table sign-bucket both sides, same-bucket equi-join, exact cosine,
-    * scalar-only cross-table dedup, per-mention top-K window.
+  /** LSH candidate generation (the north-star's alternative to the surface
+    * dictionary) over a pre-embedded mention frame ([[embedMentions]]):
+    * mention context embeddings and entity item-text embeddings are
+    * sign-bucketed with the SAME seeded hyperplanes; same-bucket pairs
+    * across `tables` independent hash tables are the candidate set, scored
+    * exactly and re-ranked per mention. Finds candidates the surface trie
+    * cannot (paraphrases, unseen aliases) at |corpus|·tables/2^bits expected
+    * candidates per mention instead of |entities|.
+    *
+    * Same scale discipline as the ANN paths: the cosine is computed inside
+    * each table branch (narrow, vectors in hand) so the cross-table dedup
+    * shuffles only scalar rows, and the entity side is an equi-join on the
+    * bucket id — nothing broadcasts, nothing goes quadratic.
     *
     * `checkpointDir` = reliable checkpoint for the materialized result (an
     * executor loss after a long link stage re-reads files instead of
     * re-running it); None = localCheckpoint, the single-JVM mode.
+    * Output: (url, begin, end, surface, qid, score, rank).
     */
   def linkLshScored(ments0: DataFrame, entityVecs: DataFrame,
                     k: Int, bits: Int, tables: Int, dimLen: Int,
-                    checkpointDir: Option[String] = None): DataFrame = {
-    import graft.operators.Similarity
-    val ments = ments0
-      .withColumn("_n", Similarity.norm(col("ctx_vec")))
-      .persist() // every hash table re-buckets the same embedded frame
-    val ents = entityVecs.select(col("id").as("qid"), col("vec"))
-      .withColumn("_en", Similarity.norm(col("vec")))
-      .persist()
-    // eager materialize (lineage truncation) before releasing the inputs
-    val out = graft.tables.Checkpoints.eager(
-      linkLshFrame(ments, ents, k, bits, tables, dimLen), checkpointDir)
-    ments.unpersist(); ents.unpersist()
-    out
-  }
+                    checkpointDir: Option[String] = None): DataFrame =
+    Checkpoints.superstep(ments0.sparkSession, checkpointDir) { s =>
+      import graft.operators.Similarity
+      // every hash table re-buckets the same embedded frame
+      val ments = s.hold(ments0.withColumn("_n", Similarity.norm(col("ctx_vec"))))
+      val ents = s.hold(entityVecs.select(col("id").as("qid"), col("vec"))
+        .withColumn("_en", Similarity.norm(col("vec"))))
+      s.materialize(linkLshFrame(ments, ents, k, bits, tables, dimLen))
+    }
 
   /** The join/score/top-K plan itself, persist/checkpoint lifecycle aside
     * (PlanShapeSpec pins this plan). `ments` must carry `_n`, `ents` must be

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -154,10 +155,10 @@ object Media {
       assetsWithTwins(spark, dir)
         .map(a => (a.asset_id, pHashStub(a.bytes))).toDF("doc_id", "sig"),
       "mm2_sigs")
-    val blocks = Dedup.simhashBlocksOf(sigs, maxDist).persist()
-    val out = Dedup.simhashNearDupFrame(blocks, maxDist).localCheckpoint(true)
-    blocks.unpersist()
-    out
+    Checkpoints.superstep(spark, None) { s =>
+      val blocks = s.hold(Dedup.simhashBlocksOf(sigs, maxDist))
+      s.materialize(Dedup.simhashNearDupFrame(blocks, maxDist))
+    }
   }
 
   /** Summary query: decoded media stats per kind (the queries() entry). */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -74,16 +75,14 @@ object AsOfJoin {
           .filter(col("_tag") === 1)
       } else {
         // `u` feeds the stats aggregate, the split frame (twice: boundary
-        // aggregate + final window join) — persist it for the call (the
-        // per-call lifecycle rule) or the upstream left/right pipelines
-        // re-execute up to 3× on exactly the huge-input path this mode
-        // exists for; the result is eagerly materialized so the cache
-        // releases before returning (the split mode trades the single
-        // path's full laziness for bounded recompute, like the dedup ops)
-        u.persist()
-        val out = splitMatched(u, timeSplits).localCheckpoint(eager = true)
-        u.unpersist()
-        out
+        // aggregate + final window join) — hold it for the call or the
+        // upstream left/right pipelines re-execute up to 3× on exactly the
+        // huge-input path this mode exists for (the split mode trades the
+        // single path's full laziness for bounded recompute, like the
+        // dedup ops)
+        Checkpoints.superstep(u.sparkSession, None) { s =>
+          s.materialize(splitMatched(s.hold(u), timeSplits))
+        }
       }
     val matchedOut = matched.select(
       leftCols.map(c => col(s"_l.$c").as(c)) ++

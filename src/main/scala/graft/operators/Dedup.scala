@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,23 +93,15 @@ object Dedup {
   /** MinHash + LSH banding: docs sharing any band bucket are candidate
     * pairs; est_jaccard = fraction of agreeing signature positions.
     * Returns (a, b, est_jaccard) with a < b.
-    *
-    * Lifecycle: the bucket frame is persisted for the duration of the call
-    * only — the (small) survivor pairs are materialized eagerly and the
-    * cache released before returning, so a long-lived driver calling this
-    * per corpus snapshot doesn't accumulate one cached signature frame per
-    * call (CacheHygieneSpec walks every query entry and asserts this).
     */
   def minhashLsh(spark: SparkSession, dir: String, numHashes: Int = 16, bands: Int = 4,
-                 threshold: Double = 0.5): DataFrame = {
-    // both self-join sides read the bucket frame: persist so signatures are
-    // computed once per doc, not once per side
-    val buckets = bandBuckets(minhashSigs(spark, dir, numHashes), numHashes, bands)
-      .persist()
-    val out = minhashLshFrame(buckets, numHashes, threshold).localCheckpoint(true)
-    buckets.unpersist()
-    out
-  }
+                 threshold: Double = 0.5): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      // both self-join sides read the bucket frame: hold it so signatures
+      // are computed once per doc, not once per side
+      val buckets = s.hold(bandBuckets(minhashSigs(spark, dir, numHashes), numHashes, bands))
+      s.materialize(minhashLshFrame(buckets, numHashes, threshold))
+    }
 
   /** (doc_id, sig, bucket) frame: one row per doc per band, bucket = the
     * band id + its signature slice.
@@ -163,14 +156,11 @@ object Dedup {
     */
   def minhashLshIncremental(spark: SparkSession, dir: String, splitId: Long,
                             numHashes: Int = 16, bands: Int = 4,
-                            threshold: Double = 0.5): DataFrame = {
-    val buckets = bandBuckets(minhashSigs(spark, dir, numHashes), numHashes, bands)
-      .persist()
-    val out = minhashLshIncrementalFrame(buckets, splitId, numHashes, threshold)
-      .localCheckpoint(true)
-    buckets.unpersist()
-    out
-  }
+                            threshold: Double = 0.5): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      val buckets = s.hold(bandBuckets(minhashSigs(spark, dir, numHashes), numHashes, bands))
+      s.materialize(minhashLshIncrementalFrame(buckets, splitId, numHashes, threshold))
+    }
 
   /** The incremental candidate join over a (pre-persisted) bucket frame —
     * the plan seam PlanShapeSpec pins: the batch filter sits under exactly
@@ -235,15 +225,11 @@ object Dedup {
     * bits — 4×16-bit at the default maxDist=3 (what the dd2 oracle pins).
     * A fixed block count with a free maxDist would silently lose recall.
     */
-  def simhashNearDup(spark: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {
-    val blocks = simhashBlocksOf(simhashSigs(spark, dir), maxDist)
-      .persist() // feeds both self-join sides
-    // materialize the (small) survivor pairs, then release the block cache
-    // (the per-call lifecycle rule — see minhashLsh)
-    val out = simhashNearDupFrame(blocks, maxDist).localCheckpoint(true)
-    blocks.unpersist()
-    out
-  }
+  def simhashNearDup(spark: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      val blocks = s.hold(simhashBlocksOf(simhashSigs(spark, dir), maxDist)) // feeds both self-join sides
+      s.materialize(simhashNearDupFrame(blocks, maxDist))
+    }
 
   /** Equal-width bit-block frame (doc_id, sig, block, key) over ANY
     * (doc_id, sig) signature frame — the candidate-bucket construction is
@@ -293,16 +279,15 @@ object Dedup {
     * the same hash-partitioning by `g` the self-join needs anyway.
     */
   def ngramJaccardExact(spark: SparkSession, dir: String, threshold: Double = 0.03,
-                        maxDf: Int = 1000): DataFrame = {
-    // persist the capped postings: they feed BOTH self-join sides and the
-    // per-doc sizes — without it the shingle map ran 4× per query (MEMORY_AND
-    // _DISK, so at scale the posting list spills rather than recomputes);
-    // released after the (small) survivor pairs are materialized
-    val inv = cappedPostings(spark, dir, maxDf).persist()
-    val out = ngramJaccardFrame(inv, threshold).localCheckpoint(true)
-    inv.unpersist()
-    out
-  }
+                        maxDf: Int = 1000): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      // hold the capped postings: they feed BOTH self-join sides and the
+      // per-doc sizes — without it the shingle map ran 4× per query
+      // (MEMORY_AND_DISK, so at scale the posting list spills rather than
+      // recomputes)
+      val inv = s.hold(cappedPostings(spark, dir, maxDf))
+      s.materialize(ngramJaccardFrame(inv, threshold))
+    }
 
   /** The df-capped inverted index (doc_id, g): the window count rides the
     * same hash-partitioning by `g` the downstream self-join needs anyway.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,25 +39,22 @@ object Dsir {
     d19Frame(docs(spark, dir), col("lang") === "en", buckets, selectAbove)
 
   /** [[d19DsirWeights]] over any (doc_id, text) frame with an arbitrary
-    * target-domain predicate. The token stream is persisted — it feeds the
+    * target-domain predicate. The token stream is held — it feeds the
     * raw model, the target model, and the scoring pass.
     */
   def d19Frame(documents: DataFrame, isTarget: org.apache.spark.sql.Column,
-               buckets: Int, selectAbove: Double): DataFrame = {
-    val toks = documents
-      .select(col("doc_id"), isTarget.as("tgt"),
-        TextAnalysis.wordsCol(col("text")).as("w"))
-      // explode_outer + null filter: the d12 lesson
-      .select(col("doc_id"), col("tgt"), explode_outer(col("w")).as("word"))
-      .filter(col("word").isNotNull)
-      .select(col("doc_id"), col("tgt"),
-        pmod(Sketches.kmvHash(col("word")), lit(buckets.toLong)).as("b"))
-      .persist()
-    val out = d19Plan(documents, toks, buckets, selectAbove)
-      .localCheckpoint(true)
-    toks.unpersist()
-    out
-  }
+               buckets: Int, selectAbove: Double): DataFrame =
+    Checkpoints.superstep(documents.sparkSession, None) { s =>
+      val toks = s.hold(documents
+        .select(col("doc_id"), isTarget.as("tgt"),
+          TextAnalysis.wordsCol(col("text")).as("w"))
+        // explode_outer + null filter: the d12 lesson
+        .select(col("doc_id"), col("tgt"), explode_outer(col("w")).as("word"))
+        .filter(col("word").isNotNull)
+        .select(col("doc_id"), col("tgt"),
+          pmod(Sketches.kmvHash(col("word")), lit(buckets.toLong)).as("b")))
+      s.materialize(d19Plan(documents, toks, buckets, selectAbove))
+    }
 
   /** The model/score plan over a (pre-persisted) token-bucket stream — the
     * seam the plan-shape spec inspects (the entry's eager checkpoint hides

@@ -83,20 +83,23 @@ object GraphOps {
                   scale: Long = 1000000000000L,
                   checkpointDir: Option[String] = None): DataFrame =
     Checkpoints.superstep(edges0.sparkSession, checkpointDir) { s =>
-      // hold the deduped edge set FIRST: outdeg, edgesOd and nodes all
-      // derive from it — without this the caller's upstream pipeline
-      // (mention detection at kg15) re-runs once per derivation (the
-      // self-join recompute trap triangles documents)
-      val edges = s.hold(edges0.select("src", "dst").distinct())
-      val outdeg = edges.groupBy("src").agg(count(lit(1)).as("od"))
-      val edgesOd = s.hold(edges.join(outdeg, Seq("src")))
-      val nodes = s.hold(edges.select(col("src").as("id"))
-        .unionByName(edges.select(col("dst").as("id")))
-        .distinct())
-      val n = nodes.count()
-      require(n > 0, "pageRankInt needs at least one edge")
-      edgesOd.count() // materialize, then release the raw edge set
-      edges.unpersist()
+      // the raw edge set is held only until edgesOd and nodes are cached
+      val (edgesOd, nodes, n) = Checkpoints.superstep(edges0.sparkSession, None) { raw =>
+        // hold the deduped edge set FIRST: outdeg, edgesOd and nodes all
+        // derive from it — without this the caller's upstream pipeline
+        // (mention detection at kg15) re-runs once per derivation (the
+        // self-join recompute trap triangles documents)
+        val edges = raw.hold(edges0.select("src", "dst").distinct())
+        val outdeg = edges.groupBy("src").agg(count(lit(1)).as("od"))
+        val edgesOd = s.hold(edges.join(outdeg, Seq("src")))
+        val nodes = s.hold(edges.select(col("src").as("id"))
+          .unionByName(edges.select(col("dst").as("id")))
+          .distinct())
+        val n = nodes.count()
+        require(n > 0, "pageRankInt needs at least one edge")
+        edgesOd.count()
+        (edgesOd, nodes, n)
+      }
       val init = scale / n
       val base = (scale * 15L / 100L) / n
 
@@ -131,24 +134,22 @@ object GraphOps {
     * never a url self-join); the per-entity count dim joins once per pair
     * end. Only ids and three scalars shuffle. Returns (a, b, w, lift).
     */
-  def liftScores(urlQid: DataFrame, minShared: Int): DataFrame = {
-    val uq = urlQid.select("url", "qid").distinct().persist()
-    val n = uq.select("url").distinct().count()
-    val docCounts = uq.groupBy("qid").agg(count(lit(1)).as("c"))
-    val out = cooccurEdges(uq, minShared, assumeDistinct = true)
-      .join(docCounts.select(col("qid").as("a"), col("c").as("ca")), Seq("a"))
-      .join(docCounts.select(col("qid").as("b"), col("c").as("cb")), Seq("b"))
-      .select(col("a"), col("b"), col("w"),
-        // ca/cb cast to double BEFORE multiplying: the Long product wraps
-        // past 2^63 once both counts reach ~3e9 (possible at 10^12 pages);
-        // the double product is exact while < 2^53 and degrades gracefully
-        // beyond — the oracle mirrors the same cast order
-        (col("w").cast("double") * n /
-          (col("ca").cast("double") * col("cb").cast("double"))).as("lift"))
-      .localCheckpoint(eager = true)
-    uq.unpersist()
-    out
-  }
+  def liftScores(urlQid: DataFrame, minShared: Int): DataFrame =
+    Checkpoints.superstep(urlQid.sparkSession, None) { s =>
+      val uq = s.hold(urlQid.select("url", "qid").distinct())
+      val n = uq.select("url").distinct().count()
+      val docCounts = uq.groupBy("qid").agg(count(lit(1)).as("c"))
+      s.materialize(cooccurEdges(uq, minShared, assumeDistinct = true)
+        .join(docCounts.select(col("qid").as("a"), col("c").as("ca")), Seq("a"))
+        .join(docCounts.select(col("qid").as("b"), col("c").as("cb")), Seq("b"))
+        .select(col("a"), col("b"), col("w"),
+          // ca/cb cast to double BEFORE multiplying: the Long product wraps
+          // past 2^63 once both counts reach ~3e9 (possible at 10^12 pages);
+          // the double product is exact while < 2^53 and degrades gracefully
+          // beyond — the oracle mirrors the same cast order
+          (col("w").cast("double") * n /
+            (col("ca").cast("double") * col("cb").cast("double"))).as("lift")))
+    }
 
   /** Multi-source bounded-hop BFS: min hop distance from each seed to every
     * node within `maxHops`, the Pregel frontier shape as plain DataFrames.

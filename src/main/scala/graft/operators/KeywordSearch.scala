@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -23,21 +24,20 @@ object KeywordSearch {
   private val k1 = 1.2
   private val b = 0.75
 
-  /** (postings, stats, avgdl, release): postings(doc_id, term, tf, dl), one
-    * row per distinct (doc, term); stats(term, df, idf) with N docs folded
-    * into idf. The term stream and the raw per-(doc, term) aggregate are
-    * persisted — terms feed the tf aggregate AND the doc-length rollup AND
-    * the avgdl constant, the raw aggregate feeds the tf join side AND the
-    * df rollup, so without the caches the explode executed three times and
-    * the aggregate twice per build (round-6). `release()` drops both
-    * caches; call it once everything derived is materialized.
+  /** (postings, stats, avgdl): postings(doc_id, term, tf, dl), one row per
+    * distinct (doc, term); stats(term, df, idf) with N docs folded into
+    * idf. The term stream and the raw per-(doc, term) aggregate are held in
+    * the caller's scope `s` — terms feed the tf aggregate AND the
+    * doc-length rollup AND the avgdl constant, the raw aggregate feeds the
+    * tf join side AND the df rollup, so without the caches the explode
+    * executed three times and the aggregate twice per build (round-6).
     */
-  def buildIndex(spark: SparkSession, docs: DataFrame): (DataFrame, DataFrame, Double, () => Unit) = {
-    val terms = docs
+  private def buildIndex(s: Checkpoints.Superstep,
+                         docs: DataFrame): (DataFrame, DataFrame, Double) = {
+    val terms = s.hold(docs
       .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\W+")).as("term"))
-      .filter(length(col("term")) > 0)
-      .persist()
-    val postings = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")).persist()
+      .filter(length(col("term")) > 0))
+    val postings = s.hold(terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val docLen = terms.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val withLen = postings.join(docLen, Seq("doc_id"))
     // one driver action for both corpus constants (N and avgdl)
@@ -47,7 +47,7 @@ object KeywordSearch {
     val avgdl = consts.getDouble(1)
     val stats = postings.groupBy("term").agg(count(lit(1)).as("df"))
       .withColumn("idf", log((lit(n.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-    (withLen, stats, avgdl, () => { terms.unpersist(); postings.unpersist() })
+    (withLen, stats, avgdl)
   }
 
   /** A built, reusable index: postings/stats persisted so every subsequent
@@ -65,15 +65,18 @@ object KeywordSearch {
 
   /** Build once, query many times: the serving frames are persisted AND
     * materialized up front, so the build-side caches can be released here
-    * rather than leaking for the index's lifetime.
+    * rather than leaking for the index's lifetime. The serving frames are
+    * the caller's until [[Index.unpersist]] (released here only if the
+    * build throws).
     */
-  def index(spark: SparkSession, docs: DataFrame): Index = {
-    val (postings, stats, avgdl, release) = buildIndex(spark, docs)
-    val idx = new Index(postings.persist(), stats.persist(), avgdl)
-    idx.postings.count(); idx.stats.count()
-    release()
-    idx
-  }
+  def index(spark: SparkSession, docs: DataFrame): Index =
+    Checkpoints.superstep(spark, None) { s =>
+      val (postings, stats, avgdl) = buildIndex(s, docs)
+      val idx = new Index(postings.persist(), stats.persist(), avgdl)
+      try { idx.postings.count(); idx.stats.count() }
+      catch { case e: Throwable => idx.unpersist(); throw e }
+      idx
+    }
 
   private def searchIndexed(spark: SparkSession, idx: Index,
                             queries: Seq[(Long, String)], k: Int): DataFrame = {
@@ -96,21 +99,15 @@ object KeywordSearch {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Match-or BM25 top-K for a set of queries (query_id, query_text).
-    * The one-shot path persists the postings for the call and releases them
-    * after the (small) result materializes — without the cache the terms
-    * explode and the postings aggregate each executed twice (the tf join
-    * side AND the df rollup read postings; round-6). Same per-call
-    * lifecycle rule as Dedup.minhashLsh.
+  /** Match-or BM25 top-K for a set of queries (query_id, query_text):
+    * a one-shot build over `docs` whose caches last for the call.
     */
   def search(spark: SparkSession, docs: DataFrame, queries: Seq[(Long, String)],
-             k: Int = 10): DataFrame = {
-    val (postings, stats, avgdl, release) = buildIndex(spark, docs)
-    val out = searchIndexed(spark, new Index(postings, stats, avgdl), queries, k)
-      .localCheckpoint(eager = true)
-    release()
-    out
-  }
+             k: Int = 10): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      val (postings, stats, avgdl) = buildIndex(s, docs)
+      s.materialize(searchIndexed(spark, new Index(postings, stats, avgdl), queries, k))
+    }
 
   /** queries() entry: deterministic query set over the documents table. */
   def searchDocs(spark: SparkSession, dir: String): DataFrame = {

@@ -4,6 +4,7 @@ import graft.canon.AliasEdges
 import graft.link.{Embedder, Linker}
 import graft.model.WikidataJson
 import graft.pipeline.{PagesGen, TextifyStage}
+import graft.tables.Checkpoints
 import graft.triples.Triples
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,34 +54,42 @@ object KgQueries {
         Linker.resolvedMentions(spark, texts, Linker.mentionDict(labelsDf)), "kg2_mentions_raw"))
 
   /** Mention detection over the extracted text. */
-  def mentions(spark: SparkSession, dir: String): DataFrame =
-    mentionsOf(spark, extractText(spark, dir), labels(spark))
+  def mentions(spark: SparkSession, dir: String): DataFrame = {
+    val labelsDf = labels(spark)
+    mentionsOf(spark, TextifyStage.render(spark, payloads(spark), labelsDf), labelsDf)
+  }
+
+  /** (url, qid) for every candidate of every resolved mention over the
+    * extracted text — the entity co-occurrence input of the graph queries.
+    * `oracleFrame` names the resolved frame materialized for the oracle.
+    */
+  private def urlQid(spark: SparkSession, oracleFrame: Option[String] = None): DataFrame = {
+    val labelsDf = labels(spark)
+    val resolved = Linker.resolvedMentions(spark,
+      TextifyStage.render(spark, payloads(spark), labelsDf), Linker.mentionDict(labelsDf))
+    Linker.explodeCandidates(oracleFrame.fold(resolved)(materializeForOracle(resolved, _)))
+      .select("url", "qid")
+  }
 
   /** Entity-link scoring: top-K per mention. The texts dataset is computed
-    * once and persisted — mention detection AND entity-vector embedding both
+    * once and held — mention detection AND entity-vector embedding both
     * read it, so extract/textify no longer runs twice per links query.
     * Under graft.Verify the context-embedded mention frame and the entity
     * vec table are materialized, so the DuckDB oracle replays the relational
     * half (candidate equi-join + bit-exact cosine + per-mention top-K
-    * window) as a hard rows+schema+hash check.
+    * window) as a hard rows+schema+hash check. The join/score/top-K plan
+    * itself is pinned on the scoreTopK seam in PlanShapeSpec.
     */
-  def links(spark: SparkSession, dir: String): DataFrame = {
-    val labelsDf = labels(spark)
-    val texts = TextifyStage.render(spark, payloads(spark), labelsDf).persist()
-    // materialize the (small) link rows eagerly, then release the texts
-    // cache — a long-lived driver otherwise leaks one full-corpus cached
-    // frame per call (the Linker.resolvedMentions lifecycle pattern;
-    // CacheHygieneSpec asserts nothing stays cached). The join/score/top-K
-    // plan itself is pinned on the scoreTopK seam in PlanShapeSpec.
-    val out = Linker.scoreTopK(
-      materializeForOracle(Linker.contextVecs(mentionsOf(spark, texts, labelsDf)), "kg3_mentions"),
-      materializeForOracle(entityVecsOf(spark, texts), "kg3_vecs"),
-      k = 5)
-      .withColumn("score", round(col("score"), 6))
-      .localCheckpoint(true)
-    texts.unpersist()
-    out
-  }
+  def links(spark: SparkSession, dir: String): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      val labelsDf = labels(spark)
+      val texts = s.hold(TextifyStage.render(spark, payloads(spark), labelsDf))
+      s.materialize(Linker.scoreTopK(
+        materializeForOracle(Linker.contextVecs(mentionsOf(spark, texts, labelsDf)), "kg3_mentions"),
+        materializeForOracle(entityVecsOf(spark, texts), "kg3_vecs"),
+        k = 5)
+        .withColumn("score", round(col("score"), 6)))
+    }
 
   /** Item-text embeddings (id, vec) over the rendered texts. */
   private def entityVecsOf(spark: SparkSession, texts: DataFrame): DataFrame = {
@@ -95,25 +104,23 @@ object KgQueries {
     * entity vecs are materialized; the DuckDB oracle recomputes the planes,
     * buckets, join, cosine and window from them (hard rows+schema+hash).
     */
-  def linksLsh(spark: SparkSession, dir: String): DataFrame = {
-    val labelsDf = labels(spark)
-    val texts = TextifyStage.render(spark, payloads(spark), labelsDf).persist()
-    val resolved = Linker.resolvedMentions(spark, texts, Linker.mentionDict(labelsDf))
-    // bits=10: this corpus' embeddings are CORRELATED (shared vocabulary),
-    // so 6-bit buckets collided ~3x above the uniform estimate and the
-    // candidate stream hit ~5M rows; 1024 buckets keep it ~100k. bits is
-    // the recall-vs-candidate-volume dial — tune per corpus.
-    // linkLshScored is already eager (internal localCheckpoint), so the
-    // texts cache can be released as soon as it returns (same lifecycle
-    // rule as links above).
-    val out = Linker.linkLshScored(
-      materializeForOracle(Linker.embedMentions(resolved), "kg11_mentions"),
-      materializeForOracle(entityVecsOf(spark, texts), "kg11_vecs"),
-      k = 5, bits = 10, tables = 6, dimLen = graft.link.Embedder.dim)
-      .withColumn("score", round(col("score"), 6))
-    texts.unpersist()
-    out
-  }
+  def linksLsh(spark: SparkSession, dir: String): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      val labelsDf = labels(spark)
+      val texts = s.hold(TextifyStage.render(spark, payloads(spark), labelsDf))
+      val resolved = Linker.resolvedMentions(spark, texts, Linker.mentionDict(labelsDf))
+      // bits=10: this corpus' embeddings are CORRELATED (shared vocabulary),
+      // so 6-bit buckets collided ~3x above the uniform estimate and the
+      // candidate stream hit ~5M rows; 1024 buckets keep it ~100k. bits is
+      // the recall-vs-candidate-volume dial — tune per corpus.
+      // linkLshScored materializes its result, so nothing reads the texts
+      // after it returns
+      Linker.linkLshScored(
+        materializeForOracle(Linker.embedMentions(resolved), "kg11_mentions"),
+        materializeForOracle(entityVecsOf(spark, texts), "kg11_vecs"),
+        k = 5, bits = 10, tables = 6, dimLen = graft.link.Embedder.dim)
+        .withColumn("score", round(col("score"), 6))
+    }
 
   /** The corpus payloads parsed to en claim rows (the non-SQL kernel of
     * kg4/kg13/kg18/kg29).
@@ -216,13 +223,8 @@ object KgQueries {
     * candidate explode → pair join → orientation → wedge-close from the
     * materialized mention frame.
     */
-  def triangles(spark: SparkSession, dir: String): DataFrame = {
-    val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
-    val urlQid = Linker.explodeCandidates(
-      materializeForOracle(resolved, "kg14_mentions")).select("url", "qid")
-    GraphOps.triangles(GraphOps.cooccurEdges(urlQid, minShared = 2))
-  }
+  def triangles(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.triangles(GraphOps.cooccurEdges(urlQid(spark, Some("kg14_mentions")), minShared = 2))
 
   /** Exact-integer PageRank over the symmetrized co-occurrence graph (the
     * "which entities anchor this corpus" query). The edge build is the
@@ -231,19 +233,8 @@ object KgQueries {
     * [[GraphOps.pageRankInt]] for why integer, [[SparkEntry.oracleSql]]
     * kg15 for the unrolled SQL.
     */
-  def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
-    val urlQid = Linker.explodeCandidates(resolved).select("url", "qid")
-    // checkpoint the undirected edges ONCE: both union branches (and every
-    // frame pageRankInt derives) would otherwise re-run the mention
-    // front-end per reference in bench mode (materializeForOracle is a
-    // pass-through there)
-    val und = GraphOps.cooccurEdges(urlQid, minShared = 2).localCheckpoint(true)
-    val sym = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-    GraphOps.pageRankInt(materializeForOracle(sym, "kg15_edges"), iters = 10)
-  }
+  def pagerank(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.pageRankInt(hubGraph(spark, dir, "kg15_edges", cost = None)._1, iters = 10)
 
   /** Top-50 most-associated entity pairs by lift (the "which entities
     * belong together" mining query). The distinct (url, qid) frame is the
@@ -251,13 +242,9 @@ object KgQueries {
     * the two IEEE-double ops and the ranked cut — see
     * [[GraphOps.liftScores]] for why lift and not log-PMI.
     */
-  def lift(spark: SparkSession, dir: String): DataFrame = {
-    val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
-    val urlQid = Linker.explodeCandidates(resolved).select("url", "qid").distinct()
-    GraphOps.liftScores(materializeForOracle(urlQid, "kg17_urlqid"), minShared = 2)
+  def lift(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.liftScores(materializeForOracle(urlQid(spark).distinct(), "kg17_urlqid"), minShared = 2)
       .orderBy(col("lift").desc, col("a"), col("b")).limit(50)
-  }
 
   /** Bounded-hop BFS from the 3 highest-degree hub entities of the
     * co-occurrence graph (ties by id) — the "how far is everything from
@@ -291,20 +278,20 @@ object KgQueries {
       GraphOps.randomWalks(edges, walkLen = 3).localCheckpoint(true))
   }
 
-  /** Shared kg16/kg25 traversal setup: the symmetrized co-occurrence edge
-    * frame (optionally cost-weighted), materialized for the oracle under
-    * `frameName`, plus the top-3 out-degree hub seeds (ties by id). One
-    * builder so the two graph queries — and their chained-CTE oracles,
-    * which replay this exact seed selection — can never diverge.
+  /** Shared kg15/kg16/kg25 traversal setup: the symmetrized co-occurrence
+    * edge frame (optionally cost-weighted), materialized for the oracle
+    * under `frameName`, plus the top-3 out-degree hub seeds (ties by id;
+    * lazy, so a caller that drops them pays nothing). One builder so the
+    * graph queries — and their chained-CTE oracles, which replay this exact
+    * seed selection — can never diverge.
     */
   private def hubGraph(spark: SparkSession, dir: String, frameName: String,
                        cost: Option[Column]): (DataFrame, DataFrame) = {
-    val labelsDf = labels(spark)
-    val resolved = Linker.resolvedMentions(spark, extractText(spark, dir), Linker.mentionDict(labelsDf))
-    val urlQid = Linker.explodeCandidates(resolved).select("url", "qid")
-    // checkpointed once: seeds AND the traversal both read the edge frame
-    // (see pagerank above for why)
-    val und = GraphOps.cooccurEdges(urlQid, minShared = 2).localCheckpoint(true)
+    // checkpoint the undirected edges ONCE: both union branches, the seeds
+    // and every frame the traversal derives would otherwise re-run the
+    // mention front-end per reference in bench mode (materializeForOracle
+    // is a pass-through there)
+    val und = GraphOps.cooccurEdges(urlQid(spark), minShared = 2).localCheckpoint(true)
     val costCols = cost.map(_.as("cost")).toSeq
     val sym = und.select(col("a").as("src") +: col("b").as("dst") +: costCols: _*)
       .unionByName(und.select(col("b").as("src") +: col("a").as("dst") +: costCols: _*))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -80,59 +81,56 @@ object Mixture {
     val base = documents.select(
       col("doc_id"), col("lang"), orderHash.as("h"),
       TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-    val parted = base
-      .repartitionByRange(nParts, col("lang"), col("h"), col("doc_id"))
-      .sortWithinPartitions("lang", "h", "doc_id")
-      .as[(Long, String, Long, Long)]
-      .persist()
-    // pass 1: per-partition per-stratum totals (runs once thanks to the
-    // persist; released before returning — result is eagerly materialized)
-    val partTotals = parted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val sums = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { case (_, lang, _, n) => sums(lang) = sums.getOrElse(lang, 0L) + n }
-      sums.iterator.map { case (lang, s) => (pid, lang, s) }
-    }.collect() // bounded: nPartitions × nStrata rows
-    // offsets: per (pid, lang), tokens of that lang in all earlier partitions
-    val offsets: Map[(Int, String), Long] = {
-      val byLang = partTotals.groupBy(_._2)
-      byLang.flatMap { case (lang, rows) =>
-        val sorted = rows.sortBy(_._1)
-        val cums = sorted.scanLeft(0L)(_ + _._3)
-        sorted.zip(cums).map { case ((pid, _, _), before) => (pid, lang) -> before }
-      }
-    }
-    // partitions where EVERY present stratum's offset already exceeds its
-    // budget can't emit anything — pass 2 returns an empty iterator without
-    // consuming the input, so their rows are never even pulled from the
-    // scan (selection is a tiny hash-prefix at real scale: most of the
-    // corpus lives in skippable partitions)
-    // <= not <: at off == budget a zero-token doc still satisfies
-    // `cum <= budget` and the window form keeps it — the partition must run
-    val keepPids: Set[Int] = offsets.collect {
-      case ((pid, lang), off) if off <= budgetFor(budgets, budgetOther)(lang) => pid
-    }.toSet
-    val offB = spark.sparkContext.broadcast(offsets)
-    val budB = spark.sparkContext.broadcast((budgets, budgetOther))
-    val keepB = spark.sparkContext.broadcast(keepPids)
-    // pass 2: running sum seeded by the partition's offset, budget filter
-    val out = parted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      if (!keepB.value.contains(pid)) Iterator.empty
-      else {
-        val (buds, other) = budB.value
-        val running = scala.collection.mutable.HashMap.empty[String, Long]
-        it.flatMap { case (id, lang, _, n) =>
-          val cum = running.getOrElse(lang,
-            offB.value.getOrElse((pid, lang), 0L)) + n
-          running(lang) = cum
-          if (cum <= budgetFor(buds, other)(lang)) Some((id, lang, n, cum)) else None
+    Checkpoints.superstep(spark, None) { s =>
+      val parted = s.hold(base
+        .repartitionByRange(nParts, col("lang"), col("h"), col("doc_id"))
+        .sortWithinPartitions("lang", "h", "doc_id")
+        .as[(Long, String, Long, Long)])
+      // pass 1: per-partition per-stratum totals (runs once thanks to the hold)
+      val partTotals = parted.mapPartitions { it =>
+        val pid = TaskContext.getPartitionId()
+        val sums = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+        it.foreach { case (_, lang, _, n) => sums(lang) = sums.getOrElse(lang, 0L) + n }
+        sums.iterator.map { case (lang, total) => (pid, lang, total) }
+      }.collect() // bounded: nPartitions × nStrata rows
+      // offsets: per (pid, lang), tokens of that lang in all earlier partitions
+      val offsets: Map[(Int, String), Long] = {
+        val byLang = partTotals.groupBy(_._2)
+        byLang.flatMap { case (lang, rows) =>
+          val sorted = rows.sortBy(_._1)
+          val cums = sorted.scanLeft(0L)(_ + _._3)
+          sorted.zip(cums).map { case ((pid, _, _), before) => (pid, lang) -> before }
         }
       }
-    }.toDF("doc_id", "lang", "n_tokens", "cum_tokens")
-      .localCheckpoint(true)
-    parted.unpersist()
-    out
+      // partitions where EVERY present stratum's offset already exceeds its
+      // budget can't emit anything — pass 2 returns an empty iterator without
+      // consuming the input, so their rows are never even pulled from the
+      // scan (selection is a tiny hash-prefix at real scale: most of the
+      // corpus lives in skippable partitions)
+      // <= not <: at off == budget a zero-token doc still satisfies
+      // `cum <= budget` and the window form keeps it — the partition must run
+      val keepPids: Set[Int] = offsets.collect {
+        case ((pid, lang), off) if off <= budgetFor(budgets, budgetOther)(lang) => pid
+      }.toSet
+      val offB = spark.sparkContext.broadcast(offsets)
+      val budB = spark.sparkContext.broadcast((budgets, budgetOther))
+      val keepB = spark.sparkContext.broadcast(keepPids)
+      // pass 2: running sum seeded by the partition's offset, budget filter
+      s.materialize(parted.mapPartitions { it =>
+        val pid = TaskContext.getPartitionId()
+        if (!keepB.value.contains(pid)) Iterator.empty
+        else {
+          val (buds, other) = budB.value
+          val running = scala.collection.mutable.HashMap.empty[String, Long]
+          it.flatMap { case (id, lang, _, n) =>
+            val cum = running.getOrElse(lang,
+              offB.value.getOrElse((pid, lang), 0L)) + n
+            running(lang) = cum
+            if (cum <= budgetFor(buds, other)(lang)) Some((id, lang, n, cum)) else None
+          }
+        }
+      }.toDF("doc_id", "lang", "n_tokens", "cum_tokens"))
+    }
   }
 
   /** Reference form: the per-stratum running-total window — correct, and

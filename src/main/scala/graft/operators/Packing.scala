@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,43 +49,41 @@ object Packing {
     import spark.implicits._
     val nParts = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
-    val parted = documents.select(
-        col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-      .repartitionByRange(nParts, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .as[(Long, Long)]
-      .persist()
-    // pass 1: per-partition token totals (runs once thanks to the persist)
-    val partTotals = parted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var s = 0L
-      it.foreach { case (_, n) => s += n }
-      Iterator.single((pid, s))
-    }.collect() // bounded: nPartitions rows
-    val offsets: Map[Int, Long] = {
-      val sorted = partTotals.sortBy(_._1)
-      sorted.map(_._1).zip(sorted.scanLeft(0L)(_ + _._2)).toMap
-    }
-    val offB = spark.sparkContext.broadcast(offsets)
-    // pass 2: running offset seeded by the partition's exclusive total
-    val out = parted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var run = offB.value.getOrElse(pid, 0L)
-      it.map { case (id, n) =>
-        val start = run
-        run += n
-        if (n == 0L) (id, n, start, None: Option[Long], None: Option[Long], 0L)
-        else {
-          val fw = start / capacity
-          val lw = (start + n - 1) / capacity
-          (id, n, start, Some(fw), Some(lw), lw - fw + 1)
-        }
+    Checkpoints.superstep(spark, None) { s =>
+      val parted = s.hold(documents.select(
+          col("doc_id"),
+          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
+        .repartitionByRange(nParts, col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .as[(Long, Long)])
+      // pass 1: per-partition token totals (runs once thanks to the hold)
+      val partTotals = parted.mapPartitions { it =>
+        val pid = TaskContext.getPartitionId()
+        var total = 0L
+        it.foreach { case (_, n) => total += n }
+        Iterator.single((pid, total))
+      }.collect() // bounded: nPartitions rows
+      val offsets: Map[Int, Long] = {
+        val sorted = partTotals.sortBy(_._1)
+        sorted.map(_._1).zip(sorted.scanLeft(0L)(_ + _._2)).toMap
       }
-    }.toDF("doc_id", "n_tokens", "start_off", "first_window", "last_window", "n_windows")
-      .localCheckpoint(true)
-    parted.unpersist()
-    out
+      val offB = spark.sparkContext.broadcast(offsets)
+      // pass 2: running offset seeded by the partition's exclusive total
+      s.materialize(parted.mapPartitions { it =>
+        val pid = TaskContext.getPartitionId()
+        var run = offB.value.getOrElse(pid, 0L)
+        it.map { case (id, n) =>
+          val start = run
+          run += n
+          if (n == 0L) (id, n, start, None: Option[Long], None: Option[Long], 0L)
+          else {
+            val fw = start / capacity
+            val lw = (start + n - 1) / capacity
+            (id, n, start, Some(fw), Some(lw), lw - fw + 1)
+          }
+        }
+      }.toDF("doc_id", "n_tokens", "start_off", "first_window", "last_window", "n_windows"))
+    }
   }
 
   /** Reference form: the global running-total window — correct, and the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -213,46 +214,43 @@ object Similarity {
   def trainedCentroids(e0: DataFrame, nCells: Int, iters: Int): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    val e = e0.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].persist()
-    var cents: Array[Array[Float]] = e.filter(_._1 < nCells).collect()
-      .sortBy(_._1).map(_._2.toArray)
-    if (cents.isEmpty) {
-      e.unpersist()
-      return Seq.empty[(Int, Seq[Float])].toDF("cell", "cvec")
-        .withColumn("cvec", col("cvec").cast("array<float>"))
-    }
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val assigned = e.map { case (_, v) =>
-        val arr = v.toArray
-        var best = 0
-        var bestCos = Double.NegativeInfinity
-        var c = 0
-        while (c < bc.value.length) {
-          val cos = graft.link.Embedder.cosine(arr, bc.value(c))
-          if (cos > bestCos) { bestCos = cos; best = c } // strict: ties keep lower c
-          c += 1
+    val trained = Checkpoints.superstep(spark, None) { s =>
+      val e = s.hold(e0.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])])
+      var cents: Array[Array[Float]] = e.filter(_._1 < nCells).collect()
+        .sortBy(_._1).map(_._2.toArray)
+      if (cents.nonEmpty) for (_ <- 0 until iters) {
+        val bc = spark.sparkContext.broadcast(cents)
+        val assigned = e.map { case (_, v) =>
+          val arr = v.toArray
+          var best = 0
+          var bestCos = Double.NegativeInfinity
+          var c = 0
+          while (c < bc.value.length) {
+            val cos = graft.link.Embedder.cosine(arr, bc.value(c))
+            if (cos > bestCos) { bestCos = cos; best = c } // strict: ties keep lower c
+            c += 1
+          }
+          (best, v)
+        }.toDF("cell", "v")
+        // DECIMAL sum, not double: decimal addition is exact and therefore
+        // order-independent, so the codebook cannot drift with shuffle task
+        // completion order — the determinism the oracle gate (and the spec's
+        // c1 == c2 assertion) relies on
+        val means = assigned
+          .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
+          .groupBy("cell", "i")
+          .agg((sum(col("x").cast("decimal(38,18)")) / count(lit(1))).as("m"))
+          .collect()
+        val next = cents.map(_.clone()) // empty cells keep the previous centroid
+        means.foreach { r =>
+          next(r.getInt(0))(r.getInt(1)) = r.getDecimal(2).doubleValue().toFloat
         }
-        (best, v)
-      }.toDF("cell", "v")
-      // DECIMAL sum, not double: decimal addition is exact and therefore
-      // order-independent, so the codebook cannot drift with shuffle task
-      // completion order — the determinism the oracle gate (and the spec's
-      // c1 == c2 assertion) relies on
-      val means = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("cell", "i")
-        .agg((sum(col("x").cast("decimal(38,18)")) / count(lit(1))).as("m"))
-        .collect()
-      val next = cents.map(_.clone()) // empty cells keep the previous centroid
-      means.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDecimal(2).doubleValue().toFloat
+        cents = next
+        bc.destroy()
       }
-      cents = next
-      bc.destroy()
+      cents
     }
-    e.unpersist()
-    cents.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
+    trained.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
       .toDF("cell", "cvec")
       .withColumn("cvec", col("cvec").cast("array<float>"))
   }
@@ -351,48 +349,47 @@ object Similarity {
                           iters: Int): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    val qe = e0.select(col("vec_id"), col("q"))
-      .as[(Long, Seq[Long])].persist()
-    val seed = qe.filter(_._1 < ksub).collect().sortBy(_._1).map(_._2.toArray)
-    if (seed.isEmpty) {
-      qe.unpersist()
-      return Seq.empty[(Int, Int, Seq[Long])].toDF("sub", "code", "qvec")
-    }
-    var cents: Array[Array[Array[Long]]] = Array.tabulate(m, ksub) { (s, c) =>
-      seed(c % seed.length).slice(s * dsub, (s + 1) * dsub)
-    }
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val assigned = qe.flatMap { case (_, v) =>
-        (0 until m).map { s =>
-          val sv = v.slice(s * dsub, (s + 1) * dsub).toArray
-          var best = 0; var bestD = Long.MaxValue; var c = 0
-          while (c < ksub) {
-            var d = 0L; var i = 0
-            while (i < dsub) { val df = sv(i) - bc.value(s)(c)(i); d += df * df; i += 1 }
-            if (d < bestD) { bestD = d; best = c } // strict: ties keep lower c
-            c += 1
-          }
-          (s, best, sv.toSeq)
+    Checkpoints.superstep(spark, None) { s =>
+      val qe = s.hold(e0.select(col("vec_id"), col("q")).as[(Long, Seq[Long])])
+      val seed = qe.filter(_._1 < ksub).collect().sortBy(_._1).map(_._2.toArray)
+      if (seed.isEmpty) Seq.empty[(Int, Int, Seq[Long])].toDF("sub", "code", "qvec")
+      else {
+        var cents: Array[Array[Array[Long]]] = Array.tabulate(m, ksub) { (sub, c) =>
+          seed(c % seed.length).slice(sub * dsub, (sub + 1) * dsub)
         }
-      }.toDF("sub", "code", "sv")
-      val sums = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("i", "x")))
-        .groupBy("sub", "code", "i")
-        .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.map(_.clone()))
-      sums.foreach { r =>
-        // half-up integer mean ⌊(sx + n/2)/n⌋ — exact, no float in the loop
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-          Math.floorDiv(2 * r.getLong(3) + r.getLong(4), 2 * r.getLong(4))
+        for (_ <- 0 until iters) {
+          val bc = spark.sparkContext.broadcast(cents)
+          val assigned = qe.flatMap { case (_, v) =>
+            (0 until m).map { sub =>
+              val sv = v.slice(sub * dsub, (sub + 1) * dsub).toArray
+              var best = 0; var bestD = Long.MaxValue; var c = 0
+              while (c < ksub) {
+                var d = 0L; var i = 0
+                while (i < dsub) { val df = sv(i) - bc.value(sub)(c)(i); d += df * df; i += 1 }
+                if (d < bestD) { bestD = d; best = c } // strict: ties keep lower c
+                c += 1
+              }
+              (sub, best, sv.toSeq)
+            }
+          }.toDF("sub", "code", "sv")
+          val sums = assigned
+            .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("i", "x")))
+            .groupBy("sub", "code", "i")
+            .agg(sum("x").as("sx"), count(lit(1)).as("n"))
+            .collect()
+          val next = cents.map(_.map(_.clone()))
+          sums.foreach { r =>
+            // half-up integer mean ⌊(sx + n/2)/n⌋ — exact, no float in the loop
+            next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+              Math.floorDiv(2 * r.getLong(3) + r.getLong(4), 2 * r.getLong(4))
+          }
+          cents = next
+          bc.destroy()
+        }
+        (for { sub <- 0 until m; c <- 0 until ksub } yield (sub, c, cents(sub)(c).toSeq))
+          .toDF("sub", "code", "qvec")
       }
-      cents = next
-      bc.destroy()
     }
-    qe.unpersist()
-    (for { s <- 0 until m; c <- 0 until ksub } yield (s, c, cents(s)(c).toSeq))
-      .toDF("sub", "code", "qvec")
   }
 
   /** s8: product-quantization ANN — the compressed-corpus scale path. Each
@@ -630,25 +627,23 @@ object Similarity {
   def blockingQuality(spark: SparkSession, dir: String, threshold: Double = 0.3,
                       bits: Int = 10, tables: Int = 4, dimLen: Int = 64): DataFrame = {
     import spark.implicits._
-    val e = emb(spark, dir).withColumn("_n", norm(col("embedding"))).persist()
-    val cand = (0 until tables).map { t =>
-      val withB = e.select(col("vec_id"),
-        lshBucket(col("embedding"), dimLen, bits, seed = 7L + t).as("bucket"))
-      withB.select(col("bucket"), col("vec_id").as("a"))
-        .join(withB.select(col("bucket"), col("vec_id").as("b")), Seq("bucket"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-    }.reduce(_ unionByName _).dropDuplicates("a", "b").persist()
-    // truth DERIVES from the s3 baseline itself (not an inline replica), so
-    // the audit can never drift from the comparison semantics it claims to
-    // measure against; the shared seam reuses the persisted frame rather
-    // than re-scanning the parquet
-    val truth = exactNearDupPairs(e, threshold).select("a", "b").persist()
-    val nVec = e.count()
-    val nCand = cand.count()
-    val nTruth = truth.count()
-    val nCovered = truth.join(cand, Seq("a", "b")).count()
-    e.unpersist(); cand.unpersist(); truth.unpersist()
+    val (nVec, nCand, nTruth, nCovered) = Checkpoints.superstep(spark, None) { s =>
+      val e = s.hold(emb(spark, dir).withColumn("_n", norm(col("embedding"))))
+      val cand = s.hold((0 until tables).map { t =>
+        val withB = e.select(col("vec_id"),
+          lshBucket(col("embedding"), dimLen, bits, seed = 7L + t).as("bucket"))
+        withB.select(col("bucket"), col("vec_id").as("a"))
+          .join(withB.select(col("bucket"), col("vec_id").as("b")), Seq("bucket"))
+          .filter(col("a") < col("b"))
+          .select("a", "b")
+      }.reduce(_ unionByName _).dropDuplicates("a", "b"))
+      // truth DERIVES from the s3 baseline itself (not an inline replica), so
+      // the audit can never drift from the comparison semantics it claims to
+      // measure against; the shared seam reuses the held frame rather than
+      // re-scanning the parquet
+      val truth = s.hold(exactNearDupPairs(e, threshold).select("a", "b"))
+      (e.count(), cand.count(), truth.count(), truth.join(cand, Seq("a", "b")).count())
+    }
     val nTotal = nVec * (nVec - 1) / 2
     Seq((nVec, nTotal, nCand, nTruth, nCovered,
       if (nTruth == 0) 1.0 else nCovered.toDouble / nTruth.toDouble,

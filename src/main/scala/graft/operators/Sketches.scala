@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -144,40 +145,38 @@ object Sketches {
     * comparison; the sample path is the 100 TB pattern — no global
     * per-group sort, k triples per group cross the shuffle.
     */
-  def d10QuantileSample(spark: SparkSession, dir: String, k: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sampler = udaf(new BottomKSampleAgg(k))
-    val docs = Relational.table(spark, dir, "documents")
-      .filter(col("doc_id").isNotNull && col("n_chars").isNotNull) // typed
-        // agg inputs are non-nullable Longs; oracle filters identically
-      .select(col("lang"), col("doc_id"), col("n_chars"),
-        kmvHash(col("doc_id").cast("string")).as("h"))
-      .persist() // feeds BOTH the sampled and exact subtrees: scan + md5
-                 // hashing must run once, not once per consumer
+  def d10QuantileSample(spark: SparkSession, dir: String, k: Int = 64): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      import org.apache.spark.sql.expressions.Window
+      val sampler = udaf(new BottomKSampleAgg(k))
+      // feeds BOTH the sampled and exact subtrees: scan + md5 hashing must
+      // run once, not once per consumer
+      val docs = s.hold(Relational.table(spark, dir, "documents")
+        .filter(col("doc_id").isNotNull && col("n_chars").isNotNull) // typed
+          // agg inputs are non-nullable Longs; oracle filters identically
+        .select(col("lang"), col("doc_id"), col("n_chars"),
+          kmvHash(col("doc_id").cast("string")).as("h")))
 
-    val sampled = docs.groupBy("lang")
-      .agg(sampler(col("h"), col("doc_id"), col("n_chars")).as("sample"))
-      .select(col("lang"), size(col("sample")).as("m"),
-        sort_array(expr("transform(sample, x -> x._3)")).as("sv"))
-      .select(col("lang"), col("m"),
-        element_at(col("sv"), expr("cast((m - 1) div 2 as int) + 1")).as("est_p50"),
-        element_at(col("sv"), expr("cast(((m - 1) * 9) div 10 as int) + 1")).as("est_p90"))
+      val sampled = docs.groupBy("lang")
+        .agg(sampler(col("h"), col("doc_id"), col("n_chars")).as("sample"))
+        .select(col("lang"), size(col("sample")).as("m"),
+          sort_array(expr("transform(sample, x -> x._3)")).as("sv"))
+        .select(col("lang"), col("m"),
+          element_at(col("sv"), expr("cast((m - 1) div 2 as int) + 1")).as("est_p50"),
+          element_at(col("sv"), expr("cast(((m - 1) * 9) div 10 as int) + 1")).as("est_p90"))
 
-    val wOrd = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-    val wAll = Window.partitionBy("lang")
-    val exact = docs
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .groupBy("lang").agg(
-        max(col("n")).as("n_docs"),
-        max(when(expr("rn = (n - 1) div 2 + 1"), col("n_chars"))).as("exact_p50"),
-        max(when(expr("rn = ((n - 1) * 9) div 10 + 1"), col("n_chars"))).as("exact_p90"))
-    val out = exact.join(sampled, Seq("lang"))
-      .select("lang", "n_docs", "m", "est_p50", "est_p90", "exact_p50", "exact_p90")
-      .localCheckpoint(true)
-    docs.unpersist()
-    out
-  }
+      val wOrd = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
+      val wAll = Window.partitionBy("lang")
+      val exact = docs
+        .withColumn("rn", row_number().over(wOrd))
+        .withColumn("n", count(lit(1)).over(wAll))
+        .groupBy("lang").agg(
+          max(col("n")).as("n_docs"),
+          max(when(expr("rn = (n - 1) div 2 + 1"), col("n_chars"))).as("exact_p50"),
+          max(when(expr("rn = ((n - 1) * 9) div 10 + 1"), col("n_chars"))).as("exact_p90"))
+      s.materialize(exact.join(sampled, Seq("lang"))
+        .select("lang", "n_docs", "m", "est_p50", "est_p90", "exact_p50", "exact_p90"))
+    }
 
   /** Bloom-filter bitset as a typed OR-merge aggregate: the buffer is a
     * FIXED-SIZE array of `mBits/64` longs whatever the input cardinality —
@@ -263,20 +262,17 @@ object Sketches {
     * exact counts (ties on count broken by token; the whitespace
     * tokenization mirrors the dd1 oracle's `string_split_regex`).
     */
-  def d9CmsHeavy(spark: SparkSession, dir: String, d: Int = 4, w: Int = 1024): DataFrame = {
-    val tokens = Relational.table(spark, dir, "documents")
-      .filter(length(trim(col("text"))) > 0)
-      .select(explode(split(trim(col("text")), TextAnalysis.WhitespaceRe)).as("t"))
-      .filter(length(col("t")) > 0)
-      .persist()
-    val exact = tokens.groupBy("t").agg(count(lit(1)).as("n_exact"))
-    val probes = exact.orderBy(col("n_exact").desc, col("t")).limit(20)
-    val out = probes
-      .join(cmsEstimate(cmsCounters(tokens, d, w), probes.select("t"), d, w), Seq("t"))
-      .localCheckpoint(eager = true)
-    tokens.unpersist()
-    out
-  }
+  def d9CmsHeavy(spark: SparkSession, dir: String, d: Int = 4, w: Int = 1024): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      val tokens = s.hold(Relational.table(spark, dir, "documents")
+        .filter(length(trim(col("text"))) > 0)
+        .select(explode(split(trim(col("text")), TextAnalysis.WhitespaceRe)).as("t"))
+        .filter(length(col("t")) > 0))
+      val exact = tokens.groupBy("t").agg(count(lit(1)).as("n_exact"))
+      val probes = exact.orderBy(col("n_exact").desc, col("t")).limit(20)
+      s.materialize(probes
+        .join(cmsEstimate(cmsCounters(tokens, d, w), probes.select("t"), d, w), Seq("t")))
+    }
 
   /** d8: per-language distinct-text estimate next to the exact count (the
     * accuracy gate the oracle replays value-for-value; production use
@@ -317,15 +313,12 @@ object Sketches {
     * compute it from the same integers with the same op order, so the
     * branch can never split. Relative error ≈ 1.04/√m.
     */
-  def d25HllDistinct(spark: SparkSession, dir: String, p: Int = 6): DataFrame = {
-    // persist → eager checkpoint → unpersist (the d9 lifecycle): the
-    // register pass and the exact-count pass both hit the token cache, and
-    // nothing stays cached after the call (CacheHygieneSpec)
-    val tokens = d25Tokens(Relational.table(spark, dir, "documents")).persist()
-    val out = d25Plan(tokens, p).localCheckpoint(true)
-    tokens.unpersist()
-    out
-  }
+  def d25HllDistinct(spark: SparkSession, dir: String, p: Int = 6): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      // the register pass and the exact-count pass both hit the token cache
+      val tokens = s.hold(d25Tokens(Relational.table(spark, dir, "documents")))
+      s.materialize(d25Plan(tokens, p))
+    }
 
   /** The exploded (lang, t) token frame d25 sketches over. */
   def d25Tokens(documents: DataFrame): DataFrame =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.tables.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -266,24 +267,22 @@ object TextAnalysis {
     * group count = corpus size, so the rank shuffle is as wide as the
     * cluster (unlike d14's 3-language case, which needs the bounded
     * aggregate). `tf` feeds both the df rollup and the final join, so it
-    * is persisted for the call and released after the (k·ndocs-row) result
-    * materializes. N arrives via broadcast of a 1-row aggregate, not a
-    * driver collect.
+    * is held for the call. N arrives via broadcast of a 1-row aggregate,
+    * not a driver collect.
     */
-  def d15Keywords(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val d = docs(spark, dir)
-    val words = d
-      .select(col("doc_id"), wordsCol(col("text")).as("w"))
-      // explode_outer + null filter: the d12 lesson (plain explode pushes
-      // inferred predicates below the projection with the split kernel
-      // substituted)
-      .select(col("doc_id"), explode_outer(col("w")).as("word"))
-      .filter(col("word").isNotNull)
-    val tf = words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")).persist()
-    val out = d15Frame(tf, d.agg(count(lit(1)).as("n_docs")), k).localCheckpoint(true)
-    tf.unpersist()
-    out
-  }
+  def d15Keywords(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    Checkpoints.superstep(spark, None) { s =>
+      val d = docs(spark, dir)
+      val words = d
+        .select(col("doc_id"), wordsCol(col("text")).as("w"))
+        // explode_outer + null filter: the d12 lesson (plain explode pushes
+        // inferred predicates below the projection with the split kernel
+        // substituted)
+        .select(col("doc_id"), explode_outer(col("w")).as("word"))
+        .filter(col("word").isNotNull)
+      val tf = s.hold(words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
+      s.materialize(d15Frame(tf, d.agg(count(lit(1)).as("n_docs")), k))
+    }
 
   /** The rank/score plan over a (pre-persisted) tf frame — the seam the
     * plan-shape spec inspects (the entry's eager checkpoint hides it).
@@ -332,15 +331,12 @@ object TextAnalysis {
     * array form (one row per doc) instead of the exploded positions keeps
     * the cache N× smaller and lets the df rollup dedup in-row (below).
     */
-  def d18Frame(documents: DataFrame, flagAt: Double): DataFrame = {
-    val staged = documents
-      .select(col("doc_id"),
-        graft.functions.TextKernels.gramHashes(wordsCol(col("text")), 3).as("hs"))
-      .persist()
-    val out = d18Plan(documents, staged, flagAt).localCheckpoint(true)
-    staged.unpersist()
-    out
-  }
+  def d18Frame(documents: DataFrame, flagAt: Double): DataFrame =
+    Checkpoints.superstep(documents.sparkSession, None) { s =>
+      val staged = s.hold(documents.select(col("doc_id"),
+        graft.functions.TextKernels.gramHashes(wordsCol(col("text")), 3).as("hs")))
+      s.materialize(d18Plan(documents, staged, flagAt))
+    }
 
   /** The df/join/score plan over a (pre-persisted) (doc_id, hs) hashed-gram
     * frame — the seam the plan-shape spec inspects (the entry's eager
@@ -401,15 +397,12 @@ object TextAnalysis {
     * persisted (the d18Frame discipline — it feeds the df rollup AND the
     * covered-position rollup).
     */
-  def d21Frame(documents: DataFrame, k: Int): DataFrame = {
-    val staged = documents.select(
-      col("doc_id"),
-      graft.functions.TextKernels.gramHashes(wordsCol(col("text")), k).as("hs"))
-      .persist()
-    val out = d21Plan(documents, staged, k).localCheckpoint(true)
-    staged.unpersist()
-    out
-  }
+  def d21Frame(documents: DataFrame, k: Int): DataFrame =
+    Checkpoints.superstep(documents.sparkSession, None) { s =>
+      val staged = s.hold(documents.select(col("doc_id"),
+        graft.functions.TextKernels.gramHashes(wordsCol(col("text")), k).as("hs")))
+      s.materialize(d21Plan(documents, staged, k))
+    }
 
   /** The df/covered/surgery plan over a (pre-persisted) (doc_id, hs)
     * hashed-gram frame — the seam the plan-shape spec inspects.
@@ -471,28 +464,27 @@ object TextAnalysis {
     d22Frame(docs(spark, dir), n, mBits)
 
   /** [[d22BloomDecontaminate]] over any (doc_id, text) frame. */
-  def d22Frame(documents: DataFrame, n: Int, mBits: Int): DataFrame = {
-    val grams = documents
-      .select(col("doc_id"), wordsCol(col("text")).as("w"))
-      .select(col("doc_id"),
-        array_distinct(graft.functions.TextKernels.gramStrings(col("w"), n)).as("grams"))
-    // k=3 positions = three independent 16-bit nibble slices of one md5,
-    // reduced mod mBits — no multiply that could overflow an engine that
-    // errors on BIGINT wrap (DuckDB), no seed plumbing
-    val hx = md5(col("gram").cast("binary"))
-    def pos(i: Int): Column =
-      pmod(conv(substring(hx, 1 + 4 * i, 4), 16, 10).cast("int"), lit(mBits))
-    val withPos = grams
-      .select(col("doc_id"), size(col("grams")).as("n_grams"),
-        explode_outer(col("grams")).as("gram")) // outer: the d12 lesson
-      .filter(col("gram").isNotNull)
-      .select(col("doc_id"), col("n_grams"),
-        array(pos(0), pos(1), pos(2)).as("ps"))
-      .persist() // feeds the build AND probe subtrees
-    val out = d22Plan(withPos, mBits).localCheckpoint(true)
-    withPos.unpersist()
-    out
-  }
+  def d22Frame(documents: DataFrame, n: Int, mBits: Int): DataFrame =
+    Checkpoints.superstep(documents.sparkSession, None) { s =>
+      val grams = documents
+        .select(col("doc_id"), wordsCol(col("text")).as("w"))
+        .select(col("doc_id"),
+          array_distinct(graft.functions.TextKernels.gramStrings(col("w"), n)).as("grams"))
+      // k=3 positions = three independent 16-bit nibble slices of one md5,
+      // reduced mod mBits — no multiply that could overflow an engine that
+      // errors on BIGINT wrap (DuckDB), no seed plumbing
+      val hx = md5(col("gram").cast("binary"))
+      def pos(i: Int): Column =
+        pmod(conv(substring(hx, 1 + 4 * i, 4), 16, 10).cast("int"), lit(mBits))
+      // feeds the build AND probe subtrees
+      val withPos = s.hold(grams
+        .select(col("doc_id"), size(col("grams")).as("n_grams"),
+          explode_outer(col("grams")).as("gram")) // outer: the d12 lesson
+        .filter(col("gram").isNotNull)
+        .select(col("doc_id"), col("n_grams"),
+          array(pos(0), pos(1), pos(2)).as("ps")))
+      s.materialize(d22Plan(withPos, mBits))
+    }
 
   /** The build/probe plan over a (pre-persisted) (doc_id, n_grams, ps)
     * position frame — the seam the plan-shape spec inspects.
@@ -683,24 +675,22 @@ object TextAnalysis {
     * gram stream once (persisted — it feeds train AND score; without it
     * the split kernel runs twice), runs [[d16Plan]], materializes.
     */
-  def d16Frame(documents: DataFrame, keepBelow: Double): DataFrame = {
-    val grams = documents
-      // single-pass gram kernel (one node — replaces the per-element
-      // interpreted concat_ws transform; bit-identical, see GramStrings)
-      .select(col("doc_id"),
-        graft.functions.TextKernels.gramStrings(wordsCol(col("text")), 2).as("gs"))
-      // explode_outer + null filter: the d12 lesson
-      .select(col("doc_id"), explode_outer(col("gs")).as("g"))
-      .filter(col("g").isNotNull)
-      .persist()
-    // the count dim feeds the total aggregate AND the scoring join: without
-    // its own persist the gram groupBy re-executed per consumer (measured
-    // ~3× the query's cost at sf0.1)
-    val counts = grams.groupBy("g").agg(count(lit(1)).as("c")).persist()
-    val out = d16Plan(documents, grams, counts, keepBelow).localCheckpoint(true)
-    counts.unpersist(); grams.unpersist()
-    out
-  }
+  def d16Frame(documents: DataFrame, keepBelow: Double): DataFrame =
+    Checkpoints.superstep(documents.sparkSession, None) { s =>
+      val grams = s.hold(documents
+        // single-pass gram kernel (one node — replaces the per-element
+        // interpreted concat_ws transform; bit-identical, see GramStrings)
+        .select(col("doc_id"),
+          graft.functions.TextKernels.gramStrings(wordsCol(col("text")), 2).as("gs"))
+        // explode_outer + null filter: the d12 lesson
+        .select(col("doc_id"), explode_outer(col("gs")).as("g"))
+        .filter(col("g").isNotNull))
+      // the count dim feeds the total aggregate AND the scoring join: without
+      // its own hold the gram groupBy re-executed per consumer (measured
+      // ~3× the query's cost at sf0.1)
+      val counts = s.hold(grams.groupBy("g").agg(count(lit(1)).as("c")))
+      s.materialize(d16Plan(documents, grams, counts, keepBelow))
+    }
 
   /** The train/score plan over (pre-persisted) gram and count frames — the
     * seam the plan-shape spec inspects (the entry's eager checkpoint hides

@@ -92,20 +92,20 @@ object TextifyStage {
     }.toDF("id", "lang", "label", "is_property", "aliases")
   }
 
-  /** Gather-join steps 1–3: each page paired with its private
-    * (id → label) dictionary IN THE PAGE'S DATA LANGUAGE — the labels
-    * dimension is (id, lang, label) and each page's references join against
-    * its own variant's data language (the reference resolves value labels
-    * from the per-LANG-normalized DB). Shared by [[render]] and
-    * [[renderChunks]]; `langOf` maps a page to the variant whose data
-    * language should resolve it.
-    */
   /** Gather-join construction counter — lets the pipeline spec pin that a
     * full run builds this frame ONCE (textify and docs share it; combined
     * with the pipeline's persist, the refs shuffle executes once per run).
     */
   private[graft] val gatherJoinCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Gather-join steps 1–3: each page paired with its private
+    * (id → label) dictionary IN THE PAGE'S DATA LANGUAGE — the labels
+    * dimension is (id, lang, label) and each page's references join against
+    * its own variant's data language (the reference resolves value labels
+    * from the per-LANG-normalized DB). Shared by [[render]] and
+    * [[renderChunks]]; `langOf` maps a page to the variant whose data
+    * language should resolve it. Each call bumps [[gatherJoinCalls]].
+    */
   def withLabelMaps(spark: SparkSession, payloads: Dataset[PagePayload],
                     labels: DataFrame, langOf: PagePayload => String = _.lang)
       : Dataset[(PagePayload, Map[String, String])] = {

@@ -4,12 +4,20 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Eager materialization with a choice of durability, and the one owner of
-  * the "compute once, release the inputs" lifecycle in this library: the
-  * Linker mention/link stages and EmbeddingCache call [[eager]]; the
-  * iterative graph operators ([[graft.operators.GraphOps]],
-  * [[graft.canon.ConnectedComponents]]) run inside one [[superstep]] scope,
-  * and so does each [[graft.pipeline.KgPipeline]] chain, which holds its
-  * run-scoped payload caches there.
+  * the "compute once, release the inputs" lifecycle in this library: every
+  * call-scoped cache in the operator library is held in a [[superstep]]
+  * scope. The iterative graph operators ([[graft.operators.GraphOps]],
+  * [[graft.canon.ConnectedComponents]]) run their rounds in one; each
+  * [[graft.pipeline.KgPipeline]] chain holds its run-scoped payload caches
+  * in one; and a one-shot operator (the dedup, sketch, text-analysis,
+  * similarity, packing and keyword-search operators, the Linker
+  * mention/link stages, EmbeddingCache) is a scope that calls no `rounds`:
+  * it holds the frames its plan reads more than once, materializes the
+  * result and returns it. The only caches outside a scope are a stage's
+  * output inside [[Lineage.commit]], and two that their caller owns: the
+  * serving frames of a [[graft.operators.KeywordSearch.Index]] and the
+  * test-only un-materialized result of
+  * [[graft.canon.ConnectedComponents.runIncremental]].
   *
   * The lifecycle contract of a [[superstep]] call:
   *  - held frames ([[Superstep.hold]]) are persisted once and released
@@ -71,10 +79,7 @@ object Checkpoints {
       finally prev.foreach(sc.setCheckpointDir)
   }
 
-  def eager(df: DataFrame, dir: Option[String] = None): DataFrame =
-    withDir(df.sparkSession, dir)(materialize => materialize(df))
-
-  /** One call of an iterative operator: `body` gets the call's
+  /** One call of an operator: `body` gets the call's
     * [[Superstep]] scope; every frame it holds is released when `body`
     * returns or throws (latest first, so dependents go before their inputs).
     */

@@ -31,7 +31,8 @@ class LinkerLshSpec extends AnyFunSuite {
     // bits/tables is the recall-vs-candidate-volume dial: fewer bits = bigger
     // buckets, more tables = more second chances. 6/6 targets high recall on
     // genuinely-shifted contexts; the 8/4 default is the cheaper setting.
-    val lsh = Linker.linkLsh(spark, resolved, entityVecs, k = 5, bits = 6, tables = 6)
+    val lsh = Linker.linkLshScored(Linker.embedMentions(resolved), entityVecs,
+      k = 5, bits = 6, tables = 6, dimLen = Embedder.dim)
       .select("url", "qid").as[(String, String)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
 
@@ -49,7 +50,8 @@ class LinkerLshSpec extends AnyFunSuite {
 
     // scores must be the exact cosine (the candidates are LSH-generated, the
     // scoring is not approximate)
-    val scored = Linker.linkLsh(spark, resolved, entityVecs, k = 5, bits = 6, tables = 6)
+    val scored = Linker.linkLshScored(Linker.embedMentions(resolved), entityVecs,
+      k = 5, bits = 6, tables = 6, dimLen = Embedder.dim)
       .select("url", "qid", "score").as[(String, String, Double)].collect()
     val byId = vecs.toMap
     scored.foreach { case (url, qid, score) =>

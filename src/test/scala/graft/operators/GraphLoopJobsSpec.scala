@@ -41,8 +41,12 @@ class GraphLoopJobsSpec extends AnyFunSuite {
     ("kcoreBounded", () => GraphOps.kcoreBounded(edges, k = 2, rounds = 3), 28),
     ("labelPropagation", () => GraphOps.labelPropagation(edges, rounds = 3), 23),
     ("randomWalks", () => GraphOps.randomWalks(edges, walkLen = 3), 10),
+    // 37 since each round builds its held `stepped` frame's cache before
+    // planning the jump join: over the unbuilt cache AQE ran one build job
+    // per scan and planned the join's left shuffle only when it saw one
+    // build finish before the other, so the count was 36–38 (38 most often)
     ("ConnectedComponents.run", () => ConnectedComponents.run(spark,
-      edges, Seq("solo").toDF("id")), 38))
+      edges, Seq("solo").toDF("id")), 37))
 
   pinned.foreach { case (name, op, want) =>
     test(s"$name submits the pinned number of Spark jobs") {

@@ -87,7 +87,8 @@ class StreamingExtractSpec extends AnyFunSuite {
     val streamed = StreamingExtract.drain(spark,
       StreamingExtract.mentionsStream(spark, pagesDir, langLabels, trie), "mentions_stream", ckpt)
       .collect().map(_.toString).sorted.toSeq
-    val batch = graft.link.Linker.mentions(spark, batchTexts, trie)
+    val batch = graft.link.Linker.explodeCandidates(
+      graft.link.Linker.resolvedRows(spark, batchTexts, trie))
       .collect().map(_.toString).sorted.toSeq
     assert(streamed.nonEmpty && streamed == batch)
   }
