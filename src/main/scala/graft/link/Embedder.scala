@@ -1,5 +1,6 @@
 package graft.link
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.{Dataset, Encoder}
 
 /** Deterministic stand-in embedder (FIXTURES.md §5).
@@ -21,10 +22,14 @@ object Embedder extends Serializable {
     h
   }
 
+  // compiled once: a three-character regex misses String.split's fast path
+  // and would compile its Pattern on every call
+  private val nonWord = Pattern.compile("\\W+")
+
   /** Encode one text: hashed unigram + bigram features, L2-normalized. */
   def encode(text: String): Array[Float] = {
     val v = new Array[Float](dim)
-    val tokens = text.toLowerCase.split("\\W+").filter(_.nonEmpty)
+    val tokens = nonWord.split(text.toLowerCase).filter(_.nonEmpty)
     var i = 0
     while (i < tokens.length) {
       val h = mix(tokens(i).hashCode)

@@ -8,15 +8,41 @@ package graft.model
   * dict-insertion order and byte-identity depends on it — so maps are
   * modeled as `Seq[(key, value)]`, never `Map` (SURVEY.md §7.4).
   *
-  * Snak `datavalue` payloads are shape-polymorphic per datatype, so they are
-  * carried as the raw JSON of `datavalue.value` and decoded per-datatype in
-  * pure Scala (ref: src/wikidataEmbed.py:104-147), exactly like the
-  * reference's `mainsnak_to_value`.
+  * A snak's `datavalue.value` is shape-polymorphic per datatype. It is
+  * decoded once, in `WikidataJson.normalize`, into the [[SnakValue]] fields
+  * its datatype renders from (the reads of the reference's
+  * `mainsnak_to_value`, ref: src/wikidataEmbed.py:104-147). The textifier,
+  * the referenced-id gather and the kg9 stats read those fields: a value is
+  * never written back to JSON and parsed again, which a chunked page would
+  * otherwise pay once per chunk candidate.
   */
 final case class Snak(
     snaktype: String, // "value" | "novalue" | "somevalue"
     datatype: String, // wikibase-item/-property, string, monolingualtext, time, quantity, ...
-    valueJson: String // raw JSON of datavalue.value; null when no datavalue
+    value: SnakValue // decoded datavalue.value; null when no datavalue
+)
+
+/** `datavalue.value` decoded for its snak's datatype; every other field is
+  * null (`precision` None):
+  *  - wikibase-item/-property: `id`;
+  *  - monolingualtext: `text` (the `text` field); string: `text` (the whole
+  *    node);
+  *  - time: `time`, `precision` (Jackson's `asInt`) and `calendarmodel` (the
+  *    proleptic Gregorian default applied);
+  *  - quantity: `amount` and `unit` (`"1"` when absent, null when JSON null).
+  * The string fields hold Jackson's `asText` of their node (a JSON null
+  * reads `"null"`, except for `unit`) and are null when the value lacks
+  * them, so readers throw or fall back exactly where reading the raw node
+  * did.
+  */
+final case class SnakValue(
+    id: String = null,
+    text: String = null,
+    time: String = null,
+    precision: Option[Int] = None,
+    calendarmodel: String = null,
+    amount: String = null,
+    unit: String = null
 )
 
 final case class QualifierGroup(pid: String, snaks: Seq[Snak])

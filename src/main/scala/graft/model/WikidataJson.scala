@@ -90,14 +90,29 @@ object WikidataJson {
     out.toSeq
   }
 
+  /** `value` decoded for `datatype` (see [[SnakValue]]). */
+  private def snakValue(datatype: String, value: JsonNode): SnakValue = {
+    def field(name: String): String = { val f = value.get(name); if (f == null) null else f.asText() }
+    datatype match {
+      case "wikibase-item" | "wikibase-property" => SnakValue(id = field("id"))
+      case "monolingualtext" => SnakValue(text = field("text"))
+      case "string" => SnakValue(text = value.asText())
+      case "time" => SnakValue(time = field("time"),
+        precision = Option(value.get("precision")).map(_.asInt()),
+        calendarmodel = value.path("calendarmodel").asText("http://www.wikidata.org/entity/Q1985786"))
+      case "quantity" => SnakValue(amount = field("amount"),
+        unit = if (value.has("unit")) textOrNull(value.get("unit")) else "1")
+      case _ => SnakValue()
+    }
+  }
+
   private def parseSnak(s: JsonNode): Snak = {
     val dv = s.get("datavalue")
-    val valueJson =
-      if (dv != null && dv.has("value")) dv.get("value").toString else null
+    val datatype = if (s.has("datatype")) s.get("datatype").asText() else ""
     Snak(
       snaktype = if (s.has("snaktype")) s.get("snaktype").asText() else "",
-      datatype = if (s.has("datatype")) s.get("datatype").asText() else "",
-      valueJson = valueJson)
+      datatype = datatype,
+      value = if (dv != null && dv.has("value")) snakValue(datatype, dv.get("value")) else null)
   }
 
   /** `_get_claims`: keep type=='statement' && rank!='deprecated'. */
@@ -234,8 +249,6 @@ object WikidataJson {
       label
     } else Some(valueNode.asText()) // numbers/bools: JSON literal text
   }
-
-  private val QidPattern = "^Q\\d+$".r
 
   def looksLikeQid(s: String): Boolean =
     s.nonEmpty && s.charAt(0) == 'Q' && s.length > 1 && s.drop(1).forall(_.isDigit)

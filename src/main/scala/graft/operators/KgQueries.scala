@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.canon.AliasEdges
 import graft.link.{Embedder, Linker}
-import graft.model.WikidataJson
+import graft.model.{Snak, WikidataJson}
 import graft.pipeline.{PagesGen, TextifyStage}
 import graft.tables.Checkpoints
 import graft.triples.Triples
@@ -381,14 +381,9 @@ object KgQueries {
             cg.claims.foreach { c =>
               out += (("claims_per_pid", cg.pid))
               if (hasWiki) out += (("claims_per_pid_wikionly", cg.pid))
-              if (cg.pid == "P31" && c.mainsnak.datatype == "wikibase-item"
-                && c.mainsnak.valueJson != null) {
-                val n = WikidataJson.mapper.readTree(c.mainsnak.valueJson)
-                if (n.has("id")) {
-                  val vq = n.get("id").asText()
-                  out += (("instances_per_class", vq))
-                  if (hasWiki) out += (("instances_per_class_wikionly", vq))
-                }
+              instanceClass(cg.pid, c.mainsnak).foreach { vq =>
+                out += (("instances_per_class", vq))
+                if (hasWiki) out += (("instances_per_class_wikionly", vq))
               }
             }
           }
@@ -400,6 +395,14 @@ object KgQueries {
       .groupBy("stat", "key").agg(count(lit(1)).as("n"))
       .select("stat", "key", "n")
   }
+
+  /** kg9's `instances_per_class` key of one claim: the id of a P31
+    * `wikibase-item` value that has one.
+    */
+  def instanceClass(pid: String, mainsnak: Snak): Option[String] =
+    if (pid == "P31" && mainsnak.datatype == "wikibase-item" && mainsnak.value != null)
+      Option(mainsnak.value.id)
+    else None
 
   /** Stage-6 HF export rows over the corpus (S13 row semantics, golden-pinned
     * by HfExportGoldenSpec): (split, id, labels, descriptions, aliases,

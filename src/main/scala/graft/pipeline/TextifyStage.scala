@@ -32,15 +32,14 @@ object TextifyStage {
     */
   def referencedIds(e: Entity): Seq[String] = {
     val out = scala.collection.mutable.LinkedHashSet.empty[String]
-    val mapper = WikidataJson.mapper // thread-local, not per-row
     def snakIds(s: graft.model.Snak): Unit = {
-      if (s.valueJson != null) s.datatype match {
+      val v = s.value
+      if (v != null) s.datatype match {
         case "wikibase-item" | "wikibase-property" =>
-          val n = mapper.readTree(s.valueJson)
-          if (n.has("id")) out += n.get("id").asText()
+          if (v.id != null) out += v.id
         case "quantity" =>
-          val n = mapper.readTree(s.valueJson)
-          val unit = if (n.has("unit")) n.get("unit").asText() else "1"
+          // a JSON-null unit is referenced as "null", its Jackson asText
+          val unit = if (v.unit == null) "null" else v.unit
           if (unit != "1") out += unit.substring(unit.lastIndexOf('/') + 1)
         case _ =>
       }

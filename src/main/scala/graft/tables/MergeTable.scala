@@ -226,10 +226,13 @@ final class MergeTable(spark: SparkSession, val path: String,
       else {
         val oldDirs = touchedWithData.toSeq.map(b => bucketDir(oldBuckets(b), b))
         val old = readParquet(current.flatMap(_.schema), oldDirs).withColumn("_bucket", bucketExpr)
-        // key-anti for plain upsert; scope-anti replaces whole scopes
+        // key-anti for plain upsert; scope-anti replaces whole scopes. The
+        // key side reads the raw batch: duplicate keys on a left-anti join's
+        // right side do not change its result, so deduplicating them first
+        // would only cost a second pass over the batch
         val survivors = scopes match {
           case Some(s) => old.join(s, scopeCols.get, "left_anti")
-          case None    => old.join(incoming.select(keyCols.map(col): _*), keyCols, "left_anti")
+          case None    => old.join(df.select(keyCols.map(col): _*), keyCols, "left_anti")
         }
         survivors.unionByName(incoming)
       // the anti-join puts join keys first: re-project to the incoming order

@@ -1,7 +1,7 @@
 package graft.textify
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.{Claim, ClaimGroup, Entity, QualifierGroup, Snak}
+import java.util.Objects.requireNonNull
 import scala.collection.mutable
 
 /** Entity → text rendering, the semantics of the reference's
@@ -18,49 +18,48 @@ import scala.collection.mutable
   */
 class Textifier(val lang: LangVariant, labelOf: String => Option[String]) extends Serializable {
 
-  // thread-local shared mapper: a per-instance mapper made "new Textifier per
-  // row" allocate an ObjectMapper per row, and a JVM-shared one contends on
-  // Jackson's symbol-table locks at high thread counts
-  private def parse(json: String): JsonNode = graft.model.WikidataJson.mapper.readTree(json)
-
-  /** `mainsnak_to_value` (ref: src/wikidataEmbed.py:104-147). Returned
-    * Option is Python truthiness: callers must drop empty strings too.
+  /** `mainsnak_to_value` (ref: src/wikidataEmbed.py:104-147) over the
+    * [[graft.model.SnakValue]] that `WikidataJson.normalize` decoded once per
+    * datatype. A value without the field its datatype needs throws a
+    * NullPointerException (the reference's KeyError); a time without a
+    * renderable precision falls back to its raw timestamp, a quantity whose
+    * unit cannot be rendered to its bare amount. Returned Option is Python
+    * truthiness: callers must drop empty strings too.
     */
   def mainsnakToValue(snak: Snak): Option[String] = snak.snaktype match {
     case "value" =>
-      if (snak.valueJson == null) return None
+      val v = snak.value
+      if (v == null) return None
       snak.datatype match {
         case "wikibase-item" | "wikibase-property" =>
-          val id = parse(snak.valueJson).get("id").asText()
-          labelOf(id)
+          labelOf(requireNonNull(v.id, "value without id"))
         case "monolingualtext" =>
-          Some(parse(snak.valueJson).get("text").asText())
+          Some(requireNonNull(v.text, "value without text"))
         case "string" =>
-          Some(parse(snak.valueJson).asText())
+          Some(v.text)
         case "time" =>
-          val v = parse(snak.valueJson)
-          val raw = v.get("time").asText()
-          try Some(TimeText.toText(raw, v.get("precision").asInt(),
-            v.path("calendarmodel").asText("http://www.wikidata.org/entity/Q1985786"), lang))
-          catch { case _: Exception => Some(raw) }
+          val raw = requireNonNull(v.time, "value without time")
+          Some(v.precision.fold(raw) { p =>
+            try TimeText.toText(raw, p, v.calendarmodel, lang) catch { case _: Exception => raw }
+          })
         case "quantity" =>
-          val v = parse(snak.valueJson)
-          try Some(quantityToText(v))
-          catch { case _: Exception => Some(v.get("amount").asText()) }
+          val amount = requireNonNull(v.amount, "value without amount")
+          try Some(quantityToText(amount, v.unit))
+          catch { case _: Exception => Some(amount) }
         case _ => None
       }
     case "novalue" => Some(lang.novalue)
     case _ => None
   }
 
-  /** `quantity_to_text` (ref: src/wikidataEmbed.py:149-171): amount string
-    * kept verbatim (incl. leading '+'); unit '1' → bare amount; unit URI →
-    * QID label when the entity exists and has a non-empty label, the raw URI
-    * when the entity is absent, omitted when the label is empty.
+  /** `quantity_to_text` (ref: src/wikidataEmbed.py:149-171) of a decoded
+    * quantity: `amount` kept verbatim (incl. leading '+'); unit '1' → bare
+    * amount; unit URI → QID label when the entity exists and has a non-empty
+    * label, the raw URI when the entity is absent, omitted when the label is
+    * empty. A null `unit` (JSON null) throws, and `mainsnakToValue` then
+    * renders the bare amount.
     */
-  def quantityToText(v: JsonNode): String = {
-    val amount = v.get("amount").asText()
-    val unitRaw = if (v.has("unit") && !v.get("unit").isNull) v.get("unit").asText() else null
+  def quantityToText(amount: String, unitRaw: String): String = {
     if (unitRaw == null) throw new IllegalArgumentException("missing unit") // ref: AttributeError → amount fallback
     val unit: String =
       if (unitRaw == "1") null

@@ -193,4 +193,42 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     assertSame(vecs.select(PqKernels.subCentroid(col("q"), cell, cents).as("a"),
       residPortable.as("b")))
   }
+
+  test("Embedder.encode == its per-call String.split form") {
+    // `encode` as it was before its tokenizer Pattern was hoisted
+    def mix(h0: Int): Int = {
+      var h = h0
+      h ^= h >>> 16; h *= 0x85ebca6b; h ^= h >>> 13; h *= 0xc2b2ae35; h ^= h >>> 16
+      h
+    }
+    def encodeSplit(text: String): Array[Float] = {
+      val dim = graft.link.Embedder.dim
+      val v = new Array[Float](dim)
+      val tokens = text.toLowerCase.split("\\W+").filter(_.nonEmpty)
+      var i = 0
+      while (i < tokens.length) {
+        val h = mix(tokens(i).hashCode)
+        v(math.abs(h % dim)) += (if (h >= 0) 1f else -1f)
+        if (i + 1 < tokens.length) {
+          val hb = mix(tokens(i).hashCode * 31 + tokens(i + 1).hashCode)
+          v(math.abs(hb % dim)) += (if (hb >= 0) 0.5f else -0.5f)
+        }
+        i += 1
+      }
+      var norm = 0.0
+      v.foreach(x => norm += x * x)
+      val n = math.sqrt(norm)
+      if (n > 0) { var j = 0; while (j < dim) { v(j) = (v(j) / n).toFloat; j += 1 } }
+      v
+    }
+    // İ lowercases to two chars (i + combining dot), the Kelvin sign to k
+    val chars = "abcXYZ09 _-.,'\t\néÉßü\u0130\u212A日本語\u00A0"
+    val rnd = new scala.util.Random(29)
+    val texts = Seq("", " ", "..", "\u0130stanbul \u0130I", "\u212Aelvin KELVIN kelvin", "Straße STRASSE",
+      "naïve café, ÉCOLE", "日本語 テキスト", "under_score  tab\tnew\nline") ++
+      (0 until 500).map(_ => Seq.fill(rnd.nextInt(40))(chars.charAt(rnd.nextInt(chars.length))).mkString)
+    texts.foreach { t =>
+      assert(graft.link.Embedder.encode(t).sameElements(encodeSplit(t)), s"text ${t.toSeq}")
+    }
+  }
 }

@@ -39,7 +39,9 @@ class CommitJobsSpec extends AnyFunSuite {
     val batch = ((1 to 5).map(i => (s"k$i", -i)) ++ (41 to 45).map(i => (s"k$i", i))).toDF("id", "v")
     val got = jobsOf("commit-jobs-merge")(t.merge(batch))
     assert(t.rowCount == 45)
-    assert(got == 7, s"merge ran $got Spark jobs, pinned 7")
+    // 6 since the anti-join's key side reads the raw batch: the batch is
+    // deduplicated once, for the union side, no longer for the key side too
+    assert(got == 6, s"merge ran $got Spark jobs, pinned 6")
   }
 
   test("a replace submits the pinned number of Spark jobs") {
