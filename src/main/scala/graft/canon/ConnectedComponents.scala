@@ -3,7 +3,6 @@ package graft.canon
 import graft.tables.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over alias/sameAs edges as iterative DataFrame
   * self-joins — small-label propagation with pointer jumping (SURVEY.md §4,
@@ -122,30 +121,36 @@ object ConnectedComponents {
     * never shuffles. The result is materialized with the same durability
     * as the CC rounds, and the internal assign/delta caches are released
     * on return or throw ([[graft.tables.Checkpoints]]).
-    * `materializeResult = false` returns the un-materialized frame (plan
-    * inspectable; the caller then owns unpersisting the assign/delta
-    * caches — test-only escape hatch).
     */
   def runIncremental(spark: SparkSession, baseAssign: DataFrame,
                      deltaEdges: DataFrame, maxIterations: Int = 50,
-                     checkpointDir: Option[String] = None,
-                     materializeResult: Boolean = true): DataFrame =
+                     checkpointDir: Option[String] = None): DataFrame =
     Checkpoints.superstep(spark, checkpointDir) { s =>
-    // un-materialized result: the caller keeps (and releases) the caches
-    val hold: DataFrame => DataFrame =
-      if (materializeResult) s.hold else _.persist(StorageLevel.MEMORY_AND_DISK)
+      // with a checkpointDir the world-sized result survives executor loss;
+      // localCheckpoint would strand its lineage in executor block managers
+      // right after the reliable rounds paid for fault tolerance
+      s.materialize(incrementalFrame(s, spark, baseAssign, deltaEdges, maxIterations, checkpointDir))
+    }
+
+  /** The un-materialized result plan of [[runIncremental]], with its
+    * assign/delta caches held in the caller's scope `s` — the seam the
+    * plan-shape spec inspects (the entry's eager checkpoint hides it).
+    */
+  def incrementalFrame(s: Checkpoints.Superstep, spark: SparkSession, baseAssign: DataFrame,
+                       deltaEdges: DataFrame, maxIterations: Int = 50,
+                       checkpointDir: Option[String] = None): DataFrame = {
     val base = baseAssign.select(col("id"), col("component"))
     // delta edges are scanned three times below (endpoint union + both
     // contraction joins) — hold so an expensive upstream (a crawl parse)
     // runs once
-    val delta = hold(deltaEdges.select(col("src"), col("dst")))
+    val delta = s.hold(deltaEdges.select(col("src"), col("dst")))
     // endpoints unseen by the base crawl are their own base component
     val deltaNodes = delta.select(col("src").as("id"))
       .unionByName(delta.select(col("dst").as("id")))
       .distinct()
     val newNodes = deltaNodes.join(base, Seq("id"), "left_anti")
       .withColumn("component", col("id"))
-    val assign = hold(base.unionByName(newNodes))
+    val assign = s.hold(base.unionByName(newNodes))
 
     // contract delta edges to base labels; re-asserted edges become
     // self-loops and are dropped BEFORE the small CC run
@@ -162,12 +167,8 @@ object ConnectedComponents {
     val remap = run(spark, contracted, emptyNodes, maxIterations, checkpointDir)
       .select(col("id").as("component"), col("component").as("_merged"))
 
-    val out = assign
+    assign
       .join(broadcast(remap), Seq("component"), "left")
       .select(col("id"), coalesce(col("_merged"), col("component")).as("component"))
-    // with a checkpointDir the world-sized result survives executor loss;
-    // localCheckpoint would strand its lineage in executor block managers
-    // right after the reliable rounds paid for fault tolerance
-    if (materializeResult) s.materialize(out) else out
-    }
+  }
 }

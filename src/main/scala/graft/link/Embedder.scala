@@ -1,6 +1,5 @@
 package graft.link
 
-import java.util.regex.Pattern
 import org.apache.spark.sql.{Dataset, Encoder}
 
 /** Deterministic stand-in embedder (FIXTURES.md §5).
@@ -22,21 +21,38 @@ object Embedder extends Serializable {
     h
   }
 
-  // compiled once: a three-character regex misses String.split's fast path
-  // and would compile its Pattern on every call
-  private val nonWord = Pattern.compile("\\W+")
+  /** `c` is a token char of lowercased text: `[a-z0-9_]`, the complement of
+    * `\W` (no UNICODE_CHARACTER_CLASS) once `toLowerCase` has left no A-Z.
+    */
+  private def isTokenChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_'
 
-  /** Encode one text: hashed unigram + bigram features, L2-normalized. */
+  private def bump(v: Array[Float], h: Int, w: Float): Unit =
+    v(math.abs(h % dim)) += (if (h >= 0) w else -w)
+
+  /** Encode one text: hashed unigram + bigram features, L2-normalized.
+    *
+    * Tokens are the non-empty pieces of a `\W+` split of `text.toLowerCase`.
+    * One scan finds them and computes each token's `String.hashCode` as it
+    * goes, so no token string is built.
+    */
   def encode(text: String): Array[Float] = {
     val v = new Array[Float](dim)
-    val tokens = nonWord.split(text.toLowerCase).filter(_.nonEmpty)
+    val s = text.toLowerCase
+    var h = 0         // hashCode of the token being scanned
+    var inToken = false
+    var prev = 0      // hashCode of the previous token
+    var hasPrev = false
     var i = 0
-    while (i < tokens.length) {
-      val h = mix(tokens(i).hashCode)
-      v(math.abs(h % dim)) += (if (h >= 0) 1f else -1f)
-      if (i + 1 < tokens.length) {
-        val hb = mix(tokens(i).hashCode * 31 + tokens(i + 1).hashCode)
-        v(math.abs(hb % dim)) += (if (hb >= 0) 0.5f else -0.5f)
+    while (i <= s.length) {
+      val c = if (i < s.length) s.charAt(i) else ' '
+      if (isTokenChar(c)) { h = 31 * h + c; inToken = true }
+      else if (inToken) {
+        // features in token order: unigram(t0), bigram(t0, t1), unigram(t1), ...
+        if (hasPrev) bump(v, mix(prev * 31 + h), 0.5f)
+        bump(v, mix(h), 1f)
+        prev = h; hasPrev = true
+        h = 0; inToken = false
       }
       i += 1
     }

@@ -19,18 +19,39 @@ final case class Mention(surface: String, qids: Seq[String], begin: Int, end: In
   * O(total chars), and matching is cache-friendly. If the dictionary
   * outgrows executor broadcast budget, shard by surface hash and run N
   * passes (SURVEY.md §7.4).
+  *
+  * Per-char cost: one goto transition (amortized over fail links) plus
+  * the nodes that actually have outputs. Each node's output link is the
+  * nearest node on its fail chain that has outputs, so the output walk
+  * skips output-less nodes instead of walking the whole fail chain; and
+  * the root, where most chars restart, has a 128-entry table for ASCII
+  * chars in place of the binary search. Memory: one `Int` per node for the
+  * output links (no merged output lists) plus the 128-entry table.
   */
 final class AhoCorasick private (
     edgeOffsets: Array[Int],   // node -> [start, end) into edgeChars/edgeTargets
     edgeChars: Array[Char],    // sorted within each node's range
     edgeTargets: Array[Int],
     fail: Array[Int],
+    outLink: Array[Int],       // node -> nearest fail-chain node with outputs, 0 if none
     outOffsets: Array[Int],    // node -> [start, end) into outPatterns
     outPatterns: Array[Int],
     patterns: Array[String],
     payloads: Array[Array[String]]) extends Serializable {
 
+  // root transitions for ASCII chars, -1 where the root has no edge
+  private val rootNext: Array[Int] = {
+    val t = Array.fill(128)(-1)
+    var k = edgeOffsets(0)
+    while (k < edgeOffsets(1)) {
+      if (edgeChars(k) < 128) t(edgeChars(k)) = edgeTargets(k)
+      k += 1
+    }
+    t
+  }
+
   private def step(state: Int, c: Char): Int = {
+    if (state == 0 && c < 128) return rootNext(c)
     // binary search c in the node's sorted edge range
     var lo = edgeOffsets(state)
     var hi = edgeOffsets(state + 1) - 1
@@ -46,9 +67,12 @@ final class AhoCorasick private (
 
   private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c)
 
-  /** All raw matches (begin, end, patternIdx), boundary-filtered. */
-  private def rawMatches(text: String): mutable.ArrayBuffer[(Int, Int, Int)] = {
-    val hits = mutable.ArrayBuffer.empty[(Int, Int, Int)]
+  private def hasOutputs(s: Int): Boolean = outOffsets(s) < outOffsets(s + 1)
+
+  /** Calls `hit(begin, patternIdx)` for every boundary-filtered match, by
+    * end position ascending and, per end, longest first.
+    */
+  private def scan(text: String)(hit: (Int, Int) => Unit): Unit = {
     var state = 0
     var i = 0
     while (i < text.length) {
@@ -56,7 +80,7 @@ final class AhoCorasick private (
       var nxt = step(state, c)
       while (state != 0 && nxt < 0) { state = fail(state); nxt = step(state, c) }
       state = if (nxt >= 0) nxt else 0
-      var s = state
+      var s = if (hasOutputs(state)) state else outLink(state)
       while (s != 0) {
         var oi = outOffsets(s)
         val oe = outOffsets(s + 1)
@@ -66,29 +90,50 @@ final class AhoCorasick private (
           val okLeft = begin == 0 || !isWordChar(text.charAt(begin - 1)) || !isWordChar(patterns(p).charAt(0))
           val okRight = i + 1 >= text.length || !isWordChar(text.charAt(i + 1)) ||
             !isWordChar(patterns(p).charAt(patterns(p).length - 1))
-          if (okLeft && okRight) hits += ((begin, i + 1, p))
+          if (okLeft && okRight) hit(begin, p)
           oi += 1
         }
-        s = fail(s)
+        s = outLink(s)
       }
       i += 1
     }
-    hits
   }
+
+  private def mention(begin: Int, p: Int): Mention =
+    Mention(patterns(p), payloads(p).toSeq, begin, begin + patterns(p).length)
 
   /** All boundary-filtered matches, overlap-UNresolved — the per-shard
     * primitive when the dictionary is hash-sharded across multiple passes:
     * each shard emits raw matches and [[AhoCorasick.resolveLeftmostLongest]]
-    * replays the exact single-trie overlap policy over their union.
+    * replays the exact single-trie overlap policy over their union. Ordered
+    * by end position ascending, longest first per end.
     */
-  def findRawMentions(text: String): Seq[Mention] =
-    rawMatches(text).map { case (b, e, p) =>
-      Mention(patterns(p), payloads(p).toSeq, b, e)
-    }.toSeq
+  def findRawMentions(text: String): Seq[Mention] = {
+    val hits = mutable.ArrayBuffer.empty[Mention]
+    scan(text)((b, p) => hits += mention(b, p))
+    hits.toSeq
+  }
 
-  /** Leftmost-longest non-overlapping mentions. */
-  def findMentions(text: String): Seq[Mention] =
-    AhoCorasick.resolveLeftmostLongest(findRawMentions(text))
+  /** Leftmost-longest non-overlapping mentions; equal to
+    * `resolveLeftmostLongest(findRawMentions(text))`. The longest match at
+    * each begin is kept in two arrays indexed by begin, then a greedy scan
+    * takes it and skips past its end.
+    */
+  def findMentions(text: String): Seq[Mention] = {
+    val bestLen = new Array[Int](text.length)   // 0: no match begins here
+    val bestPat = new Array[Int](text.length)
+    scan(text) { (b, p) =>
+      val len = patterns(p).length
+      if (len > bestLen(b)) { bestLen(b) = len; bestPat(b) = p }
+    }
+    val res = mutable.ArrayBuffer.empty[Mention]
+    var i = 0
+    while (i < text.length) {
+      if (bestLen(i) > 0) { res += mention(i, bestPat(i)); i += bestLen(i) }
+      else i += 1
+    }
+    res.toSeq
+  }
 }
 
 object AhoCorasick {
@@ -136,6 +181,7 @@ object AhoCorasick {
     // phase 2: BFS fail links
     val n = goto.length
     val fail = Array.fill(n)(0)
+    val outLink = Array.fill(n)(0)
     val queue = mutable.Queue.empty[Int]
     goto(0).values.foreach(queue.enqueue(_))
     while (queue.nonEmpty) {
@@ -145,6 +191,8 @@ object AhoCorasick {
         var st = fail(r)
         while (st != 0 && !goto(st).contains(c)) st = fail(st)
         fail(s) = if (goto(st).contains(c) && goto(st)(c) != s) goto(st)(c) else 0
+        // fail(s) is shallower than s, so BFS has already set its link
+        outLink(s) = if (outB(fail(s)).nonEmpty) fail(s) else outLink(fail(s))
       }
     }
 
@@ -176,7 +224,7 @@ object AhoCorasick {
       outB(i).foreach { p => outPatterns(k) = p; k += 1 }
       i += 1
     }
-    new AhoCorasick(edgeOffsets, edgeChars, edgeTargets, fail,
+    new AhoCorasick(edgeOffsets, edgeChars, edgeTargets, fail, outLink,
       outOffsets, outPatterns, patterns, payloads)
   }
 }

@@ -255,16 +255,22 @@ object PagesGen {
 
   /** Pull the embedded entity payload back out of the HTML (the extract
     * stage's parser). Returns None when the page carries no payload.
+    *
+    * Both markers are ASCII, and UTF-8 never puts an ASCII byte inside a
+    * multi-byte sequence, so the markers are found in an ISO-8859-1 view
+    * (one char per byte) and only the payload's bytes are decoded as UTF-8:
+    * the same string as decoding the whole page and cutting it out.
     */
   def extractPayload(html: Array[Byte]): Option[String] = {
-    val s = new String(html, java.nio.charset.StandardCharsets.UTF_8)
+    val s = new String(html, java.nio.charset.StandardCharsets.ISO_8859_1)
     val marker = """<script id="wd-entity" type="application/json">"""
     val start = s.indexOf(marker)
     if (start < 0) None
     else {
       val from = start + marker.length
       val end = s.indexOf("</script>", from)
-      if (end < 0) None else Some(s.substring(from, end))
+      if (end < 0) None
+      else Some(new String(html, from, end - from, java.nio.charset.StandardCharsets.UTF_8))
     }
   }
 }

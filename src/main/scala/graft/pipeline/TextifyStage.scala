@@ -38,9 +38,8 @@ object TextifyStage {
         case "wikibase-item" | "wikibase-property" =>
           if (v.id != null) out += v.id
         case "quantity" =>
-          // a JSON-null unit is referenced as "null", its Jackson asText
-          val unit = if (v.unit == null) "null" else v.unit
-          if (unit != "1") out += unit.substring(unit.lastIndexOf('/') + 1)
+          // a JSON-null unit renders as the bare amount: no label to look up
+          if (v.unit != null && v.unit != "1") out += v.unit.substring(v.unit.lastIndexOf('/') + 1)
         case _ =>
       }
     }

@@ -14,10 +14,8 @@ import org.apache.spark.storage.StorageLevel
   * mention/link stages, EmbeddingCache) is a scope that calls no `rounds`:
   * it holds the frames its plan reads more than once, materializes the
   * result and returns it. The only caches outside a scope are a stage's
-  * output inside [[Lineage.commit]], and two that their caller owns: the
-  * serving frames of a [[graft.operators.KeywordSearch.Index]] and the
-  * test-only un-materialized result of
-  * [[graft.canon.ConnectedComponents.runIncremental]].
+  * output inside [[Lineage.commit]], and the serving frames of a
+  * [[graft.operators.KeywordSearch.Index]], which its caller owns.
   *
   * The lifecycle contract of a [[superstep]] call:
   *  - held frames ([[Superstep.hold]]) are persisted once and released

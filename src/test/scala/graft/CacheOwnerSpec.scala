@@ -7,9 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `.unpersist(` outside it. The allowed exceptions are caches whose
   * lifetime is not one operator call: a stage's output inside
   * `Lineage.commit`, and the caller-owned frames of
-  * `KeywordSearch.index` / `KeywordSearch.Index` (the serving index) and
-  * of `ConnectedComponents.runIncremental(materializeResult = false)`
-  * (the plan-inspection seam).
+  * `KeywordSearch.index` / `KeywordSearch.Index` (the serving index).
   */
 class CacheOwnerSpec extends AnyFunSuite {
 
@@ -18,8 +16,7 @@ class CacheOwnerSpec extends AnyFunSuite {
   private val allowed = Map(
     "graft/tables/Checkpoints.scala" -> Set.empty[String],
     "graft/tables/Lineage.scala" -> Set("commit"),
-    "graft/operators/KeywordSearch.scala" -> Set("index", "Index"),
-    "graft/canon/ConnectedComponents.scala" -> Set("runIncremental"))
+    "graft/operators/KeywordSearch.scala" -> Set("index", "Index"))
 
   test("only Checkpoints, Lineage.commit and the caller-owned frames manage caches") {
     val calls = SourceScan.calls(cacheCall, allowed)

@@ -276,15 +276,17 @@ class PlanShapeSpec extends AnyFunSuite {
     import spark2.implicits._
     val baseAssign = graft.canon.ConnectedComponents.run(spark,
       Seq(("b", "c")).toDF("src", "dst"), Seq("a", "b", "c").toDF("id"))
-    val out = graft.canon.ConnectedComponents.runIncremental(spark, baseAssign,
-      Seq(("c", "a"), ("z", "a")).toDF("src", "dst"), materializeResult = false)
-    val p = out.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    // the entry's eager checkpoint hides the plan: inspect the seam inside a
+    // scope, so the held assign/delta caches are in the plan
+    val p = graft.tables.Checkpoints.superstep(spark, None) { s =>
+      graft.canon.ConnectedComponents.incrementalFrame(s, spark, baseAssign,
+        Seq(("c", "a"), ("z", "a")).toDF("src", "dst"))
+        .queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    }
     assert(p.contains("BroadcastHashJoin"), p.take(1500))
     assert(!p.contains("SortMergeJoin"),
       "the world-sized base assignment must not sort-merge against the remap table\n" + p.take(1500))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
-    spark.catalog.clearCache() // materializeResult=false leaves assign/delta persisted
   }
 
   test("d15: rank window partitions on doc_id, N arrives broadcast, no cartesian") {

@@ -195,7 +195,8 @@ class KernelEquivalenceSpec extends AnyFunSuite {
   }
 
   test("Embedder.encode == its per-call String.split form") {
-    // `encode` as it was before its tokenizer Pattern was hoisted
+    // `encode` in its split form: tokens are the non-empty pieces of a
+    // `\W+` split of the lowercased text, each hashed with String.hashCode
     def mix(h0: Int): Int = {
       var h = h0
       h ^= h >>> 16; h *= 0x85ebca6b; h ^= h >>> 13; h *= 0xc2b2ae35; h ^= h >>> 16
@@ -225,7 +226,11 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     val chars = "abcXYZ09 _-.,'\t\néÉßü\u0130\u212A日本語\u00A0"
     val rnd = new scala.util.Random(29)
     val texts = Seq("", " ", "..", "\u0130stanbul \u0130I", "\u212Aelvin KELVIN kelvin", "Straße STRASSE",
-      "naïve café, ÉCOLE", "日本語 テキスト", "under_score  tab\tnew\nline") ++
+      "naïve café, ÉCOLE", "日本語 テキスト", "under_score  tab\tnew\nline",
+      // all separators; runs of '_' and digits; separators at both ends;
+      // a text that grows when lowercased (each İ becomes two chars)
+      " .,-\t\n\u00A0é日", "___ 0099 _9_ 1_a 42", "  ..edge words..  ", "-x-", "x", "_",
+      "\u0130\u0130\u0130", "A\u0130B \u0130x\u0130 \u0130") ++
       (0 until 500).map(_ => Seq.fill(rnd.nextInt(40))(chars.charAt(rnd.nextInt(chars.length))).mkString)
     texts.foreach { t =>
       assert(graft.link.Embedder.encode(t).sameElements(encodeSplit(t)), s"text ${t.toSeq}")

@@ -72,7 +72,9 @@ class SnakValueSpec extends AnyFunSuite {
           if (n.has("id")) out += n.get("id").asText()
         case "quantity" =>
           val n = parse(valueJson)
-          val unit = if (n.has("unit")) n.get("unit").asText() else "1"
+          // a JSON-null unit references nothing: the textifier renders the
+          // bare amount and never looks it up (it was referenced as "null")
+          val unit = if (!n.has("unit") || n.get("unit").isNull) "1" else n.get("unit").asText()
           if (unit != "1") out += unit.substring(unit.lastIndexOf('/') + 1)
         case _ =>
       }
@@ -188,6 +190,22 @@ class SnakValueSpec extends AnyFunSuite {
       checked += 1
     }
     assert(checked == datavalues.size * datatypes.size * snaktypes.size)
+  }
+
+  test("a quantity with a JSON-null unit references no label, and renders as before") {
+    def entity(unit: String) = WikidataJson.normalize(WikidataJson.parseLine(item(
+      snakJson("value", "quantity", Some(s"""{"value":{"amount":"+5","unit":$unit}}""")))).get)
+    val nullUnit = entity("null")
+    assert(TextifyStage.referencedIds(nullUnit) == Seq("P31", "P580"))
+    // the label of an entity named "null" is never read
+    val snak = nullUnit.claims.head.claims.head.mainsnak
+    for (lang <- langs; labelOf <- Seq(labels.get _, (labels + ("null" -> "nil")).get _))
+      assert(new Textifier(lang, labelOf).mainsnakToValue(snak) == Some("+5"))
+    // a unit that is the string "null" is a real reference, and is looked up
+    val stringUnit = entity("\"null\"")
+    assert(TextifyStage.referencedIds(stringUnit) == Seq("P31", "null", "P580"))
+    assert(new Textifier(langs.head, Map("null" -> "nil").get).mainsnakToValue(
+      stringUnit.claims.head.claims.head.mainsnak) == Some("+5 nil"))
   }
 
   test("Dataset[Entity] from DumpSource.entities encodes and decodes every datatype's value") {
