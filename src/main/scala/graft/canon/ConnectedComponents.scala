@@ -137,8 +137,8 @@ object ConnectedComponents {
     * plan-shape spec inspects (the entry's eager checkpoint hides it).
     */
   def incrementalFrame(s: Checkpoints.Superstep, spark: SparkSession, baseAssign: DataFrame,
-                       deltaEdges: DataFrame, maxIterations: Int = 50,
-                       checkpointDir: Option[String] = None): DataFrame = {
+                       deltaEdges: DataFrame, maxIterations: Int,
+                       checkpointDir: Option[String]): DataFrame = {
     val base = baseAssign.select(col("id"), col("component"))
     // delta edges are scanned three times below (endpoint union + both
     // contraction joins) — hold so an expensive upstream (a crawl parse)

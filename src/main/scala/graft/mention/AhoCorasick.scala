@@ -20,20 +20,17 @@ final case class Mention(surface: String, qids: Seq[String], begin: Int, end: In
   * outgrows executor broadcast budget, shard by surface hash and run N
   * passes (SURVEY.md §7.4).
   *
-  * Per-char cost: one goto transition (amortized over fail links) plus
-  * the nodes that actually have outputs. Each node's output link is the
-  * nearest node on its fail chain that has outputs, so the output walk
-  * skips output-less nodes instead of walking the whole fail chain; and
-  * the root, where most chars restart, has a 128-entry table for ASCII
-  * chars in place of the binary search. Memory: one `Int` per node for the
-  * output links (no merged output lists) plus the 128-entry table.
+  * Per-char cost: one goto transition (amortized over fail links) plus a
+  * walk of the new state's fail chain for outputs. The root, where most
+  * chars restart, answers ASCII chars from a 128-entry table instead of
+  * the binary search; that table is the only memory on top of the CSR
+  * arrays.
   */
 final class AhoCorasick private (
     edgeOffsets: Array[Int],   // node -> [start, end) into edgeChars/edgeTargets
     edgeChars: Array[Char],    // sorted within each node's range
     edgeTargets: Array[Int],
     fail: Array[Int],
-    outLink: Array[Int],       // node -> nearest fail-chain node with outputs, 0 if none
     outOffsets: Array[Int],    // node -> [start, end) into outPatterns
     outPatterns: Array[Int],
     patterns: Array[String],
@@ -67,12 +64,9 @@ final class AhoCorasick private (
 
   private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c)
 
-  private def hasOutputs(s: Int): Boolean = outOffsets(s) < outOffsets(s + 1)
-
-  /** Calls `hit(begin, patternIdx)` for every boundary-filtered match, by
-    * end position ascending and, per end, longest first.
-    */
-  private def scan(text: String)(hit: (Int, Int) => Unit): Unit = {
+  /** All raw matches (begin, end, patternIdx), boundary-filtered. */
+  private def rawMatches(text: String): mutable.ArrayBuffer[(Int, Int, Int)] = {
+    val hits = mutable.ArrayBuffer.empty[(Int, Int, Int)]
     var state = 0
     var i = 0
     while (i < text.length) {
@@ -80,7 +74,7 @@ final class AhoCorasick private (
       var nxt = step(state, c)
       while (state != 0 && nxt < 0) { state = fail(state); nxt = step(state, c) }
       state = if (nxt >= 0) nxt else 0
-      var s = if (hasOutputs(state)) state else outLink(state)
+      var s = state
       while (s != 0) {
         var oi = outOffsets(s)
         val oe = outOffsets(s + 1)
@@ -90,17 +84,15 @@ final class AhoCorasick private (
           val okLeft = begin == 0 || !isWordChar(text.charAt(begin - 1)) || !isWordChar(patterns(p).charAt(0))
           val okRight = i + 1 >= text.length || !isWordChar(text.charAt(i + 1)) ||
             !isWordChar(patterns(p).charAt(patterns(p).length - 1))
-          if (okLeft && okRight) hit(begin, p)
+          if (okLeft && okRight) hits += ((begin, i + 1, p))
           oi += 1
         }
-        s = outLink(s)
+        s = fail(s)
       }
       i += 1
     }
+    hits
   }
-
-  private def mention(begin: Int, p: Int): Mention =
-    Mention(patterns(p), payloads(p).toSeq, begin, begin + patterns(p).length)
 
   /** All boundary-filtered matches, overlap-UNresolved — the per-shard
     * primitive when the dictionary is hash-sharded across multiple passes:
@@ -108,32 +100,14 @@ final class AhoCorasick private (
     * replays the exact single-trie overlap policy over their union. Ordered
     * by end position ascending, longest first per end.
     */
-  def findRawMentions(text: String): Seq[Mention] = {
-    val hits = mutable.ArrayBuffer.empty[Mention]
-    scan(text)((b, p) => hits += mention(b, p))
-    hits.toSeq
-  }
+  def findRawMentions(text: String): Seq[Mention] =
+    rawMatches(text).map { case (b, e, p) =>
+      Mention(patterns(p), payloads(p).toSeq, b, e)
+    }.toSeq
 
-  /** Leftmost-longest non-overlapping mentions; equal to
-    * `resolveLeftmostLongest(findRawMentions(text))`. The longest match at
-    * each begin is kept in two arrays indexed by begin, then a greedy scan
-    * takes it and skips past its end.
-    */
-  def findMentions(text: String): Seq[Mention] = {
-    val bestLen = new Array[Int](text.length)   // 0: no match begins here
-    val bestPat = new Array[Int](text.length)
-    scan(text) { (b, p) =>
-      val len = patterns(p).length
-      if (len > bestLen(b)) { bestLen(b) = len; bestPat(b) = p }
-    }
-    val res = mutable.ArrayBuffer.empty[Mention]
-    var i = 0
-    while (i < text.length) {
-      if (bestLen(i) > 0) { res += mention(i, bestPat(i)); i += bestLen(i) }
-      else i += 1
-    }
-    res.toSeq
-  }
+  /** Leftmost-longest non-overlapping mentions. */
+  def findMentions(text: String): Seq[Mention] =
+    AhoCorasick.resolveLeftmostLongest(findRawMentions(text))
 }
 
 object AhoCorasick {
@@ -181,7 +155,6 @@ object AhoCorasick {
     // phase 2: BFS fail links
     val n = goto.length
     val fail = Array.fill(n)(0)
-    val outLink = Array.fill(n)(0)
     val queue = mutable.Queue.empty[Int]
     goto(0).values.foreach(queue.enqueue(_))
     while (queue.nonEmpty) {
@@ -191,8 +164,6 @@ object AhoCorasick {
         var st = fail(r)
         while (st != 0 && !goto(st).contains(c)) st = fail(st)
         fail(s) = if (goto(st).contains(c) && goto(st)(c) != s) goto(st)(c) else 0
-        // fail(s) is shallower than s, so BFS has already set its link
-        outLink(s) = if (outB(fail(s)).nonEmpty) fail(s) else outLink(fail(s))
       }
     }
 
@@ -224,7 +195,7 @@ object AhoCorasick {
       outB(i).foreach { p => outPatterns(k) = p; k += 1 }
       i += 1
     }
-    new AhoCorasick(edgeOffsets, edgeChars, edgeTargets, fail, outLink,
+    new AhoCorasick(edgeOffsets, edgeChars, edgeTargets, fail,
       outOffsets, outPatterns, patterns, payloads)
   }
 }

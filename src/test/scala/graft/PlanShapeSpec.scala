@@ -280,7 +280,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // scope, so the held assign/delta caches are in the plan
     val p = graft.tables.Checkpoints.superstep(spark, None) { s =>
       graft.canon.ConnectedComponents.incrementalFrame(s, spark, baseAssign,
-        Seq(("c", "a"), ("z", "a")).toDF("src", "dst"))
+        Seq(("c", "a"), ("z", "a")).toDF("src", "dst"), maxIterations = 50, checkpointDir = None)
         .queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     }
     assert(p.contains("BroadcastHashJoin"), p.take(1500))

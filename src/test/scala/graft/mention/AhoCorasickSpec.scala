@@ -83,7 +83,7 @@ class AhoCorasickSpec extends AnyFunSuite {
     (0 until 600).foreach { round =>
       val alphabet = alphabets(round % alphabets.size)
       val base = (0 until 1 + rnd.nextInt(4)).map(_ => randStr(1 + rnd.nextInt(5), alphabet))
-      // nested suffixes of one long pattern: output links chain across nodes
+      // nested suffixes of one long pattern: the output walk follows a long fail chain
       val long = randStr(4 + rnd.nextInt(4), alphabet)
       val nested = (1 until long.length).filter(_ => rnd.nextInt(3) > 0).map(long.substring)
       val pats = (base ++ nested :+ long).distinct
@@ -105,7 +105,7 @@ class AhoCorasickSpec extends AnyFunSuite {
 
   test("raw matches of nested suffixes come out longest first at each end") {
     // after "xb-a" the fail chain is "b-a" (a prefix of "b-ab", no output),
-    // then "-a" and "a": the output walk visits three nodes and skips one
+    // then "-a" and "a": the output walk reports three of its four nodes
     val ac = AhoCorasick.build(Seq("xb-a", "b-ab", "-a", "a").map(p => p -> Seq(p)))
     val text = "xb-a b-ab"
     assert(spans(ac.findRawMentions(text)) ==
