@@ -1,35 +1,24 @@
 package graft
 
 import graft.pipeline.KgPipeline
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the KG-construction pipeline.
   *
   *   spark-submit --class graft.RunPipeline <jar> <rootDir> [nPages]
   *
   * Master/executors come from spark-submit (`--master`, `--num-executors`);
-  * when launched standalone (sbt runMain) it falls back to local[*]. The
-  * pipeline is resumable by construction: re-submitting with the same root
-  * skips committed stages (stage markers keyed by input snapshot) and MERGE
-  * idempotency makes replays exactly-once — kill it anywhere and re-submit.
+  * when launched standalone (sbt runMain) it runs local[SPARK_GRAFT_CPUS]
+  * ([[SideMain.session]]). The pipeline is resumable by construction:
+  * re-submitting with the same root skips committed stages (stage markers
+  * keyed by input snapshot) and MERGE idempotency makes replays
+  * exactly-once — kill it anywhere and re-submit.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("target/kg")
     val nPages = args.lift(1).map(_.toLong).getOrElse(2000L)
 
-    val builder = SparkSession.builder()
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    // master only when not provided by spark-submit
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-                   .config("spark.sql.shuffle.partitions",
-                     sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SideMain.session("graft-kg-pipeline")
 
     val pipeline = new KgPipeline(spark, root, nPages)
     val triplesSnap = pipeline.run()

@@ -351,17 +351,4 @@ object Dedup {
         col("component").as("canon_id"),
         (col("id") === col("component")).as("kept"))
   }
-
-  /** Exact n-gram Jaccard re-check for minhash LSH candidates only. */
-  def ngramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
-    val cands = minhashLsh(spark, dir, threshold = 0.2).select("a", "b")
-    val d = withShingles(spark, dir)
-    cands
-      .join(d.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(d.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-      .select(col("a"), col("b"),
-        (size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          size(array_union(col("sha"), col("shb")))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
 }

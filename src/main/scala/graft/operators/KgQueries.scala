@@ -428,9 +428,11 @@ object KgQueries {
     * the explode + id assignment.
     */
   def chunks(spark: SparkSession, dir: String, maxTokens: Int = 60): DataFrame = {
+    import spark.implicits._
+    // kg6 chunks every page as the en variant
+    val enPages = payloads(spark).map(_.copy(lang = "en"))
     val arrays = TextifyStage.chunkArrays(spark,
-      TextifyStage.withLabelMaps(spark, payloads(spark), labels(spark), _ => "en"),
-      maxTokens, langOverride = Some("en"))
+      TextifyStage.withLabelMaps(spark, enPages, labels(spark)), maxTokens)
     TextifyStage.explodeChunks(materializeForOracle(arrays, "kg6_chunk_arrays"))
       .select(col("doc_id").as("chunk_id"), col("qid"), col("chunk"), col("text"))
   }

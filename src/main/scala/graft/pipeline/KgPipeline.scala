@@ -170,7 +170,7 @@ final class KgPipeline(spark: SparkSession, root: String,
     checkFail("mentions")
 
     // stage: link — embeddings + cosine top-K per mention
-    val linksSnap = lineage.commit("link", mentionsSnap)(
+    lineage.commit("link", mentionsSnap)(
       linksOf(textsTbl.read(), mentionsTbl.read(), pages))(linksTbl.mergeScoped(_, urlScope(pages)))
     checkFail("link")
 

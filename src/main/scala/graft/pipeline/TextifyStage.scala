@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft.model.{Entity, WikidataJson}
 import graft.textify.{LangVariant, Textifier}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -101,11 +102,9 @@ object TextifyStage {
     * dimension is (id, lang, label) and each page's references join against
     * its own variant's data language (the reference resolves value labels
     * from the per-LANG-normalized DB). Shared by [[render]] and
-    * [[renderChunks]]; `langOf` maps a page to the variant whose data
-    * language should resolve it. Each call bumps [[gatherJoinCalls]].
+    * [[renderChunksResolved]]. Each call bumps [[gatherJoinCalls]].
     */
-  def withLabelMaps(spark: SparkSession, payloads: Dataset[PagePayload],
-                    labels: DataFrame, langOf: PagePayload => String = _.lang)
+  def withLabelMaps(spark: SparkSession, payloads: Dataset[PagePayload], labels: DataFrame)
       : Dataset[(PagePayload, Map[String, String])] = {
     import spark.implicits._
     gatherJoinCalls.incrementAndGet()
@@ -113,7 +112,7 @@ object TextifyStage {
     val refs = payloads.flatMap { pp =>
       WikidataJson.parseLine(pp.payload).toSeq.flatMap { item =>
         val e = WikidataJson.normalize(item, "en") // claims are lang-independent
-        val dl = LangVariant.dataLang(langOf(pp))
+        val dl = LangVariant.dataLang(pp.lang)
         referencedIds(e).map(r => (pp.url, r, dl))
       }
     }.toDF("url", "ref", "ref_lang")
@@ -132,6 +131,16 @@ object TextifyStage {
       }
   }
 
+  /** The per-page render every textify path shares: `item` normalized in
+    * the data language of variant `lang`, and the variant's [[Textifier]]
+    * resolving each referenced id through `labelOf(id, dataLang)`.
+    */
+  def pageTextifier(item: JsonNode, lang: String,
+                    labelOf: (String, String) => Option[String]): (Entity, Textifier) = {
+    val dl = LangVariant.dataLang(lang)
+    (WikidataJson.normalize(item, dl), new Textifier(LangVariant(lang), labelOf(_, dl)))
+  }
+
   /** Render extracted text per page — byte-identical to the reference's
     * serialization for that page's entity and language variant, with the
     * entity normalized in the variant's DATA language (per-LANG pipeline
@@ -140,7 +149,7 @@ object TextifyStage {
     * dirty page must not abort a corpus-scale run).
     */
   def render(spark: SparkSession, payloads: Dataset[PagePayload], labels: DataFrame): DataFrame =
-    renderResolved(spark, withLabelMaps(spark, payloads, labels, _.lang))
+    renderResolved(spark, withLabelMaps(spark, payloads, labels))
 
   /** [[render]] over an ALREADY label-resolved frame — the pipeline computes
     * [[withLabelMaps]] once (persisted) and feeds both this and
@@ -153,34 +162,24 @@ object TextifyStage {
     import spark.implicits._
     resolved.flatMap { case (pp, labelMap) =>
       WikidataJson.parseLine(pp.payload).map { item =>
-        val entity = WikidataJson.normalize(item, LangVariant.dataLang(pp.lang))
-        val textifier = new Textifier(LangVariant(pp.lang), labelMap.get)
+        val (entity, textifier) = pageTextifier(item, pp.lang, (id, _) => labelMap.get(id))
         (pp.url, entity.id, pp.lang, textifier.entityToText(entity))
       }
     }.toDF("url", "id", "lang", "text")
   }
 
   /** Token-budget chunk explode per page (P9/T6 — the reference's stage 3
-    * chunker, docker/3_Add_Wikidata_to_AstraDB/run.py:74-88) with the SAME
-    * gather-join label resolution as [[render]]: no broadcast or driver
-    * collect of the label dimension, so the docs stage survives a 9.2M-entity
-    * (or 100×) dictionary. Output: (doc_id, qid, lang, chunk, text) with
-    * deterministic doc_id = qid_lang_chunkIdx.
-    */
-  def renderChunks(spark: SparkSession, payloads: Dataset[PagePayload], labels: DataFrame,
-                   maxTokens: Int, langOverride: Option[String] = None): DataFrame = {
-    val langOf: PagePayload => String = pp => langOverride.getOrElse(pp.lang)
-    renderChunksResolved(spark, withLabelMaps(spark, payloads, labels, langOf),
-      maxTokens, langOverride)
-  }
-
-  /** [[renderChunks]] over an already label-resolved frame (see
-    * [[renderResolved]] for why the pipeline shares it).
+    * chunker, docker/3_Add_Wikidata_to_AstraDB/run.py:74-88) over an
+    * already label-resolved frame: the SAME gather-join label resolution as
+    * [[render]] (see [[renderResolved]] for why the pipeline shares it), so
+    * the docs stage survives a 9.2M-entity (or 100×) dictionary. Output:
+    * (doc_id, qid, lang, chunk, text) with deterministic doc_id =
+    * qid_lang_chunkIdx.
     */
   def renderChunksResolved(spark: SparkSession,
                            resolved: Dataset[(PagePayload, Map[String, String])],
-                           maxTokens: Int, langOverride: Option[String] = None): DataFrame =
-    explodeChunks(chunkArrays(spark, resolved, maxTokens, langOverride))
+                           maxTokens: Int): DataFrame =
+    explodeChunks(chunkArrays(spark, resolved, maxTokens))
 
   /** The non-SQL chunking kernel as one row per entity: (qid, lang,
     * chunks array). The explode + deterministic id assignment that follows
@@ -188,16 +187,13 @@ object TextifyStage {
     */
   def chunkArrays(spark: SparkSession,
                   resolved: Dataset[(PagePayload, Map[String, String])],
-                  maxTokens: Int, langOverride: Option[String] = None): DataFrame = {
+                  maxTokens: Int): DataFrame = {
     import spark.implicits._
-    val langOf: PagePayload => String = pp => langOverride.getOrElse(pp.lang)
     resolved.flatMap { case (pp, labelMap) =>
       WikidataJson.parseLine(pp.payload).toSeq.map { item =>
-        val lang = langOf(pp)
-        val e = WikidataJson.normalize(item, LangVariant.dataLang(lang))
-        val textifier = new Textifier(LangVariant(lang), labelMap.get)
+        val (e, textifier) = pageTextifier(item, pp.lang, (id, _) => labelMap.get(id))
         val tok = new graft.textify.SimpleTokenizer(8)
-        (e.id, lang, graft.textify.Chunker.chunkText(textifier, e, tok, maxTokens))
+        (e.id, pp.lang, graft.textify.Chunker.chunkText(textifier, e, tok, maxTokens))
       }
     }.toDF("qid", "lang", "chunks")
   }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.JsonNode
 import graft.model.WikidataJson
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -40,6 +39,4 @@ object DumpSource {
     import spark.implicits._
     lines(spark, path).flatMap(l => WikidataJson.parseLine(l).map(WikidataJson.normalize(_, language)))
   }
-
-  def parseItem(json: String): Option[JsonNode] = WikidataJson.parseLine(json)
 }

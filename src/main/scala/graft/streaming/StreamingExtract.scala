@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.model.WikidataJson
-import graft.pipeline.PagesGen
-import graft.textify.{LangVariant, Textifier}
+import graft.pipeline.{PagesGen, TextifyStage}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -49,11 +48,9 @@ object StreamingExtract {
       .select("url", "html", "lang").as[(String, Array[Byte], String)]
       .flatMap { case (url, html, lang) =>
         PagesGen.extractPayload(html).flatMap(WikidataJson.parseLine).map { item =>
-          val dl = LangVariant.dataLang(lang)
-          val e = WikidataJson.normalize(item, dl)
-          (url, e.id,
-            new Textifier(LangVariant(lang), id => labels.value.get((id, dl)))
-              .entityToText(e))
+          val (e, textifier) = TextifyStage.pageTextifier(item, lang,
+            (id, dl) => labels.value.get((id, dl)))
+          (url, e.id, textifier.entityToText(e))
         }
       }
       .toDF("url", "id", "text")

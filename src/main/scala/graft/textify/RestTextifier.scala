@@ -1,7 +1,6 @@
 package graft.textify
 
 import com.fasterxml.jackson.databind.JsonNode
-import graft.model.WikidataJson
 import scala.jdk.CollectionConverters._
 
 /** T13 — the reference's REST-API statement textification with per-datatype
@@ -117,8 +116,4 @@ object RestTextifier {
     }
     descRow +: stmtRows
   }
-
-  def itemToStatementsJson(json: String, lang: String,
-                           labelOf: String => Option[String]): Seq[RestStatement] =
-    WikidataJson.parseLine(json).map(itemToStatements(_, lang, labelOf)).getOrElse(Seq.empty)
 }

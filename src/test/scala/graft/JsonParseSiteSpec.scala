@@ -17,7 +17,7 @@ class JsonParseSiteSpec extends AnyFunSuite {
   private val allowed = Map(
     "graft/model/WikidataJson.scala" -> Set("parseLine"),
     "graft/tables/MergeTable.scala" -> Set("manifestNode"),
-    "graft/ScalingBench.scala" -> Set("main"),
+    "graft/ScalingBench.scala" -> Set("readJson"),
     "graft/export/HfExport.scala" -> Set("renderRows"))
 
   test("only the line parse, manifests, measure files and label maps parse JSON") {
