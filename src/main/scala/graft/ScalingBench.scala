@@ -16,9 +16,10 @@ import java.nio.file.{Files, Path, Paths}
   * efficiency ≥ 0.8 from N to 4N executors").
   *
   * No real cluster exists in this sandbox, so per the driver's instruction
-  * the same job runs at two parallelism levels — local[8] and local[32] —
-  * over the SAME on-disk input (a pages-corpus parquet written once), and
-  * efficiency = (T_8 / T_32) / 4 is reported with both throughputs in
+  * the same job runs at two parallelism levels — a small and a big leg,
+  * `local[small]` and `local[big]` — over the SAME on-disk input (a
+  * pages-corpus parquet written once), and efficiency =
+  * (T_small / T_big) / (big / small) is reported with both throughputs in
   * BENCH/BASELINE.md.
   *
   * Methodology notes (what is timed and why):
@@ -40,7 +41,7 @@ import java.nio.file.{Files, Path, Paths}
   *    variance at these sizes swamped single-shot runs; the minimum is the
   *    reproducible number).
   *
-  * Usage: `runMain graft.ScalingBench 8|32` per leg (own JVM — sharing a
+  * Usage: `runMain graft.ScalingBench <threads>` per leg (own JVM — sharing a
   * JVM skewed the second leg; SPARK_GRAFT_SCALE_PAGES sets the corpus size,
   * default 120000, and each leg records it), then
   * `runMain graft.ScalingBench report [small] [big]`, which reads the page
@@ -175,27 +176,27 @@ object ScalingBench {
       (n.get("narrow_sec").asDouble(), n.get("shuffle_sec").asDouble(),
         (0 until 4).map(i => n.get("counts").get(i).asLong()), n.path("n_pages").asLong(-1))
     }
-    val (n8, s8, c8, nPages) = leg(small)
-    val (n32, s32, c32, nPages32) = leg(big)
-    require(nPages > 0 && nPages == nPages32,
-      s"both legs must record the same n_pages (re-run a leg that has none): $nPages vs $nPages32")
-    require(c8 == c32, s"counts must not depend on parallelism: $c8 vs $c32")
+    val (nSmall, sSmall, cSmall, nPages) = leg(small)
+    val (nBig, sBig, cBig, nPagesBig) = leg(big)
+    require(nPages > 0 && nPages == nPagesBig,
+      s"both legs must record the same n_pages (re-run a leg that has none): $nPages vs $nPagesBig")
+    require(cSmall == cBig, s"counts must not depend on parallelism: $cSmall vs $cBig")
 
-    val t8 = n8 + s8
-    val t32 = n32 + s32
-    val eff = (t8 / t32) / ratio
-    val effNarrow = (n8 / n32) / ratio
-    val effShuffle = (s8 / s32) / ratio
-    val dps8 = nPages / t8
-    val dps32 = nPages / t32
-    println(s"""{"metric":"scaling_efficiency","value":${f"$eff%.4f"},"unit":"ratio","t8_sec":${f"$t8%.2f"},"t32_sec":${f"$t32%.2f"},"narrow_eff":${f"$effNarrow%.4f"},"shuffle_eff":${f"$effShuffle%.4f"},"docs_per_sec_8":${f"$dps8%.1f"},"docs_per_sec_32":${f"$dps32%.1f"},"n_pages":$nPages}""")
+    val tSmall = nSmall + sSmall
+    val tBig = nBig + sBig
+    val eff = (tSmall / tBig) / ratio
+    val effNarrow = (nSmall / nBig) / ratio
+    val effShuffle = (sSmall / sBig) / ratio
+    val dpsSmall = nPages / tSmall
+    val dpsBig = nPages / tBig
+    println(s"""{"metric":"scaling_efficiency","value":${f"$eff%.4f"},"unit":"ratio","small_threads":$small,"big_threads":$big,"t_small_sec":${f"$tSmall%.2f"},"t_big_sec":${f"$tBig%.2f"},"narrow_eff":${f"$effNarrow%.4f"},"shuffle_eff":${f"$effShuffle%.4f"},"docs_per_sec_small":${f"$dpsSmall%.1f"},"docs_per_sec_big":${f"$dpsBig%.1f"},"n_pages":$nPages}""")
 
     Files.createDirectories(Paths.get("BENCH"))
     val md =
       s"""# BENCH/BASELINE — measured numbers
          |
          |Generated by `graft.ScalingBench` (one JVM per leg:
-         |`sbt "runMain graft.ScalingBench 8"`, `… 32`, `… report`).
+         |`sbt "runMain graft.ScalingBench $small"`, `… $big`, `… report $small $big`).
          |
          |## Scaling efficiency, N → ${if (ratio == 4.0) "4N" else s"${ratio}N"} parallelism (BASELINE.json gate: ≥ 0.8)
          |
@@ -217,8 +218,8 @@ object ScalingBench {
          |
          || parallelism | wall-clock | docs/sec |
          ||---|---|---|
-         || `local[$small]` (pinned to $small cores) | ${f"$t8%.2f"} s | ${f"$dps8%.1f"} |
-         || `local[$big]` (pinned to $big cores) | ${f"$t32%.2f"} s | ${f"$dps32%.1f"} |
+         || `local[$small]` (pinned to $small cores) | ${f"$tSmall%.2f"} s | ${f"$dpsSmall%.1f"} |
+         || `local[$big]` (pinned to $big cores) | ${f"$tBig%.2f"} s | ${f"$dpsBig%.1f"} |
          |
          |**Scaling efficiency = (T_$small / T_$big) / ${f"$ratio%.0f"} = ${f"$eff%.3f"}**
          |
@@ -226,8 +227,8 @@ object ScalingBench {
          |
          || phase | T_$small | T_$big | efficiency |
          ||---|---|---|---|
-         || narrow CPU kernel | ${f"$n8%.2f"} s | ${f"$n32%.2f"} s | ${f"$effNarrow%.3f"} |
-         || shuffle stages    | ${f"$s8%.2f"} s | ${f"$s32%.2f"} s | ${f"$effShuffle%.3f"} |
+         || narrow CPU kernel | ${f"$nSmall%.2f"} s | ${f"$nBig%.2f"} s | ${f"$effNarrow%.3f"} |
+         || shuffle stages    | ${f"$sSmall%.2f"} s | ${f"$sBig%.2f"} s | ${f"$effShuffle%.3f"} |
          |
          |(A phase efficiency slightly above 1 is a pinning artifact, not a
          |superlinear engine: JVM service threads — GC, JIT, Spark's own
@@ -246,8 +247,8 @@ object ScalingBench {
          |loop. On a real cluster both memory bandwidth and shuffle disks/NICs
          |scale with executor count.
          |
-         |Cross-leg equality: docs=${c8(0)}, mentions=${c8(1)}, triples=${c8(2)},
-         |checksum=${c8(3)} — identical at both parallelism levels.
+         |Cross-leg equality: docs=${cSmall(0)}, mentions=${cSmall(1)}, triples=${cSmall(2)},
+         |checksum=${cSmall(3)} — identical at both parallelism levels.
          |
          |## Per-query steady-state times
          |
@@ -280,9 +281,9 @@ object ScalingBench {
           val vals = legs.map(f => readJson(Paths.get(f)))
             .filter(_.path("n_pages").asLong(-1) == nPages)
             .map(nn => (nn.get("narrow_sec").asDouble(), nn.get("threads").asInt()))
-          if (vals.nonEmpty) vals.minBy(_._1) else (n32, big)
+          if (vals.nonEmpty) vals.minBy(_._1) else (nBig, big)
         }
-        val kernel32 = nPages / bestKernelSec
+        val kernelBest = nPages / bestKernelSec
         s"""
            |## vs the reference's single-node throughput
            |
@@ -301,11 +302,11 @@ object ScalingBench {
            |README.md:24) the reference's optimistic ceiling for those two
            |stages is ~${f"$ceiling%.0f"} docs/sec — ignoring its JSON parsing,
            |queue hops, SQLite contention and network sink entirely. The graft
-           |narrow kernel sustains ${f"$kernel32%.0f"} docs/sec at $bestThreads
+           |narrow kernel sustains ${f"$kernelBest%.0f"} docs/sec at $bestThreads
            |cores on the same machine while ALSO doing payload parsing,
            |Aho-Corasick mention detection, embedding, and checksumming per
            |document —
-           |${f"${kernel32 / ceiling}%.1f"}× the reference's ceiling, with the gap
+           |${f"${kernelBest / ceiling}%.1f"}× the reference's ceiling, with the gap
            |growing with cores (the reference is process-count-bound and its
            |sink serializes on a SQLite write lock).
            |""".stripMargin

@@ -35,7 +35,7 @@ object AliasEdges {
   def sameAsEdges(payloads: Dataset[PagePayload]): DataFrame = {
     import payloads.sparkSession.implicits._
     payloads
-      .flatMap(pp => WikidataJson.parseLine(pp.payload).toSeq.flatMap(WikidataJson.toClaimRows(_, "en")))
+      .flatMap(pp => WikidataJson.claimRowsOf(pp.payload))
       .filter(r => r.pid == PagesGen.sameAsPid && r.isQidValue)
       .map(r => (r.qid, r.valueScalar)).toDF("src", "dst")
   }

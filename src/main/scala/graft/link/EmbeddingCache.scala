@@ -27,10 +27,7 @@ final class EmbeddingCache(spark: SparkSession, table: MergeTable) {
       import spark.implicits._
       val keyed = texts.select(col("id"), col("text"), md5(col("text")).as("text_key"))
 
-      val cached = table.currentSnapshot match {
-        case Some(_) => table.read()
-        case None    => Seq.empty[(String, Seq[Float])].toDF("text_key", "vec")
-      }
+      val cached = table.readOrEmpty(Seq.empty[(String, Seq[Float])].toDF("text_key", "vec"))
 
       val joined = s.hold(keyed.join(cached, Seq("text_key"), "left"))
       val misses = joined.filter(col("vec").isNull)

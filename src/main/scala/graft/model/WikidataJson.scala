@@ -281,4 +281,10 @@ object WikidataJson {
     }
     out.toSeq
   }
+
+  /** A dump line or page payload to its claim rows: [[parseLine]] then
+    * [[toClaimRows]]; empty for a line that does not parse.
+    */
+  def claimRowsOf(line: String, language: String = "en"): Seq[ClaimRow] =
+    parseLine(line).map(toClaimRows(_, language)).getOrElse(Seq.empty)
 }

@@ -127,9 +127,7 @@ object KgQueries {
     */
   private def claimRows(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    payloads(spark).map(_.payload).flatMap { line =>
-      WikidataJson.parseLine(line).map(WikidataJson.toClaimRows(_, "en")).getOrElse(Seq.empty)
-    }.toDF()
+    payloads(spark).map(_.payload).flatMap(WikidataJson.claimRowsOf(_)).toDF()
   }
 
   /** Triple extraction over the corpus payloads. Under graft.Verify the
@@ -580,8 +578,7 @@ object KgQueries {
       .as[(java.sql.Timestamp, Array[Byte])]
       .flatMap { case (ts, html) =>
         PagesGen.extractPayload(html).toSeq
-          .flatMap(WikidataJson.parseLine)
-          .flatMap(e => WikidataJson.toClaimRows(e, "en"))
+          .flatMap(WikidataJson.claimRowsOf(_))
           .map(r => (r.qid, r.pid, r.valueScalar, ts))
       }.toDF("qid", "pid", "value", "ts")
   }

@@ -49,9 +49,9 @@ final class KgPipeline(spark: SparkSession, root: String,
   val pagesTbl = new MergeTable(spark, s"$root/pages", Seq("url"))
   // NOTE: keyed (id, lang) since the per-language label dimension landed —
   // a `labels` table written by the earlier id-keyed layout is NOT readable
-  // in place (different bucket hashing + schema). MergeTable.validateLayout
-  // enforces this: a mismatched OR unstamped on-disk bucketCols is a hard
-  // error, so pointing new code at a legacy root fails fast instead of
+  // in place (different bucket hashing + schema). MergeTable's manifest
+  // parser enforces this: a mismatched OR unstamped on-disk bucketCols is a
+  // hard error, so pointing new code at a legacy root fails fast instead of
   // silently mis-bucketing merges.
   val labelsTbl = new MergeTable(spark, s"$root/labels", Seq("id", "lang"))
   val idFlagsTbl = new MergeTable(spark, s"$root/id_flags", Seq("id"))

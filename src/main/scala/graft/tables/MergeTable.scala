@@ -3,7 +3,8 @@ package graft.tables
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -16,18 +17,27 @@ import scala.jdk.CollectionConverters._
   * Layout:
   *   path/data/snap-N/_bucket=K/ (parquet)  — data written by snapshot N
   *   path/_manifests/v{N}.json              — snapshot manifest:
-  *       {snapshotId, parent, rowCount, buckets: {K -> snap that owns K},
-  *        bucketRows: {K -> rows}, bucketCols, schema}
+  *       {snapshotId, parent, rowCount, createdMs,
+  *        buckets: {K -> snap that owns K}, bucketRows: {K -> rows},
+  *        bucketCols, schema}
   *   path/_current                          — current snapshot id (atomic move)
   *
-  * MERGE is read-merge-rewrite of *touched buckets only*: rows hash-bucket by
-  * key; a merge reads just the buckets present in the incoming batch,
-  * anti-joins old-by-key, unions, and rewrites those buckets under a new
-  * snapshot — unaffected buckets keep their old files (manifest pointers
-  * carry over). At 100 TB this bounds merge I/O to O(touched data), the same
-  * contract as Iceberg MERGE with bucket partitioning. Bucket files are read
-  * with the manifest's recorded schema (no schema-inference job), and a new
-  * snapshot's row counts come from the footers of the files it wrote.
+  * Rows hash into [[MergeTable.Buckets]] (32) buckets by `bucketCols` (the
+  * scope columns of a scoped table, else the key). There is one manifest
+  * format and every reader requires all of its fields: a manifest without
+  * `bucketCols`, `buckets`, `bucketRows` or `schema` (a root written by an
+  * older layout), or whose `bucketCols` differ from this table's, is a hard
+  * error, never a silent re-bucketing.
+  *
+  * MERGE is read-merge-rewrite of *touched buckets only*: a merge reads just
+  * the buckets present in the incoming batch, anti-joins old-by-key, unions,
+  * and rewrites those buckets under a new snapshot — unaffected buckets keep
+  * their old files and row counts (manifest pointers carry over). At 100 TB
+  * this bounds merge I/O to O(touched data), the same contract as Iceberg
+  * MERGE with bucket partitioning. Bucket files are read with the manifest's
+  * recorded schema (no schema-inference job), and a new snapshot's row
+  * counts come from the footers of the files it wrote. A REPLACE is the same
+  * commit with no bucket carried over.
   *
   * Idempotency: deterministic keys + MERGE ⇒ re-running a stage converges to
   * the same table (ref analog: `INSERT … ON CONFLICT` upserts +
@@ -42,10 +52,10 @@ import scala.jdk.CollectionConverters._
   *   touches only its own buckets.
   */
 final class MergeTable(spark: SparkSession, val path: String,
-                       val keyCols: Seq[String], val numBuckets: Int = 32,
+                       val keyCols: Seq[String],
                        val scopeCols: Option[Seq[String]] = None) {
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val mapper = new ObjectMapper()
 
   private def currentFile = Paths.get(path, "_current")
   private def manifestFile(v: Long) = Paths.get(path, "_manifests", s"v$v.json")
@@ -55,57 +65,58 @@ final class MergeTable(spark: SparkSession, val path: String,
 
   def exists: Boolean = currentSnapshot.isDefined
 
-  private def manifestNode(v: Long) = mapper.readTree(Files.readString(manifestFile(v)))
-
-  /** One snapshot manifest. `bucketRows` lets merge carry untouched buckets'
-    * counts forward without re-reading their files (absent only in
-    * pre-upgrade manifests); `schema` is absent only in manifests written
-    * before schema stamping.
+  /** One snapshot manifest: the snapshot that owns each bucket, each
+    * bucket's row count (so a merge carries untouched buckets' counts
+    * forward without re-reading their files) and the table schema.
     */
-  private case class Manifest(buckets: Map[Int, Long], rowCount: Long,
-                              bucketRows: Map[Int, Long], schema: Option[StructType])
-
-  private def readManifest(v: Long): Manifest = {
-    val node = manifestNode(v)
-    def intMap(n: com.fasterxml.jackson.databind.JsonNode): Map[Int, Long] =
-      n.properties().asScala.map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
-    Manifest(intMap(node.get("buckets")), node.get("rowCount").asLong(),
-      Option(node.get("bucketRows")).map(intMap).getOrElse(Map.empty),
-      Option(node.get("schema")).map(n => DataType.fromJson(n.toString).asInstanceOf[StructType]))
+  private case class Manifest(buckets: Map[Int, Long], bucketRows: Map[Int, Long],
+                              schema: StructType) {
+    def rowCount: Long = bucketRows.values.sum
   }
 
-  /** A table's bucket hashing is part of its on-disk layout: merging with a
-    * DIFFERENT bucketing than the one that wrote it would neither find nor
-    * replace existing rows (silent duplicates). Manifests record it; a
-    * mismatch is a hard error, not a corruption.
+  /** The one manifest parser. A table's bucket hashing is part of its
+    * on-disk layout: merging with a DIFFERENT bucketing than the one that
+    * wrote it would neither find nor replace existing rows (silent
+    * duplicates), and a manifest missing a field cannot prove its layout,
+    * counts or schema — both are hard errors.
     */
-  private def validateLayout(): Unit = currentSnapshot.foreach { v =>
-    Option(manifestNode(v).get("bucketCols"))
-      .map(_.elements().asScala.map(_.asText()).toSeq) match {
-      case Some(stored) =>
-        if (stored != bucketCols)
-          throw new IllegalStateException(
-            s"table $path bucket layout mismatch: on-disk bucketCols=$stored vs " +
-              s"configured $bucketCols — recreate the table at a fresh root")
-      case None =>
-        // a manifest that predates layout stamping can't prove its bucketing;
-        // merging against it with ANY assumed layout could silently
-        // mis-bucket (duplicates / missed scope deletions) — hard error, same
-        // as a recorded mismatch
-        throw new IllegalStateException(
-          s"table $path manifest v$v records no bucketCols (pre-layout-stamp " +
-            s"table) — cannot verify it matches configured $bucketCols; " +
-            "recreate the table at a fresh root")
-    }
+  private def parseManifest(v: Long): Manifest = {
+    val node = mapper.readTree(Files.readString(manifestFile(v)))
+    def field(name: String): JsonNode = Option(node.get(name)).getOrElse(
+      throw new IllegalStateException(
+        s"table $path manifest v$v records no $name (written by an older table " +
+          "layout) — recreate the table at a fresh root"))
+    def intMap(name: String): Map[Int, Long] =
+      field(name).properties().asScala.map(e => e.getKey.toInt -> e.getValue.asLong()).toMap
+    val stored = field("bucketCols").elements().asScala.map(_.asText()).toSeq
+    if (stored != bucketCols)
+      throw new IllegalStateException(
+        s"table $path bucket layout mismatch: on-disk bucketCols=$stored vs " +
+          s"configured $bucketCols — recreate the table at a fresh root")
+    Manifest(intMap("buckets"), intMap("bucketRows"),
+      DataType.fromJson(field("schema").toString).asInstanceOf[StructType])
   }
 
-  def rowCount: Long = currentSnapshot.map(readManifest(_).rowCount).getOrElse(0L)
+  /** The one manifest renderer (the format [[parseManifest]] reads). */
+  private def renderManifest(snap: Long, parent: Long, m: Manifest): String = {
+    def intMapJson(m: Map[Int, Long]): String = m.toSeq.sortBy(_._1)
+      .map { case (b, s) => s""""$b": $s""" }.mkString("{", ", ", "}")
+    val bucketColsJson = bucketCols.map(c => "\"" + c + "\"").mkString("[", ", ", "]")
+    s"""{"snapshotId": $snap, "parent": $parent, "rowCount": ${m.rowCount},
+       | "createdMs": ${System.currentTimeMillis()}, "buckets": ${intMapJson(m.buckets)},
+       | "bucketRows": ${intMapJson(m.bucketRows)},
+       | "bucketCols": $bucketColsJson,
+       | "schema": ${m.schema.json}}""".stripMargin
+  }
+
+  def rowCount: Long = currentSnapshot.map(parseManifest(_).rowCount).getOrElse(0L)
 
   private def bucketDir(snap: Long, bucket: Int): String =
     s"$path/data/snap-$snap/_bucket=$bucket"
 
   private def bucketCols: Seq[String] = scopeCols.getOrElse(keyCols)
-  private def bucketExpr = pmod(xxhash64(bucketCols.map(col): _*), lit(numBuckets)).cast("int")
+  private def bucketExpr =
+    pmod(xxhash64(bucketCols.map(col): _*), lit(MergeTable.Buckets)).cast("int")
 
   /** Current table contents (without the internal bucket column). */
   def read(): DataFrame = currentSnapshot match {
@@ -115,28 +126,21 @@ final class MergeTable(spark: SparkSession, val path: String,
 
   /** Time travel: the table as of snapshot `v` — manifests are immutable and
     * old bucket files are never rewritten, so any historical snapshot stays
-    * readable (Iceberg snapshot-read semantics).
+    * readable (Iceberg snapshot-read semantics). Bucket files are read with
+    * the recorded schema, so no schema-inference job runs; Spark reads a
+    * user-given file schema as all-nullable, the same schema inference gives.
     */
   def readSnapshot(v: Long): DataFrame = {
-    val m = readManifest(v)
+    val m = parseManifest(v)
     val dirs = m.buckets.toSeq.map { case (b, snap) => bucketDir(snap, b) }
       .filter(d => Files.exists(Paths.get(d)))
-    if (dirs.nonEmpty) readParquet(m.schema, dirs)
-    else m.schema match {
-      // a scope-replace/replace can legally empty the table: keep the last
-      // recorded schema so downstream column references still resolve
-      case Some(st) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case None => spark.emptyDataFrame
-    }
+    // a scope-replace/replace can legally empty the table: keep the last
+    // recorded schema so downstream column references still resolve
+    if (dirs.nonEmpty) spark.read.schema(m.schema).parquet(dirs: _*) else empty(m.schema)
   }
 
-  /** Bucket files read with the recorded `schema`, so no schema-inference
-    * job runs; Spark reads a user-given file schema as all-nullable, the
-    * same schema inference gives. Only a manifest without one infers.
-    */
-  private def readParquet(schema: Option[StructType], dirs: Seq[String]): DataFrame =
-    schema.fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
+  private def empty(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Numeric ids parsed from a directory's entries via `pattern`'s first
     * group (shared by the manifest and data-dir listings).
@@ -155,9 +159,11 @@ final class MergeTable(spark: SparkSession, val path: String,
   def snapshots: Seq[Long] =
     listIds(Paths.get(path, "_manifests"), "v(\\d+)\\.json$".r)
 
+  /** The current contents, or an empty frame with `schemaOf`'s schema when
+    * the table has no snapshot yet.
+    */
   def readOrEmpty(schemaOf: DataFrame): DataFrame =
-    if (exists) read() else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
+    if (exists) read() else empty(schemaOf.schema)
 
   /** MERGE: upsert `df` by key. New rows win over old rows with the same key.
     * On a scoped table, additionally deletes old rows of every scope PRESENT
@@ -187,60 +193,65 @@ final class MergeTable(spark: SparkSession, val path: String,
     * global artifacts — canon/nodes/edges — are recomputed wholesale, so
     * rows absent from the recompute must not survive).
     */
-  def replace(df: DataFrame): Long = {
-    validateLayout()
-    val newSnap = allocateSnapshot()
-    val parent = currentSnapshot.getOrElse(0L)
-    val incoming = df.dropDuplicates(keyCols).withColumn("_bucket", bucketExpr)
-    Files.createDirectories(Paths.get(path, "_manifests"))
-    val staging = newStagingDir()
-    incoming.repartition(col("_bucket")).write.mode("overwrite").partitionBy("_bucket")
-      .parquet(staging.toString)
-    val newBucketRows = footerRows(stagedBuckets(staging))
-    commitManifest(newSnap, parent,
-      manifestJson(newSnap, parent, newBucketRows.keys.map(_ -> newSnap).toMap,
-        newBucketRows, df.schema.json), staging)
-    newSnap
-  }
+  def replace(df: DataFrame): Long = commit(df)((_, incoming) => (incoming, Set.empty))
 
-  private def mergeInternal(df: DataFrame, scopes: Option[DataFrame]): Long = {
-    validateLayout()
-    val newSnap = allocateSnapshot()
-    val incoming = df.dropDuplicates(keyCols).withColumn("_bucket", bucketExpr)
+  private def mergeInternal(df: DataFrame, scopes: Option[DataFrame]): Long =
+    commit(df) { (current, incoming) =>
+      val oldBuckets = current.fold(Map.empty[Int, Long])(_.buckets)
+      // buckets touched by this batch: from the processed SCOPES when given
+      // (a scope may have zero incoming rows but still demand a rewrite),
+      // else from the incoming rows
+      val touched = scopes.getOrElse(incoming)
+        .withColumn("_bucket", bucketExpr)
+        .select("_bucket").distinct().collect().map(_.getInt(0)).toSet
+      val touchedWithData = touched.filter(oldBuckets.contains)
+      val merged =
+        if (touchedWithData.isEmpty) incoming
+        else {
+          val oldDirs = touchedWithData.toSeq.map(b => bucketDir(oldBuckets(b), b))
+          val old = spark.read.schema(current.get.schema).parquet(oldDirs: _*)
+            .withColumn("_bucket", bucketExpr)
+          // key-anti for plain upsert; scope-anti replaces whole scopes. The
+          // key side reads the raw batch: duplicate keys on a left-anti join's
+          // right side do not change its result, so deduplicating them first
+          // would only cost a second pass over the batch
+          val survivors = scopes match {
+            case Some(s) => old.join(s, scopeCols.get, "left_anti")
+            case None    => old.join(df.select(keyCols.map(col): _*), keyCols, "left_anti")
+          }
+          // the anti-join puts join keys first: re-project to the incoming
+          // order so every snapshot's files share one column order
+          survivors.unionByName(incoming).select(incoming.columns.map(col): _*)
+        }
+      (merged, oldBuckets.keySet -- touched)
+    }
 
+  /** The one commit path of [[merge]], [[mergeScoped]] and [[replace]]. It
+    * reads the table's state once — the current snapshot and its manifest —
+    * and allocates the new snapshot id; `plan` turns that manifest and the
+    * deduplicated, bucketed batch into the rows to write and the old buckets
+    * to carry over untouched. The rows are written to a staging dir, counted
+    * from their footers, and committed by [[commitManifest]] under a
+    * manifest whose written buckets point at the new snapshot and whose
+    * carried buckets keep their owner and row count. Returns the new id.
+    */
+  private def commit(df: DataFrame)(
+      plan: (Option[Manifest], DataFrame) => (DataFrame, Set[Int])): Long = {
     val snap = currentSnapshot
     val parent = snap.getOrElse(0L)
-    val current = snap.map(readManifest)
-    val oldBuckets = current.fold(Map.empty[Int, Long])(_.buckets)
-
-    // buckets touched by this batch: from the processed SCOPES when given
-    // (a scope may have zero incoming rows but still demand a rewrite),
-    // else from the incoming rows
-    val touched = scopes.getOrElse(incoming)
-      .withColumn("_bucket", bucketExpr)
-      .select("_bucket").distinct().collect().map(_.getInt(0)).toSet
-    val touchedWithData = touched.filter(oldBuckets.contains)
-
-    val merged = (
-      if (touchedWithData.isEmpty) incoming
-      else {
-        val oldDirs = touchedWithData.toSeq.map(b => bucketDir(oldBuckets(b), b))
-        val old = readParquet(current.flatMap(_.schema), oldDirs).withColumn("_bucket", bucketExpr)
-        // key-anti for plain upsert; scope-anti replaces whole scopes. The
-        // key side reads the raw batch: duplicate keys on a left-anti join's
-        // right side do not change its result, so deduplicating them first
-        // would only cost a second pass over the batch
-        val survivors = scopes match {
-          case Some(s) => old.join(s, scopeCols.get, "left_anti")
-          case None    => old.join(df.select(keyCols.map(col): _*), keyCols, "left_anti")
-        }
-        survivors.unionByName(incoming)
-      // the anti-join puts join keys first: re-project to the incoming order
-      // so every snapshot's files share one column order
-      }).select(incoming.columns.map(col): _*)
+    val current = snap.map(parseManifest)
+    // one past the max of every EXISTING manifest and the current pointer —
+    // never `current + 1` alone. A writer that crashed after its manifest
+    // CAS but before its pointer flip leaves an orphaned manifest at
+    // current+1; allocating past it makes the orphan a skipped id (its
+    // commit was never visible, so losing it is correct crash semantics)
+    // instead of a permanent collision that would make every later
+    // commit's CREATE_NEW fail forever
+    val newSnap = (snapshots :+ parent).max + 1
+    val (rows, carried) = plan(current, df.dropDuplicates(keyCols).withColumn("_bucket", bucketExpr))
 
     Files.createDirectories(Paths.get(path, "_manifests"))
-    // cluster by bucket before the partitioned write: one file per touched
+    // cluster by bucket before the partitioned write: one file per written
     // bucket instead of (#tasks × #buckets) shards — without this, every
     // snapshot sprays ~1000 tiny files that each subsequent merge/read must
     // open (measured: the small-file tax dominated incremental merges).
@@ -248,45 +259,21 @@ final class MergeTable(spark: SparkSession, val path: String,
     // snap-N path — so a concurrent writer racing for the same snapshot id
     // can never clobber the winner's committed files; commitManifest binds
     // the staged data to the id only after winning the manifest CAS.
-    val staging = newStagingDir()
-    merged.repartition(col("_bucket")).write.mode("overwrite").partitionBy("_bucket")
+    val staging = Paths.get(path, s"data/_staging-${java.util.UUID.randomUUID().toString.take(8)}")
+    rows.repartition(col("_bucket")).write.mode("overwrite").partitionBy("_bucket")
       .parquet(staging.toString)
-
     // per-bucket counts of what we just wrote, read from the staged files'
-    // parquet footers on the driver (no Spark job): the anti-join plan
-    // executes exactly once, in the write job (persisting it instead
-    // measured 5× slower on the partitioned write path)
-    val newBucketRows = footerRows(stagedBuckets(staging))
-
-    // new manifest: touched buckets point at newSnap (dropped entirely when
-    // a scope-replace deleted their last row), others carry over — including
-    // their row counts, so merge I/O stays O(touched data): no untouched
-    // bucket is ever re-read just to recount it. (Pre-upgrade manifests
-    // without bucketRows pay one footer recount, then carry.)
-    val untouched = oldBuckets.keySet -- touched
-    val newBuckets = oldBuckets.view.filterKeys(untouched.contains).toMap ++
-      newBucketRows.keys.map(_ -> newSnap)
-    val oldBucketRows = current.fold(Map.empty[Int, Long])(_.bucketRows)
-    val untouchedRows: Map[Int, Long] =
-      if (untouched.forall(oldBucketRows.contains)) untouched.map(b => b -> oldBucketRows(b)).toMap
-      else footerRows(untouched.map(b => b -> Paths.get(bucketDir(oldBuckets(b), b))).toMap)
-    commitManifest(newSnap, parent,
-      manifestJson(newSnap, parent, newBuckets, untouchedRows ++ newBucketRows,
-        df.schema.json), staging)
+    // parquet footers on the driver (no Spark job): the merge plan executes
+    // exactly once, in the write job (persisting it instead measured 5×
+    // slower on the partitioned write path). A written bucket is absent
+    // when a scope-replace deleted its last row.
+    val written = footerRows(stagedBuckets(staging))
+    val old = current.getOrElse(Manifest(Map.empty, Map.empty, df.schema))
+    val manifest = Manifest(
+      old.buckets.view.filterKeys(carried).toMap ++ written.keys.map(_ -> newSnap),
+      old.bucketRows.view.filterKeys(carried).toMap ++ written, df.schema)
+    commitManifest(newSnap, parent, manifest, staging)
     newSnap
-  }
-
-  private def manifestJson(newSnap: Long, parent: Long,
-                           buckets: Map[Int, Long], bucketRows: Map[Int, Long],
-                           schemaJson: String): String = {
-    def intMapJson(m: Map[Int, Long]): String = m.toSeq.sortBy(_._1)
-      .map { case (b, s) => s""""$b": $s""" }.mkString("{", ", ", "}")
-    val bucketColsJson = bucketCols.map(c => "\"" + c + "\"").mkString("[", ", ", "]")
-    s"""{"snapshotId": $newSnap, "parent": $parent, "rowCount": ${bucketRows.values.sum},
-       | "createdMs": ${System.currentTimeMillis()}, "buckets": ${intMapJson(buckets)},
-       | "bucketRows": ${intMapJson(bucketRows)},
-       | "bucketCols": $bucketColsJson,
-       | "schema": $schemaJson}""".stripMargin
   }
 
   /** The `_bucket=K` partition dirs of a staged write (none for an empty
@@ -318,21 +305,6 @@ final class MergeTable(spark: SparkSession, val path: String,
       })
     }
   }
-
-  /** Next snapshot id: one past the max of every EXISTING manifest and the
-    * current pointer — never `current + 1` alone. A writer that crashed
-    * after its manifest CAS but before its pointer flip leaves an orphaned
-    * manifest at current+1; allocating past it makes the orphan a skipped id
-    * (its commit was never visible, so losing it is correct crash
-    * semantics) instead of a permanent collision that would make every
-    * later merge's CREATE_NEW fail forever.
-    */
-  private def allocateSnapshot(): Long =
-    (snapshots :+ currentSnapshot.getOrElse(0L)).max + 1
-
-  /** Writer-private staging dir for one commit attempt's data files. */
-  private def newStagingDir(): Path =
-    Paths.get(path, s"data/_staging-${java.util.UUID.randomUUID().toString.take(8)}")
 
   private def deleteTreeIfExists(dir: Path): Unit =
     if (Files.exists(dir)) {
@@ -377,7 +349,7 @@ final class MergeTable(spark: SparkSession, val path: String,
     // .toSeq before the swap: mapping the Map directly would key the result
     // by snapshot and silently collapse every bucket sharing one
     val referenced: Set[(Long, Int)] =
-      keep.flatMap(v => readManifest(v).buckets.toSeq.map { case (b, snap) => (snap, b) })
+      keep.flatMap(v => parseManifest(v).buckets.toSeq.map { case (b, snap) => (snap, b) })
     expired.foreach(v => Files.deleteIfExists(manifestFile(v)))
     val onDisk = listIds(Paths.get(path, "data"), "snap-(\\d+)$".r)
     val deletedDirs = onDisk.flatMap { snap =>
@@ -426,21 +398,22 @@ final class MergeTable(spark: SparkSession, val path: String,
     * write is belt-and-braces for a writer raced between its data write and
     * its commit. Crash windows: before the CAS → only an abandoned staging
     * dir (expireSnapshots sweeps those); after the CAS but before the flip →
-    * an orphaned manifest that [[allocateSnapshot]] skips, the commit was
-    * never visible.
+    * an orphaned manifest that [[commit]]'s id allocation skips, the commit
+    * was never visible.
     */
-  private def commitManifest(newSnap: Long, parent: Long, json: String,
+  private def commitManifest(newSnap: Long, parent: Long, manifest: Manifest,
                              staging: Path): Unit = {
     onBeforeCommit()
     def abort(msg: String): Nothing = {
       deleteTreeIfExists(staging)
       throw new java.util.ConcurrentModificationException(msg)
     }
-    if (currentSnapshot.getOrElse(0L) != parent)
+    val now = currentSnapshot.getOrElse(0L)
+    if (now != parent)
       abort(s"table $path: snapshot $newSnap was derived from parent $parent " +
-        s"but current is now ${currentSnapshot.getOrElse(0L)} — a concurrent " +
+        s"but current is now $now — a concurrent " +
         "writer committed first; retry the merge against the new current")
-    try Files.writeString(manifestFile(newSnap), json,
+    try Files.writeString(manifestFile(newSnap), renderManifest(newSnap, parent, manifest),
       java.nio.file.StandardOpenOption.CREATE_NEW)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -459,4 +432,13 @@ final class MergeTable(spark: SparkSession, val path: String,
     Files.move(tmp, currentFile, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
   }
+}
+
+object MergeTable {
+
+  /** Every table's bucket count. It is part of the on-disk layout: a table
+    * re-bucketed with another count would neither find nor replace its old
+    * rows, so it is a constant, not an option.
+    */
+  val Buckets = 32
 }

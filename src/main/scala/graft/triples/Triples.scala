@@ -105,10 +105,7 @@ object Triples {
   def fromLines(spark: SparkSession, lines: Dataset[String], labels: DataFrame,
                 lang: String = "en"): DataFrame = {
     import spark.implicits._
-    val rows = lines.flatMap { line =>
-      WikidataJson.parseLine(line).map(WikidataJson.toClaimRows(_, lang)).getOrElse(Seq.empty)
-    }
-    fromClaimRows(spark, rows.toDF(), labels)
+    fromClaimRows(spark, lines.flatMap(WikidataJson.claimRowsOf(_, lang)).toDF(), labels)
   }
 
   /** Join + render stage, shared by batch and fixture paths.

@@ -113,7 +113,7 @@ class CacheHygieneSpec extends AnyFunSuite {
     import spark2.implicits._
     p.textsTbl.merge(Seq((PagesGen.urlOf(PagesGen.qid(0)), PagesGen.qid(0), "en", "t"))
       .toDF("url", "id", "lang", "text"))
-    // strip the layout stamp: the textify merge's validateLayout throws
+    // strip the layout stamp: the textify merge's manifest parse throws
     // after the stage has built and persisted its output
     val manifest = root.resolve("texts").resolve("_manifests")
       .resolve(s"v${p.textsTbl.currentSnapshot.get}.json")

@@ -16,7 +16,7 @@ class JsonParseSiteSpec extends AnyFunSuite {
   // file under src/main/scala -> the definitions allowed to parse JSON
   private val allowed = Map(
     "graft/model/WikidataJson.scala" -> Set("parseLine"),
-    "graft/tables/MergeTable.scala" -> Set("manifestNode"),
+    "graft/tables/MergeTable.scala" -> Set("parseManifest"),
     "graft/ScalingBench.scala" -> Set("readJson"),
     "graft/export/HfExport.scala" -> Set("renderRows"))
 

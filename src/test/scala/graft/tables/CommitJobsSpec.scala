@@ -29,7 +29,7 @@ class CommitJobsSpec extends AnyFunSuite {
   }
 
   private def table(): MergeTable = {
-    val t = new MergeTable(spark, tmp(), Seq("id"), numBuckets = 8)
+    val t = new MergeTable(spark, tmp(), Seq("id"))
     t.merge((1 to 40).map(i => (s"k$i", i)).toDF("id", "v"))
     t
   }
