@@ -34,7 +34,7 @@ final class AhoCorasick private (
     outOffsets: Array[Int],    // node -> [start, end) into outPatterns
     outPatterns: Array[Int],
     patterns: Array[String],
-    payloads: Array[Array[String]]) extends Serializable {
+    payloads: Array[Seq[String]]) extends Serializable {
 
   // root transitions for ASCII chars, -1 where the root has no edge
   private val rootNext: Array[Int] = {
@@ -64,9 +64,14 @@ final class AhoCorasick private (
 
   private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c)
 
-  /** All raw matches (begin, end, patternIdx), boundary-filtered. */
-  private def rawMatches(text: String): mutable.ArrayBuffer[(Int, Int, Int)] = {
-    val hits = mutable.ArrayBuffer.empty[(Int, Int, Int)]
+  /** All boundary-filtered matches, overlap-UNresolved — the per-shard
+    * primitive when the dictionary is hash-sharded across multiple passes:
+    * each shard emits raw matches and [[AhoCorasick.resolveLeftmostLongest]]
+    * replays the exact single-trie overlap policy over their union. Ordered
+    * by end position ascending, longest first per end.
+    */
+  def findRawMentions(text: String): Seq[Mention] = {
+    val hits = mutable.ArrayBuffer.empty[Mention]
     var state = 0
     var i = 0
     while (i < text.length) {
@@ -80,30 +85,20 @@ final class AhoCorasick private (
         val oe = outOffsets(s + 1)
         while (oi < oe) {
           val p = outPatterns(oi)
-          val begin = i - patterns(p).length + 1
-          val okLeft = begin == 0 || !isWordChar(text.charAt(begin - 1)) || !isWordChar(patterns(p).charAt(0))
+          val pattern = patterns(p)
+          val begin = i - pattern.length + 1
+          val okLeft = begin == 0 || !isWordChar(text.charAt(begin - 1)) || !isWordChar(pattern.charAt(0))
           val okRight = i + 1 >= text.length || !isWordChar(text.charAt(i + 1)) ||
-            !isWordChar(patterns(p).charAt(patterns(p).length - 1))
-          if (okLeft && okRight) hits += ((begin, i + 1, p))
+            !isWordChar(pattern.charAt(pattern.length - 1))
+          if (okLeft && okRight) hits += Mention(pattern, payloads(p), begin, i + 1)
           oi += 1
         }
         s = fail(s)
       }
       i += 1
     }
-    hits
+    hits.toSeq
   }
-
-  /** All boundary-filtered matches, overlap-UNresolved — the per-shard
-    * primitive when the dictionary is hash-sharded across multiple passes:
-    * each shard emits raw matches and [[AhoCorasick.resolveLeftmostLongest]]
-    * replays the exact single-trie overlap policy over their union. Ordered
-    * by end position ascending, longest first per end.
-    */
-  def findRawMentions(text: String): Seq[Mention] =
-    rawMatches(text).map { case (b, e, p) =>
-      Mention(patterns(p), payloads(p).toSeq, b, e)
-    }.toSeq
 
   /** Leftmost-longest non-overlapping mentions. */
   def findMentions(text: String): Seq[Mention] =
@@ -132,7 +127,8 @@ object AhoCorasick {
   def build(dictionary: Iterable[(String, Seq[String])]): AhoCorasick = {
     val entries = dictionary.filter(_._1.nonEmpty).toArray
     val patterns = entries.map(_._1)
-    val payloads = entries.map(_._2.toArray)
+    // one immutable copy per pattern, shared by every mention of it
+    val payloads = entries.map(e => e._2.toIndexedSeq: Seq[String])
 
     // phase 1: hash-map trie
     val goto = mutable.ArrayBuffer(mutable.HashMap.empty[Char, Int])

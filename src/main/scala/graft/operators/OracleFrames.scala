@@ -20,12 +20,13 @@ object OracleFrames {
 
   def enabled: Boolean = sys.props.get("graft.oracle.frames").contains("1")
 
-  /** Resolved once per JVM; `graft.oracle.frames.dir` overrides for
-    * checkouts living elsewhere. SparkEntry interpolates this SAME value
-    * into the oracle SQL, so engine writes and DuckDB reads cannot drift.
+  /** Resolved once per JVM: the running checkout's `target/oracle_frames`,
+    * made absolute from `user.dir`; `graft.oracle.frames.dir` overrides it.
+    * SparkEntry interpolates this SAME value into the oracle SQL, so engine
+    * writes and DuckDB reads cannot drift.
     */
-  val dir: String =
-    sys.props.getOrElse("graft.oracle.frames.dir", "/root/repo/target/oracle_frames")
+  val dir: String = sys.props.getOrElse("graft.oracle.frames.dir",
+    java.nio.file.Paths.get(sys.props("user.dir"), "target", "oracle_frames").toAbsolutePath.toString)
 
   /** Identity when disabled; write-then-reread under Verify. */
   def materialize(df: DataFrame, name: String): DataFrame =

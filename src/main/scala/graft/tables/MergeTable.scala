@@ -5,6 +5,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -29,15 +30,18 @@ import scala.jdk.CollectionConverters._
   * older layout), or whose `bucketCols` differ from this table's, is a hard
   * error, never a silent re-bucketing.
   *
-  * MERGE is read-merge-rewrite of *touched buckets only*: a merge reads just
-  * the buckets present in the incoming batch, anti-joins old-by-key, unions,
-  * and rewrites those buckets under a new snapshot — unaffected buckets keep
-  * their old files and row counts (manifest pointers carry over). At 100 TB
-  * this bounds merge I/O to O(touched data), the same contract as Iceberg
-  * MERGE with bucket partitioning. Bucket files are read with the manifest's
+  * MERGE is read-merge-rewrite of *touched buckets only*: a narrow scan finds
+  * the buckets the incoming batch (and, for a scope-replace, its processed
+  * scopes) hashes to; the merge reads just those buckets' old rows, unions
+  * them with the batch, keeps per bucket one row per key — the batch's over
+  * the old — and rewrites those buckets under a new snapshot, in one SQL
+  * write with one shuffle (see [[commit]]). Unaffected buckets keep their
+  * old files and row counts (manifest pointers carry over). At 100 TB this
+  * bounds merge I/O to O(touched data), the same contract as Iceberg MERGE
+  * with bucket partitioning. Bucket files are read with the manifest's
   * recorded schema (no schema-inference job), and a new snapshot's row
   * counts come from the footers of the files it wrote. A REPLACE is the same
-  * commit with no bucket carried over.
+  * commit with no old rows and no bucket carried over.
   *
   * Idempotency: deterministic keys + MERGE ⇒ re-running a stage converges to
   * the same table (ref analog: `INSERT … ON CONFLICT` upserts +
@@ -49,7 +53,11 @@ import scala.jdk.CollectionConverters._
   *   batch re-emits it (a changed web page whose output SHRANK must shed its
   *   stale mentions/chunks/triples — MERGE-only upserts cannot delete).
   *   Buckets hash by scope, so a scope's rows co-locate and replacing it
-  *   touches only its own buckets.
+  *   touches only its own buckets. Contract: a key determines its scope —
+  *   the key contains the scope columns or is derived from them (`url` in
+  *   `(url, begin, qid)`, `uuid = md5(qid|…)`, `doc_id = qid_lang_chunk`).
+  *   Keys are compared within a bucket, so one key under two scopes is
+  *   outside the contract: which of its rows survive is unspecified.
   */
 final class MergeTable(spark: SparkSession, val path: String,
                        val keyCols: Seq[String],
@@ -169,74 +177,64 @@ final class MergeTable(spark: SparkSession, val path: String,
     * On a scoped table, additionally deletes old rows of every scope PRESENT
     * IN `df` that the batch does not re-emit. Returns the new snapshot id.
     */
-  def merge(df: DataFrame): Long =
-    mergeInternal(df, scopeCols.map(sc => df.select(sc.map(col): _*).distinct()))
+  def merge(df: DataFrame): Long = commit(df, keepOld = true, scopes = None)
 
   /** Scope-replace MERGE with an EXPLICIT processed-scope set: every scope in
     * `scopes` is replaced by its rows in `df` — including scopes that yield
     * ZERO rows this time (a re-processed page whose mentions/chunks/triples
     * all disappeared must still shed its old rows). `scopes` must contain the
-    * table's scopeCols.
+    * table's scopeCols; duplicate scopes are harmless.
     */
   def mergeScoped(df: DataFrame, scopes: DataFrame): Long = {
     require(scopeCols.nonEmpty, s"table $path has no scopeCols")
-    // ALWAYS include the incoming rows' own scopes: a row whose scope were
-    // missing from `scopes` would land in a bucket the merge never read,
-    // and rewriting that bucket would drop its unrelated old rows
-    val eff = scopes.select(scopeCols.get.map(col): _*)
-      .unionByName(df.select(scopeCols.get.map(col): _*))
-      .distinct()
-    mergeInternal(df, Some(eff))
+    commit(df, keepOld = true, scopes = Some(scopes.select(scopeCols.get.map(col): _*)))
   }
 
   /** Full-table REPLACE: the new snapshot contains exactly `df` (derived
     * global artifacts — canon/nodes/edges — are recomputed wholesale, so
     * rows absent from the recompute must not survive).
     */
-  def replace(df: DataFrame): Long = commit(df)((_, incoming) => (incoming, Set.empty))
+  def replace(df: DataFrame): Long = commit(df, keepOld = false, scopes = None)
 
-  private def mergeInternal(df: DataFrame, scopes: Option[DataFrame]): Long =
-    commit(df) { (current, incoming) =>
-      val oldBuckets = current.fold(Map.empty[Int, Long])(_.buckets)
-      // buckets touched by this batch: from the processed SCOPES when given
-      // (a scope may have zero incoming rows but still demand a rewrite),
-      // else from the incoming rows
-      val touched = scopes.getOrElse(incoming)
-        .withColumn("_bucket", bucketExpr)
-        .select("_bucket").distinct().collect().map(_.getInt(0)).toSet
-      val touchedWithData = touched.filter(oldBuckets.contains)
-      val merged =
-        if (touchedWithData.isEmpty) incoming
-        else {
-          val oldDirs = touchedWithData.toSeq.map(b => bucketDir(oldBuckets(b), b))
-          val old = spark.read.schema(current.get.schema).parquet(oldDirs: _*)
-            .withColumn("_bucket", bucketExpr)
-          // key-anti for plain upsert; scope-anti replaces whole scopes. The
-          // key side reads the raw batch: duplicate keys on a left-anti join's
-          // right side do not change its result, so deduplicating them first
-          // would only cost a second pass over the batch
-          val survivors = scopes match {
-            case Some(s) => old.join(s, scopeCols.get, "left_anti")
-            case None    => old.join(df.select(keyCols.map(col): _*), keyCols, "left_anti")
-          }
-          // the anti-join puts join keys first: re-project to the incoming
-          // order so every snapshot's files share one column order
-          survivors.unionByName(incoming).select(incoming.columns.map(col): _*)
-        }
-      (merged, oldBuckets.keySet -- touched)
-    }
+  /** Buckets that rows of `frame` hash to, from one narrow Spark job: each
+    * partition ORs its rows' buckets into a `Long` bitmask, which holds all
+    * [[MergeTable.Buckets]] (the per-partition pattern of
+    * [[Lineage.capture]]). No shuffle and no SQL execution runs, so no plan
+    * is described.
+    */
+  private def touchedBuckets(frame: DataFrame): Set[Int] = {
+    val masks = frame.select(bucketExpr).queryExecution.toRdd.mapPartitions { rows =>
+      var mask = 0L
+      while (rows.hasNext) mask |= 1L << rows.next().getInt(0)
+      Iterator.single(mask)
+    }.collect()
+    val mask = masks.foldLeft(0L)(_ | _)
+    (0 until MergeTable.Buckets).filter(b => (mask & (1L << b)) != 0).toSet
+  }
 
   /** The one commit path of [[merge]], [[mergeScoped]] and [[replace]]. It
     * reads the table's state once — the current snapshot and its manifest —
-    * and allocates the new snapshot id; `plan` turns that manifest and the
-    * deduplicated, bucketed batch into the rows to write and the old buckets
-    * to carry over untouched. The rows are written to a staging dir, counted
-    * from their footers, and committed by [[commitManifest]] under a
-    * manifest whose written buckets point at the new snapshot and whose
-    * carried buckets keep their owner and row count. Returns the new id.
+    * and allocates the new snapshot id.
+    *
+    * A merge (`keepOld`) rewrites the old buckets that a batch row or a
+    * processed scope hashes to, found by [[touchedBuckets]], and carries
+    * every other old bucket over by pointer; a replace carries none. The
+    * rows to write are one union, each row tagged with its `_bucket` and its
+    * source `_src`: the old rows of the rewritten buckets (0), the processed
+    * `scopes` with their other columns null (1) and the batch (2). One
+    * shuffle by `_bucket` feeds two per-bucket windows, which keep
+    *   - a batch row that ranks first among the rows of its key, by `_src`
+    *     descending (one row per key; which of a batch's duplicate keys is
+    *     kept is unspecified, as with `dropDuplicates`);
+    *   - an old row that ranks first among the rows of its key — no batch
+    *     row has its key — and, on a scoped table, whose scope holds no
+    *     batch row and no processed-scope row.
+    * The rows are written to a staging dir, counted from their footers, and
+    * committed by [[commitManifest]] under a manifest whose written buckets
+    * point at the new snapshot and whose carried buckets keep their owner
+    * and row count. Returns the new id.
     */
-  private def commit(df: DataFrame)(
-      plan: (Option[Manifest], DataFrame) => (DataFrame, Set[Int])): Long = {
+  private def commit(df: DataFrame, keepOld: Boolean, scopes: Option[DataFrame]): Long = {
     val snap = currentSnapshot
     val parent = snap.getOrElse(0L)
     val current = snap.map(parseManifest)
@@ -248,30 +246,64 @@ final class MergeTable(spark: SparkSession, val path: String,
     // instead of a permanent collision that would make every later
     // commit's CREATE_NEW fail forever
     val newSnap = (snapshots :+ parent).max + 1
-    val (rows, carried) = plan(current, df.dropDuplicates(keyCols).withColumn("_bucket", bucketExpr))
+    val oldBuckets = if (keepOld) current.fold(Map.empty[Int, Long])(_.buckets) else Map.empty[Int, Long]
+    // a processed scope may have zero incoming rows but still demands a
+    // rewrite, and a batch row's scope may be missing from `scopes`: a
+    // bucket it lands in must be read, or rewriting it would drop the
+    // bucket's unrelated old rows. With no old bucket, nothing is read
+    val touched =
+      if (oldBuckets.isEmpty) Set.empty[Int]
+      else touchedBuckets(scopes.fold(df)(_.unionByName(df.select(scopeCols.get.map(col): _*))))
+    val touchedWithData = touched.filter(oldBuckets.contains).toSeq
+    val cols = df.columns.toSeq.map(col)
+    val old = Option.when(touchedWithData.nonEmpty)(
+      spark.read.schema(current.get.schema)
+        .parquet(touchedWithData.map(b => bucketDir(oldBuckets(b), b)): _*).select(cols: _*))
+    // scope markers only ever delete old rows
+    val markers = scopes.filter(_ => old.nonEmpty).map { s =>
+      s.select(df.schema.map { f =>
+        if (s.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
+      }: _*)
+    }
+    def tagged(f: DataFrame, tag: Int) =
+      f.withColumn("_bucket", bucketExpr).withColumn("_src", lit(tag))
+    val inputs = old.map(tagged(_, 0)).toSeq ++ markers.map(tagged(_, 1)) :+ tagged(df, 2)
+    val src = col("_src")
+    val byKey = Window.partitionBy(col("_bucket") +: keyCols.map(col): _*).orderBy(src.desc)
+    val scopeKept = scopeCols match {
+      case Some(sc) if old.nonEmpty =>
+        max(src).over(Window.partitionBy(col("_bucket") +: sc.map(col): _*)) === 0
+      case _ => lit(true)
+    }
+    // the shuffle by `_bucket` satisfies both windows' distributions and
+    // clusters the write: one file per written bucket instead of (#tasks ×
+    // #buckets) shards — without it, every snapshot sprays ~1000 tiny files
+    // that each subsequent merge/read must open (measured: the small-file
+    // tax dominated incremental merges). The windows' sorts start with
+    // `_bucket`, which is the partitioned write's required order
+    val rows = inputs.reduce(_ unionByName _).repartition(col("_bucket"))
+      .withColumn("_keep", row_number().over(byKey) === 1 && (src === 2 || src === 0 && scopeKept))
+      .where(col("_keep"))
+      .select(cols :+ col("_bucket"): _*)
 
     Files.createDirectories(Paths.get(path, "_manifests"))
-    // cluster by bucket before the partitioned write: one file per written
-    // bucket instead of (#tasks × #buckets) shards — without this, every
-    // snapshot sprays ~1000 tiny files that each subsequent merge/read must
-    // open (measured: the small-file tax dominated incremental merges).
     // The write targets a writer-private STAGING dir — never the final
     // snap-N path — so a concurrent writer racing for the same snapshot id
     // can never clobber the winner's committed files; commitManifest binds
     // the staged data to the id only after winning the manifest CAS.
     val staging = Paths.get(path, s"data/_staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    rows.repartition(col("_bucket")).write.mode("overwrite").partitionBy("_bucket")
-      .parquet(staging.toString)
+    rows.write.mode("overwrite").partitionBy("_bucket").parquet(staging.toString)
     // per-bucket counts of what we just wrote, read from the staged files'
     // parquet footers on the driver (no Spark job): the merge plan executes
     // exactly once, in the write job (persisting it instead measured 5×
     // slower on the partitioned write path). A written bucket is absent
     // when a scope-replace deleted its last row.
     val written = footerRows(stagedBuckets(staging))
-    val old = current.getOrElse(Manifest(Map.empty, Map.empty, df.schema))
+    val carried = oldBuckets.keySet -- touched
+    val prior = current.getOrElse(Manifest(Map.empty, Map.empty, df.schema))
     val manifest = Manifest(
-      old.buckets.view.filterKeys(carried).toMap ++ written.keys.map(_ -> newSnap),
-      old.bucketRows.view.filterKeys(carried).toMap ++ written, df.schema)
+      prior.buckets.view.filterKeys(carried).toMap ++ written.keys.map(_ -> newSnap),
+      prior.bucketRows.view.filterKeys(carried).toMap ++ written, df.schema)
     commitManifest(newSnap, parent, manifest, staging)
     newSnap
   }

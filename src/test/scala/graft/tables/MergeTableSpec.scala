@@ -296,6 +296,72 @@ class MergeTableSpec extends AnyFunSuite {
     assert(got == Set(("x", 1, "v9"), ("x", 2, "v2")))
   }
 
+  test("a batch with exact and conflicting duplicate keys commits one row per key") {
+    val batch = Seq(("a", 1), ("a", 1), ("b", 2), ("b", 3), ("c", 4)).toDF("id", "v")
+    def check(t: MergeTable, keys: Set[String]): Unit = {
+      val got = t.read().as[(String, Int)].collect()
+      assert(got.map(_._1).toSeq.sorted == keys.toSeq.sorted, got.toSeq)
+      assert(got.toMap.get("a").forall(_ == 1) && got.toMap.get("b").forall(Set(2, 3)))
+      assert(t.rowCount == keys.size)
+      assertCountsExact(t, Seq("id"))
+    }
+    val merged = new MergeTable(spark, tmp(), Seq("id"))
+    merged.merge(Seq(("b", 0), ("d", 5)).toDF("id", "v"))
+    merged.merge(batch)
+    check(merged, Set("a", "b", "c", "d"))
+    assert(merged.read().filter(col("id") === "d").as[(String, Int)].collect().toSeq == Seq(("d", 5)))
+    val replaced = new MergeTable(spark, tmp(), Seq("id"))
+    replaced.merge(Seq(("z", 0)).toDF("id", "v"))
+    replaced.replace(batch)
+    check(replaced, Set("a", "b", "c"))
+  }
+
+  test("mergeScoped with duplicate scopes and a scope that has no batch rows and no old rows") {
+    val t = new MergeTable(spark, tmp(), Seq("url", "begin"), scopeCols = Some(Seq("url")))
+    t.merge(Seq(("u1", 0, "a"), ("u1", 5, "b"), ("u2", 0, "c"), ("u3", 0, "d")).toDF("url", "begin", "v"))
+    // u1 is re-emitted, u2 is processed and emits nothing, u9 is processed
+    // and has no rows anywhere; u1 and u2 appear twice in `scopes`
+    t.mergeScoped(Seq(("u1", 5, "b2")).toDF("url", "begin", "v"),
+      Seq("u1", "u2", "u1", "u9", "u2").toDF("url"))
+    assert(t.read().as[(String, Int, String)].collect().toSet == Set(("u1", 5, "b2"), ("u3", 0, "d")))
+    assert(t.rowCount == 2)
+    assertCountsExact(t, Seq("url"))
+  }
+
+  test("an old row in an unreplaced scope that shares a touched bucket survives") {
+    val candidates = (1 to 200).map(i => s"u$i")
+    val buckets = bucketsOf(candidates)
+    val Seq(u1, u2) = candidates.filter(buckets(_) == buckets("u1")).take(2)
+    Seq[(String, MergeTable => Unit)](
+      "merge" -> (_.merge(Seq((u1, 0, "new")).toDF("url", "begin", "v"))),
+      "mergeScoped" -> (_.mergeScoped(Seq((u1, 0, "new")).toDF("url", "begin", "v"), Seq(u1).toDF("url")))
+    ).foreach { case (name, commit) =>
+      val t = new MergeTable(spark, tmp(), Seq("url", "begin"), scopeCols = Some(Seq("url")))
+      t.merge(Seq((u1, 0, "a"), (u1, 5, "b"), (u2, 0, "c"), (u2, 5, "d")).toDF("url", "begin", "v"))
+      commit(t)
+      assert(t.read().as[(String, Int, String)].collect().toSet ==
+        Set((u1, 0, "new"), (u2, 0, "c"), (u2, 5, "d")), name)
+      assert(t.rowCount == 3, name)
+      assertCountsExact(t, Seq("url"))
+    }
+  }
+
+  test("merge into an empty table") {
+    val batch = Seq(("a", 1), ("a", 1), ("b", 2)).toDF("id", "v")
+    // a table with no snapshot, and one whose last commit emptied it
+    val fresh = new MergeTable(spark, tmp(), Seq("id"), scopeCols = Some(Seq("id")))
+    val emptied = new MergeTable(spark, tmp(), Seq("id"), scopeCols = Some(Seq("id")))
+    emptied.merge(Seq(("a", 0)).toDF("id", "v"))
+    emptied.mergeScoped(Seq.empty[(String, Int)].toDF("id", "v"), Seq("a").toDF("id"))
+    assert(emptied.rowCount == 0)
+    Seq(fresh, emptied).foreach { t =>
+      t.merge(batch)
+      assert(t.read().as[(String, Int)].collect().toSet == Set(("a", 1), ("b", 2)))
+      assert(t.rowCount == 2)
+      assertCountsExact(t, Seq("id"))
+    }
+  }
+
   private def manifestOf(t: MergeTable) = new com.fasterxml.jackson.databind.ObjectMapper()
     .readTree(Files.readString(Paths.get(t.path, "_manifests", s"v${t.currentSnapshot.get}.json")))
 
