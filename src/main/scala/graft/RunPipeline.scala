@@ -22,13 +22,9 @@ object RunPipeline {
 
     val pipeline = new KgPipeline(spark, root, nPages)
     val triplesSnap = pipeline.run()
-    val counts = Seq(
-      "pages" -> pipeline.pagesTbl, "labels" -> pipeline.labelsTbl,
-      "texts" -> pipeline.textsTbl, "mentions" -> pipeline.mentionsTbl,
-      "links" -> pipeline.linksTbl, "docs" -> pipeline.docsTbl,
-      "triples" -> pipeline.triplesTbl, "canon" -> pipeline.canonTbl,
-      "nodes" -> pipeline.nodesTbl, "edges" -> pipeline.edgesTbl)
-      .map { case (n, t) => s""""$n": ${t.rowCount}""" }.mkString("{", ", ", "}")
+    // every table, keyed by its directory name
+    val counts = pipeline.tables
+      .map(t => s""""${t.path.split('/').last}": ${t.rowCount}""").mkString("{", ", ", "}")
     println(s"""{"metric":"kg_pipeline","triples_snapshot":$triplesSnap,"tables":$counts}""")
     spark.stop()
   }

@@ -12,22 +12,31 @@ import org.apache.spark.sql.functions._
   * §7.1): extract → harvest → textify → mention → link → triples →
   * canonicalize → materialize nodes/edges/triples, every stage checkpointed
   * with per-partition lineage rows and MERGE-idempotent writes so a killed
-  * job resumes exactly (stage markers keyed by input snapshot).
+  * job resumes exactly.
+  *
+  * One chain of nine stages serves both [[run]] and [[ingest]]. It runs over
+  * a batch of pages: the whole merged corpus for `run()` and
+  * `ingest(delta = false)`, only the ingested pages for
+  * `ingest(delta = true)`. Every stage is keyed by the pages snapshot; in
+  * delta mode its marker name takes a `delta_` prefix and two inputs
+  * differ: `harvest_ids` folds in the existing flags of the touched ids,
+  * and `mentions`/`link` read only the batch's rows of `texts` and
+  * `mentions`.
   *
   * Wide operations, by stage:
-  *  - harvest:  groupBy(id) (S7 OR-merge agg) — one shuffle
-  *  - textify:  gather-join on (url, ref) — shuffle O(#references)
-  *  - link:     equi-join mention→entity vec + top-K window
-  *  - triples:  label joins (broadcast PID dim + shuffle subject/value)
-  *  - canon:    iterative CC self-joins
+  *  - harvest_ids: groupBy(id) (S7 OR-merge agg) — one shuffle
+  *  - textify:     gather-join on (url, ref) — shuffle O(#references)
+  *  - link:        equi-join mention→entity vec + top-K window
+  *  - triples:     label joins (broadcast PID dim + shuffle subject/value)
+  *  - canon:       iterative CC self-joins
   * Everything else is narrow and pipelines into the scan.
   *
   * Every stage commits through [[Lineage.commit]] (the commit protocol is
-  * stated there once); each chain's run-scoped payload caches live in one
+  * stated there once); the chain's run-scoped payload caches live in one
   * [[Checkpoints.superstep]] scope, released when the chain returns or
   * throws.
-  */
-/** @param retention when set, every successful `run`/`ingest` ends with
+  *
+  * @param retention when set, every successful `run`/`ingest` ends with
   *   [[expireHistory]]`(keepLast = retention.get)` — the storage-bound
   *   mode for incremental deployments. Opt-in (None keeps full history)
   *   because expiry trades time travel into reclaimed snapshots away.
@@ -90,14 +99,12 @@ final class KgPipeline(spark: SparkSession, root: String,
     // stage: ingest — the corpus lands as a MERGE table (idempotent by url)
     val pagesSnap = lineage.commit("ingest", 0L)(PagesGen.pages(spark, nPages))(pagesTbl.merge)
     checkFail("ingest")
-    val out = runFrom(pagesSnap)
-    retention.foreach(expireHistory(_))
-    out
+    chain(pagesTbl.read(), pagesSnap, delta = false)
   }
 
   /** Incremental ingest: MERGE a batch of new/changed pages (upsert by url)
-    * and run the downstream stages against the new pages snapshot (stage
-    * markers are per input snapshot, so the chain executes exactly once).
+    * and run the chain against the new pages snapshot (stage markers are
+    * per pages snapshot, so the chain executes exactly once).
     *
     * `delta = false` (exactness mode): every derived stage recomputes over
     * the merged corpus; MERGE-upserts converge — unchanged rows rewrite to
@@ -115,9 +122,7 @@ final class KgPipeline(spark: SparkSession, root: String,
     */
   def ingest(newPages: DataFrame, delta: Boolean = false): Long = {
     val pagesSnap = pagesTbl.merge(newPages)
-    val out = if (delta) runDelta(newPages, pagesSnap) else runFrom(pagesSnap)
-    retention.foreach(expireHistory(_))
-    out
+    chain(if (delta) newPages else pagesTbl.read(), pagesSnap, delta)
   }
 
   /** All of the pipeline's tables, for maintenance sweeps. */
@@ -139,58 +144,69 @@ final class KgPipeline(spark: SparkSession, root: String,
     (results.map(_._1.size).sum, results.map(_._2.size).sum)
   }
 
-  private def runFrom(pagesSnap: Long): Long = Checkpoints.superstep(spark, None) { s =>
-    val payloads = s.hold(TextifyStage.payloads(spark, pagesTbl.read()))
-    def pages = pagesTbl.read()
+  /** The nine stages over `batch` (see the class doc), each keyed by
+    * `pagesSnap`, then the retention sweep; returns the triples snapshot id.
+    */
+  private def chain(batch: DataFrame, pagesSnap: Long, delta: Boolean): Long = {
+    val prefix = if (delta) "delta_" else ""
+    def stage(name: String)(df: => DataFrame)(write: DataFrame => Long): Long = {
+      val snap = lineage.commit(prefix + name, pagesSnap)(df)(write)
+      checkFail(prefix + name)
+      snap
+    }
+    def batchOf(t: MergeTable) =
+      if (delta) t.read().join(batch.select("url"), Seq("url"), "left_semi") else t.read()
 
-    // stage: harvest — per-language label dimension (id, lang, label,
-    // is_property, aliases) from the corpus itself: the reference normalizes
-    // the whole DB once per LANGUAGE (src/wikidataDB.py:126-148)
-    val labelsSnap = lineage.commit("harvest", pagesSnap)(
-      TextifyStage.harvestLabels(spark, payloads))(labelsTbl.merge)
-    checkFail("harvest")
+    val triplesSnap = Checkpoints.superstep(spark, None) { s =>
+      val payloads = s.hold(TextifyStage.payloads(spark, batch))
 
-    // stage: harvest_ids — P1 explode + S7 OR-merge aggregation
-    lineage.commit("harvest_ids", pagesSnap)(orMerge(entityFlags(payloads)))(idFlagsTbl.merge)
-    checkFail("harvest_ids")
+      // stage: harvest — per-language label dimension (id, lang, label,
+      // is_property, aliases) from the corpus itself: the reference normalizes
+      // the whole DB once per LANGUAGE (src/wikidataDB.py:126-148)
+      stage("harvest")(TextifyStage.harvestLabels(spark, payloads))(labelsTbl.merge)
 
-    // one gather-join feeds BOTH textify and docs (the two renderers resolve
-    // the same (url → label map) frame); holding it halves the pipeline's
-    // biggest shuffle (refs explode + label join + per-url regroup)
-    val resolved = s.hold(TextifyStage.withLabelMaps(spark, gatePayloads(payloads), labelsTbl.read()))
+      // stage: harvest_ids — P1 explode + S7 OR-merge aggregation. A delta
+      // batch folds in the existing flags of just the touched ids
+      // (semi-join), so a true flag never regresses to false (readOrEmpty: a
+      // delta ingest may be the root's first-ever operation); a full
+      // recompute re-derives every flag from the corpus
+      stage("harvest_ids") {
+        val flags = entityFlags(payloads)
+        orMerge(if (!delta) flags else flags.unionByName(idFlagsTbl.readOrEmpty(flags)
+          .join(flags.select("id").distinct(), Seq("id"), "left_semi")))
+      }(idFlagsTbl.merge)
 
-    // stage: textify — byte-identical extracted text per url (gated)
-    val textsSnap = lineage.commit("textify", labelsSnap)(
-      TextifyStage.renderResolved(spark, resolved))(textsTbl.mergeScoped(_, urlScope(pages)))
-    checkFail("textify")
+      // one gather-join feeds BOTH textify and docs (the two renderers resolve
+      // the same (url → label map) frame); holding it halves the pipeline's
+      // biggest shuffle (refs explode + label join + per-url regroup)
+      val resolved = s.hold(TextifyStage.withLabelMaps(spark, gatePayloads(payloads), labelsTbl.read()))
 
-    // stage: mentions — Aho-Corasick over the label+alias trie
-    val mentionsSnap = lineage.commit("mentions", textsSnap)(
-      mentionsOf(textsTbl.read()))(mentionsTbl.mergeScoped(_, urlScope(pages)))
-    checkFail("mentions")
+      // stage: textify — byte-identical extracted text per url (gated)
+      stage("textify")(TextifyStage.renderResolved(spark, resolved))(
+        textsTbl.mergeScoped(_, urlScope(batch)))
 
-    // stage: link — embeddings + cosine top-K per mention
-    lineage.commit("link", mentionsSnap)(
-      linksOf(textsTbl.read(), mentionsTbl.read(), pages))(linksTbl.mergeScoped(_, urlScope(pages)))
-    checkFail("link")
+      // stage: mentions — Aho-Corasick over the label+alias trie
+      stage("mentions")(mentionsOf(batchOf(textsTbl)))(mentionsTbl.mergeScoped(_, urlScope(batch)))
 
-    // stage: docs — token-budget chunks + embeddings into the vector-document table
-    lineage.commit("docs", textsSnap)(docsOf(resolved))(docsTbl.mergeScoped(_, idScope(pages, "qid")))
-    checkFail("docs")
+      // stage: link — embeddings + cosine top-K per mention
+      stage("link")(linksOf(batchOf(textsTbl), batchOf(mentionsTbl), batch))(
+        linksTbl.mergeScoped(_, urlScope(batch)))
 
-    // stage: triples — statement extraction with label-resolution joins
-    val triplesSnap = lineage.commit("triples", labelsSnap)(
-      triplesOf(payloads))(triplesTbl.mergeScoped(_, idScope(pages, "qid")))
-    checkFail("triples")
+      // stage: docs — token-budget chunks + embeddings into the vector-document table
+      stage("docs")(docsOf(resolved))(docsTbl.mergeScoped(_, idScope(batch, "qid")))
 
-    // stage: canon — CC over sameAs edges, canonical = min id per component
-    val canonSnap = lineage.commit("canon", triplesSnap)(canonOf(payloads, pages))(canonTbl.replace)
-    checkFail("canon")
+      // stage: triples — statement extraction with label-resolution joins
+      val triplesSnap = stage("triples")(triplesOf(payloads))(
+        triplesTbl.mergeScoped(_, idScope(batch, "qid")))
 
-    // stage: materialize — nodes + edges with canonical ids rewritten
-    materialize("materialize", canonSnap)
-    checkFail("materialize")
+      // stage: canon — CC over sameAs edges, canonical = min id per component
+      stage("canon")(canonOf(payloads, batch))(canonTbl.replace)
 
+      // stage: materialize — nodes + edges with canonical ids rewritten
+      stage("materialize")(materialize())(edgesTbl.replace)
+      triplesSnap
+    }
+    retention.foreach(expireHistory(_))
     triplesSnap
   }
 
@@ -243,10 +259,10 @@ final class KgPipeline(spark: SparkSession, root: String,
     Triples.fromLines(spark, payloads.map(_.payload),
       labelsTbl.read().filter(col("lang") === "en").select("id", "label"))
 
-  /** The canon stage body, shared by both chains: the payloads' sameAs edges
-    * land in their own MERGE table first (scoped to `pages`), so delta
-    * ingests extend the edge set without re-parsing the corpus; then CC over
-    * the whole (edge-set-sized) table — O(graph), not O(corpus).
+  /** The canon stage body: the batch's sameAs edges land in their own MERGE
+    * table first (scoped to `pages`), so a delta ingest extends the edge set
+    * without re-parsing the corpus; then CC over the whole (edge-set-sized)
+    * table — O(graph), not O(corpus).
     */
   private def canonOf(payloads: Dataset[PagePayload], pages: DataFrame): DataFrame = {
     sameAsTbl.mergeScoped(AliasEdges.sameAsEdges(payloads), idScope(pages, "src"))
@@ -260,33 +276,32 @@ final class KgPipeline(spark: SparkSession, root: String,
     ConnectedComponents.run(spark, edges, nodes).withColumnRenamed("component", "canonical")
   }
 
-  /** Nodes + edges from the materialized tables (fully table-driven — shared
-    * by the full and delta paths); the nodes write rides inside the stage.
+  /** The materialize stage body, fully table-driven (it reads no batch):
+    * replaces `nodes` as a side write and returns the edges frame.
     */
-  private def materialize(stage: String, inputSnapshot: Long): Long =
-    lineage.commit(stage, inputSnapshot) {
-      val canon = canonTbl.read()
-      nodesTbl.replace(labelsTbl.read().filter(col("lang") === "en")
-        .join(canon, Seq("id"), "left")
-        .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"),
-          col("label"), col("is_property")))
+  private def materialize(): DataFrame = {
+    val canon = canonTbl.read()
+    nodesTbl.replace(labelsTbl.read().filter(col("lang") === "en")
+      .join(canon, Seq("id"), "left")
+      .select(col("id"), coalesce(col("canonical"), col("id")).as("canonical"),
+        col("label"), col("is_property")))
 
-      val linkEdges = linksTbl.read().filter(col("rank") === 1)
-        .join(textsTbl.read().select(col("url"), col("id").as("src")), Seq("url"))
-        .select(col("src"), col("qid").as("dst"), lit("mentions").as("kind"))
-      val sameAs = sameAsTbl.read().withColumn("kind", lit("sameAs"))
-      val canonSrc = canon.select(col("id").as("src"), col("canonical").as("src_canon"))
-      val canonDst = canon.select(col("id").as("dst"), col("canonical").as("dst_canon"))
-      linkEdges.unionByName(sameAs)
-        .join(canonSrc, Seq("src"), "left")
-        .join(canonDst, Seq("dst"), "left")
-        .select(
-          coalesce(col("src_canon"), col("src")).as("src"),
-          coalesce(col("dst_canon"), col("dst")).as("dst"),
-          col("kind"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-    }(edgesTbl.replace)
+    val linkEdges = linksTbl.read().filter(col("rank") === 1)
+      .join(textsTbl.read().select(col("url"), col("id").as("src")), Seq("url"))
+      .select(col("src"), col("qid").as("dst"), lit("mentions").as("kind"))
+    val sameAs = sameAsTbl.read().withColumn("kind", lit("sameAs"))
+    val canonSrc = canon.select(col("id").as("src"), col("canonical").as("src_canon"))
+    val canonDst = canon.select(col("id").as("dst"), col("canonical").as("dst_canon"))
+    linkEdges.unionByName(sameAs)
+      .join(canonSrc, Seq("src"), "left")
+      .join(canonDst, Seq("dst"), "left")
+      .select(
+        coalesce(col("src_canon"), col("src")).as("src"),
+        coalesce(col("dst_canon"), col("dst")).as("dst"),
+        col("kind"))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
+  }
 
   /** The J4 driving gate: only in_wikipedia entities are textified/chunked,
     * exactly the reference's stage-3 driving scan
@@ -308,51 +323,4 @@ final class KgPipeline(spark: SparkSession, root: String,
   private def urlScope(pages: DataFrame): DataFrame = pages.select(col("url"))
   private def idScope(pages: DataFrame, as: String): DataFrame =
     pages.select(substring_index(col("url"), "/", -1).as(as))
-
-  /** Delta-only ingest chain: per-page stages run over THIS BATCH's pages
-    * only; global artifacts (id flags, canon, nodes/edges) update from the
-    * materialized tables. No stage re-reads or re-parses the full corpus —
-    * at 10^12 docs an increment costs O(batch) work plus the (edge-set-sized)
-    * canonicalization, never O(corpus).
-    */
-  private def runDelta(newPages: DataFrame, pagesSnap: Long): Long = Checkpoints.superstep(spark, None) { s =>
-    val payloads = s.hold(TextifyStage.payloads(spark, newPages))
-    val batchUrls = newPages.select("url")
-    def batchOf(t: MergeTable) = t.read().join(batchUrls, Seq("url"), "left_semi")
-
-    lineage.commit("delta_harvest", pagesSnap)(
-      TextifyStage.harvestLabels(spark, payloads))(labelsTbl.merge)
-
-    lineage.commit("delta_harvest_ids", pagesSnap) {
-      val batchFlags = entityFlags(payloads)
-      // S7 OR-merge across batches: fold in the existing flags of just the
-      // touched ids (semi-join), so a true flag never regresses to false
-      // (readOrEmpty: a delta ingest may be the root's first-ever operation)
-      val existing = idFlagsTbl.readOrEmpty(batchFlags)
-        .join(batchFlags.select("id").distinct(), Seq("id"), "left_semi")
-      orMerge(batchFlags.unionByName(existing))
-    }(idFlagsTbl.merge)
-
-    val resolved = s.hold(TextifyStage.withLabelMaps(spark, gatePayloads(payloads), labelsTbl.read()))
-
-    lineage.commit("delta_textify", pagesSnap)(
-      TextifyStage.renderResolved(spark, resolved))(textsTbl.mergeScoped(_, urlScope(newPages)))
-
-    lineage.commit("delta_mentions", pagesSnap)(
-      mentionsOf(batchOf(textsTbl)))(mentionsTbl.mergeScoped(_, urlScope(newPages)))
-
-    lineage.commit("delta_link", pagesSnap)(
-      linksOf(batchOf(textsTbl), batchOf(mentionsTbl), newPages))(linksTbl.mergeScoped(_, urlScope(newPages)))
-
-    lineage.commit("delta_docs", pagesSnap)(docsOf(resolved))(docsTbl.mergeScoped(_, idScope(newPages, "qid")))
-
-    val triplesSnap = lineage.commit("delta_triples", pagesSnap)(
-      triplesOf(payloads))(triplesTbl.mergeScoped(_, idScope(newPages, "qid")))
-
-    // global graph artifacts: extend the edge set with the batch's sameAs
-    // rows, then recompute CC and nodes/edges from the tables
-    lineage.commit("delta_canon", pagesSnap)(canonOf(payloads, newPages))(canonTbl.replace)
-    materialize("delta_materialize", pagesSnap)
-    triplesSnap
-  }
 }

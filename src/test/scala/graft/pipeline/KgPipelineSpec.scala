@@ -28,6 +28,33 @@ class KgPipelineSpec extends AnyFunSuite {
 
   private def gatedOut(i: Long): Boolean = i % 10 == 7 // PagesGen: no sitelink
 
+  /** A fresh root holding a finished `run()` over `nPages` pages. */
+  private def builtRoot(tag: String, nPages: Long): String = {
+    val dir = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), s"kgtest-$tag-").toString
+    new KgPipeline(spark, dir, nPages = nPages).run()
+    dir
+  }
+
+  /** A table's current rows, columns sorted by name, rows sorted. */
+  private def dump(t: graft.tables.MergeTable): Seq[String] = {
+    val df = t.read()
+    // binary columns (pages.html) stringify as array identity — hash them
+    val cols = df.schema.fields.sortBy(_.name).map { f =>
+      if (f.dataType == org.apache.spark.sql.types.BinaryType) md5(col(f.name)).as(f.name)
+      else col(f.name)
+    }
+    df.select(cols.toSeq: _*).collect().map(_.toString).sorted.toSeq
+  }
+
+  /** The chain's nine stages, in order (delta ingests prefix them `delta_`). */
+  private val chainStages = Seq("harvest", "harvest_ids", "textify", "mentions", "link",
+    "docs", "triples", "canon", "materialize")
+
+  private def html(payload: String): Array[Byte] =
+    (s"""<html><body><script id="wd-entity" type="application/json">$payload</script></body></html>""")
+      .getBytes("UTF-8")
+
   test("extracted text is byte-identical per url to the pure textifier (per-lang data)") {
     root // force run
     val texts = pipe.textsTbl.read().as[(String, String, String, String)].collect()
@@ -275,9 +302,6 @@ class KgPipelineSpec extends AnyFunSuite {
     val p = new KgPipeline(spark, dir, nPages = small)
     p.run()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def html(payload: String) =
-      (s"""<html><body><script id="wd-entity" type="application/json">$payload</script></body></html>""")
-        .getBytes("UTF-8")
     val newPayload = PagesGen.entityJson(2, small, mapper)
       .replace(PagesGen.qid(2), "Q777888")
       .replace(PagesGen.labelOfIndex(2), "Expiry Batch Entity")
@@ -288,15 +312,6 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(p.tables.exists(t => t.exists && t.snapshots.size > 1),
       "the delta run must have created history to expire")
 
-    def dump(t: graft.tables.MergeTable): Seq[String] = {
-      val df = t.read()
-      // binary columns (pages.html) stringify as array identity — hash them
-      val cols = df.schema.fields.sortBy(_.name).map { f =>
-        if (f.dataType == org.apache.spark.sql.types.BinaryType) md5(col(f.name)).as(f.name)
-        else col(f.name)
-      }
-      df.select(cols.toSeq: _*).collect().map(_.toString).sorted.toSeq
-    }
     val before = p.tables.filter(_.exists).map(dump)
     val (manifests, dirs) = p.expireHistory(keepLast = 1)
     assert(manifests > 0, "expiry must reclaim the pre-delta manifests")
@@ -325,19 +340,10 @@ class KgPipelineSpec extends AnyFunSuite {
     // (the batch's new label does not occur in old pages, so the frozen-
     // dictionary delta contract and the full recompute agree)
     val small = 60L
-    def freshRoot(): String = {
-      val dir = Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), "kgtest-delta-").toString
-      new KgPipeline(spark, dir, nPages = small).run()
-      dir
-    }
-    val fullRoot = freshRoot()
-    val deltaRoot = freshRoot()
+    val fullRoot = builtRoot("delta", small)
+    val deltaRoot = builtRoot("delta", small)
 
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def html(payload: String) =
-      (s"""<html><body><script id="wd-entity" type="application/json">$payload</script></body></html>""")
-        .getBytes("UTF-8")
     // index 2: no ambiguous alias, no twin sameAs — the batch introduces no
     // NEW surface occurring in old pages, so the delta contract (dictionary
     // additions apply to pages processed from now on) and the full recompute
@@ -355,18 +361,10 @@ class KgPipelineSpec extends AnyFunSuite {
     val deltaP = new KgPipeline(spark, deltaRoot, nPages = small)
     deltaP.ingest(batch(), delta = true)
 
-    def dump(t: graft.tables.MergeTable): Seq[String] = {
-      val df = t.read()
-      df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+    assert(full.tables.size == 13)
+    full.tables.zip(deltaP.tables).foreach { case (f, d) =>
+      assert(dump(d) == dump(f), s"table ${d.path}")
     }
-    assert(dump(deltaP.textsTbl) == dump(full.textsTbl))
-    assert(dump(deltaP.triplesTbl) == dump(full.triplesTbl))
-    assert(dump(deltaP.mentionsTbl) == dump(full.mentionsTbl))
-    assert(dump(deltaP.linksTbl) == dump(full.linksTbl))
-    assert(dump(deltaP.docsTbl) == dump(full.docsTbl))
-    assert(dump(deltaP.canonTbl) == dump(full.canonTbl))
-    assert(dump(deltaP.edgesTbl) == dump(full.edgesTbl))
-    assert(dump(deltaP.idFlagsTbl) == dump(full.idFlagsTbl))
     // and the delta batch's content actually landed
     assert(deltaP.textsTbl.read().filter(col("id") === newQid).count() == 1)
     assert(deltaP.triplesTbl.read().filter(col("qid") === newQid).count() > 0)
@@ -413,6 +411,37 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(staleMentions.count() == 0, "mentions beyond the new text length must be deleted")
   }
 
+  test("a killed delta ingest re-runs exactly: same tables as an uninterrupted delta ingest") {
+    val small = 60L
+    def batch() = PagesGen.pagesDelta(spark, small)
+
+    // crash after the delta mentions stage commits
+    val dir = builtRoot("dkill", small)
+    val failing = new KgPipeline(spark, dir, nPages = small, failAfterStage = Some("delta_mentions"))
+    intercept[RuntimeException] { failing.ingest(batch(), delta = true) }
+    val killedSnap = failing.pagesTbl.currentSnapshot.get
+    assert(failing.lineage.isDone("delta_mentions", killedSnap))
+    assert(!failing.lineage.isDone("delta_link", killedSnap))
+
+    // re-ingest the same batch to completion: the merge lands it under a
+    // new pages snapshot, so every stage re-runs over the half-written tables
+    val rerun = new KgPipeline(spark, dir, nPages = small)
+    rerun.ingest(batch(), delta = true)
+
+    // compare against an uninterrupted delta ingest in a fresh root
+    val clean = new KgPipeline(spark, builtRoot("dclean", small), nPages = small)
+    clean.ingest(batch(), delta = true)
+    rerun.tables.zip(clean.tables).foreach { case (r, c) =>
+      assert(dump(r) == dump(c), s"table ${r.path}")
+    }
+
+    // the delta ingest commits the full chain's stages, each prefixed
+    val stages = clean.lineage.lineageRows().select("stage").distinct()
+      .as[String].collect().toSet
+    assert(stages.filter(_.startsWith("delta_")) == chainStages.map("delta_" + _).toSet)
+    assert(stages.filterNot(_.startsWith("delta_")) == chainStages.toSet + "ingest")
+  }
+
   test("a killed job resumes exactly: same final tables as an uninterrupted run") {
     val dir = Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "kgtest-resume-").toString
@@ -432,8 +461,6 @@ class KgPipelineSpec extends AnyFunSuite {
     val clean = new KgPipeline(spark, cleanDir, nPages = small)
     clean.run()
 
-    def dump(t: graft.tables.MergeTable): Seq[String] =
-      t.read().collect().map(_.toString).sorted.toSeq
     assert(dump(resumed.triplesTbl) == dump(clean.triplesTbl))
     assert(dump(resumed.textsTbl) == dump(clean.textsTbl))
     assert(dump(resumed.linksTbl) == dump(clean.linksTbl))
