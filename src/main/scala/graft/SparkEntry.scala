@@ -293,12 +293,12 @@ object SparkEntry {
     // per-predicate property profile: cardinality + kind stats, the
     // constraint-induction table (functional == max_per_subject = 1)
     "kg29_property_profile" -> (KgQueries.propertyProfile _),
-    // exactly-once projection of an at-least-once event stream (batch form;
-    // the streaming twin dropDuplicatesWithinWatermark is spec-pinned equal)
+    // exactly-once projection of an at-least-once event delivery:
+    // retransmitted duplicates collapse on event_id
     "st2_stream_dedup" -> ((s, d) =>
       graft.streaming.EventsStream.dedupEvents(R.table(s, d, "events"))),
-    // watermark-bounded stream-stream interval join (batch form; the true
-    // streaming twin attributionStream is spec-pinned equal)
+    // purchase attribution: each purchase's same-user views in the prior
+    // 30 minutes, as a bucketed interval join
     "st3_attribution" -> ((s, d) =>
       graft.streaming.EventsStream.attribution(R.table(s, d, "events"))),
   )

@@ -51,11 +51,9 @@ object Linker {
   /** Resolved (leftmost-longest) mentions BEFORE the candidate explode:
     * (url, self_id, surface, begin, end, qids, context) — one row per
     * mention span with its full candidate array. The trie match is the
-    * non-SQL kernel; everything after this frame is relational. Works on
-    * batch AND streaming texts frames (narrow flatMap) — the streaming
-    * mention stage calls this directly so the kernels cannot drift.
+    * non-SQL kernel; everything after this frame is relational.
     */
-  def resolvedRows(spark: SparkSession, texts: DataFrame,
+  private def resolvedRows(spark: SparkSession, texts: DataFrame,
                    trie: Broadcast[AhoCorasick]): DataFrame = {
     import spark.implicits._
     texts.select("url", "id", "text").as[(String, String, String)]

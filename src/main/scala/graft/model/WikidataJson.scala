@@ -168,15 +168,6 @@ object WikidataJson {
       hasLang("labels") && hasLang("descriptions")
   }
 
-  /** F8 sitelink-any filter: the entity has a Wikipedia entry in ANY
-    * language — some sitelink key ends with "wiki"
-    * (ref: src/wikidataLabelsDB.py:327-341).
-    */
-  def hasAnySitelink(item: JsonNode): Boolean = {
-    val sl = item.get("sitelinks")
-    sl != null && sl.isObject && sl.properties().asScala.exists(_.getKey.endsWith("wiki"))
-  }
-
   /** `extract_entity_ids` — every QID/PID an entity references. */
   def extractEntityIds(item: JsonNode, language: String = "en"): Seq[IdFlag] = {
     if (item == null) return Seq.empty

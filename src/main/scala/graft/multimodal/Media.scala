@@ -68,16 +68,6 @@ object Media {
     }
   }
 
-  /** Resize stub: scales stub metadata, keeps the feature contract. */
-  def resize(decoded: Dataset[DecodedImage], maxSide: Int): Dataset[DecodedImage] = {
-    import decoded.sparkSession.implicits._
-    decoded.map { d =>
-      val scale = math.min(1.0, maxSide.toDouble / math.max(d.width, d.height))
-      d.copy(width = math.max(1, (d.width * scale).toInt),
-        height = math.max(1, (d.height * scale).toInt))
-    }
-  }
-
   /** Frame sampling for video assets: one row per sampled frame (explode). */
   def sampleFrames(assets: Dataset[MediaAsset], everyMs: Long = 1000, maxFrames: Int = 8): Dataset[Frame] = {
     import assets.sparkSession.implicits._

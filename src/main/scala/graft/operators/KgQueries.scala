@@ -465,9 +465,7 @@ object KgQueries {
       materializeForOracle(scdObservations(spark, pagesBoth(spark)), "kg20_obs"),
       Seq("qid"), "value", "ts")
 
-  /** (qid, value, ts) P1082 observations of a pages frame — the kg20 input,
-    * shared with the streaming twin's per-crawl fixtures (CrawlStreamSpec).
-    */
+  /** (qid, value, ts) P1082 observations of a pages frame — the kg20 input. */
   def scdObservations(spark: SparkSession, pages: DataFrame): DataFrame =
     claimObservations(spark, pages)
       .filter(col("pid") === "P1082")

@@ -124,8 +124,8 @@ object Relational {
         col("running_total"))
   }
 
-  /** Hourly event rollup — the batch shape of the streaming agg in
-    * graft.streaming; date_trunc keeps it oracle-comparable. */
+  /** Hourly event rollup per event type; date_trunc keeps it
+    * oracle-comparable. */
   def q9EventsHourly(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "events")
       .groupBy(

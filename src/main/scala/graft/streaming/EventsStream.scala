@@ -3,24 +3,21 @@ package graft.streaming
 import graft.operators.RangeJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured-Streaming re-expression of the reference's incremental
-  * semantics (SURVEY.md §2.9): the producer/queue/consumer pipeline becomes
-  * a file stream; resume offsets become checkpointed state.
+/** Batch operators over the events table, the st1–st3 queries:
+  *  - [[sessionize]]: gap-based sessions per user (30-minute gap), folded
+  *    with `flatMapGroupsWithState` over the complete input, so every
+  *    session emits, the trailing open one included;
+  *  - [[withRetransmissions]]: the at-least-once delivery model, a
+  *    deterministic 10 % sample of events delivered twice;
+  *  - [[dedupEvents]]: the exactly-once projection of that delivery,
+  *    duplicates collapsed on `event_id`;
+  *  - [[attribution]]: every (purchase, prior view) pair of one user within
+  *    30 minutes, as a bucketed interval join.
   *
-  * Operators:
-  *  - watermarked tumbling-window aggregation (hourly counts/sums per type);
-  *  - sessionization with `flatMapGroupsWithState` (custom per-user state,
-  *    30-minute gap): [[sessionize]] is the batch entry (complete input —
-  *    every session emits; the st1 oracle path) and [[sessionizeStream]] the
-  *    true streaming entry, where the open session carries across
-  *    microbatches in GroupState and flushes via event-time timeout
-  *    (SessionizeStreamSpec forces batch boundaries to prove no split).
-  *
-  * The batch forms run over the same frames (identical plans modulo the
-  * sink), which is how the DuckDB oracle covers their logic via
-  * q9_events_hourly / st1_sessionize.
+  * The DuckDB oracle covers each through its query (st1_sessionize,
+  * st2_stream_dedup, st3_attribution).
   */
 object EventsStream {
 
@@ -30,58 +27,9 @@ object EventsStream {
   final case class Session(user_id: Long, start_ms: Long, end_ms: Long,
                            n_events: Int, sum_value: Double)
 
-  /** Watermarked hourly rollup of a streaming events frame. Parquet infers
-    * TIMESTAMP_NTZ, which watermarks reject — cast to session-zone timestamp.
-    */
-  def hourlyAgg(events: DataFrame): DataFrame =
-    events
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value"))
-      .select(col("window.start").as("hour"), col("event_type"),
-        col("n_events"), col("sum_value"))
-
-  /** Read the events table as an AvailableNow file stream and run the hourly
-    * aggregation into an in-memory sink. Returns the result after the stream
-    * drains (used by tests and the streaming demo query).
-    */
-  def runHourlyAvailableNow(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // file streams need a directory source; glob-filter to the events table
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val q = hourlyAgg(stream).writeStream
-      .format("memory").queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
-  /** The shared gap-split kernel: fold sorted events into an optional prior
-    * open session; returns (closed sessions, trailing open session).
-    */
-  private def gapSplit(userId: Long, prior: Option[SessionState], evs: Seq[Event],
-                       gapMs: Long): (Seq[Session], Option[SessionState]) = {
-    val sessions = scala.collection.mutable.ArrayBuffer.empty[Session]
-    var cur: SessionState = prior.orNull
-    evs.foreach { e =>
-      val t = e.ts.getTime
-      if (cur == null) cur = SessionState(t, t, 1, e.value)
-      else if (t - cur.lastSeen > gapMs) {
-        sessions += Session(userId, cur.start, cur.lastSeen, cur.nEvents, cur.sumValue)
-        cur = SessionState(t, t, 1, e.value)
-      } else cur = cur.copy(lastSeen = t, nEvents = cur.nEvents + 1,
-        sumValue = cur.sumValue + e.value)
-    }
-    (sessions.toSeq, Option(cur))
-  }
-
-  /** Gap-based sessionization, BATCH entry (the st1 oracle path): every
-    * session emits, including the trailing open one — batch input is
-    * complete by definition.
+  /** Gap-based sessionization (the st1 query): each user's events, sorted
+    * by time, split wherever consecutive events lie more than `gapMs` apart.
+    * Every session emits, the trailing one included: the input is complete.
     */
   def sessionize(spark: SparkSession, events: DataFrame, gapMs: Long = 30 * 60 * 1000L): DataFrame = {
     import spark.implicits._
@@ -92,52 +40,27 @@ object EventsStream {
       .flatMapGroupsWithState[List[SessionState], Session](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (userId: Long, it: Iterator[Event], state: GroupState[List[SessionState]]) =>
-          val (closed, open) = gapSplit(userId, None, it.toSeq.sortBy(_.ts.getTime), gapMs)
           state.update(Nil)
-          (closed ++ open.map(c =>
-            Session(userId, c.start, c.lastSeen, c.nEvents, c.sumValue))).iterator
+          gapSplit(userId, it.toSeq.sortBy(_.ts.getTime), gapMs).iterator
       }.toDF()
   }
 
-  /** Gap-based sessionization, STREAMING entry: the open session CARRIES
-    * ACROSS microbatches in GroupState (a session spanning two batches must
-    * not split), closed sessions emit as soon as a later event proves the
-    * gap, and the trailing open session emits when the event-time watermark
-    * passes lastSeen + gap (state timeout) — i.e. once it provably cannot
-    * be extended. Requires a watermark on `ts`; late events beyond it are
-    * the watermark's contract, not this operator's.
-    */
-  def sessionizeStream(events: DataFrame, gapMs: Long = 30 * 60 * 1000L,
-                       watermarkDelay: String = "10 minutes"): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ds = events
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermarkDelay)
-      .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[SessionState], Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (userId: Long, it: Iterator[Event], state: GroupState[List[SessionState]]) =>
-          if (state.hasTimedOut) {
-            // watermark passed lastSeen + gap: the open session is final
-            val out = state.get.map(c =>
-              Session(userId, c.start, c.lastSeen, c.nEvents, c.sumValue))
-            state.remove()
-            out.iterator
-          } else {
-            val prior = if (state.exists) state.get.headOption else None
-            val (closed, open) =
-              gapSplit(userId, prior, it.toSeq.sortBy(_.ts.getTime), gapMs)
-            open match {
-              case Some(c) =>
-                state.update(List(c))
-                state.setTimeoutTimestamp(c.lastSeen + gapMs)
-              case None => if (state.exists) state.remove()
-            }
-            closed.iterator
-          }
-      }.toDF()
+  /** Fold one user's time-sorted events into sessions. */
+  private def gapSplit(userId: Long, evs: Seq[Event], gapMs: Long): Seq[Session] = {
+    val sessions = scala.collection.mutable.ArrayBuffer.empty[Session]
+    var cur: SessionState = null
+    def close(): Unit = sessions += Session(userId, cur.start, cur.lastSeen, cur.nEvents, cur.sumValue)
+    evs.foreach { e =>
+      val t = e.ts.getTime
+      if (cur == null) cur = SessionState(t, t, 1, e.value)
+      else if (t - cur.lastSeen > gapMs) {
+        close()
+        cur = SessionState(t, t, 1, e.value)
+      } else cur = cur.copy(lastSeen = t, nEvents = cur.nEvents + 1,
+        sumValue = cur.sumValue + e.value)
+    }
+    if (cur != null) close()
+    sessions.toSeq
   }
 
   /** Deterministic at-least-once retransmission model: a 10% md5-derived
@@ -151,8 +74,8 @@ object EventsStream {
       conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10)
         .cast("long") / lit(4294967296.0) < 0.1))
 
-  /** Exactly-once projection of an at-least-once stream, BATCH entry (the
-    * st2 oracle path): duplicates collapse on the delivery key. Output uses
+  /** Exactly-once projection of an at-least-once delivery (the st2 query):
+    * duplicates collapse on the delivery key. Output uses
     * epoch millis so the oracle compare is timestamp-encoding-free.
     */
   def dedupEvents(events: DataFrame): DataFrame =
@@ -162,28 +85,12 @@ object EventsStream {
         unix_millis(col("ts").cast("timestamp")).as("ts_ms"),
         col("user_id"), col("event_type"), col("value"))
 
-  /** The STREAMING entry: `dropDuplicatesWithinWatermark` keys the dedup
-    * state by event_id and expires it once the watermark passes — the
-    * bounded-state form of exactly-once projection (an unbounded-key
-    * `dropDuplicates` on a stream never frees state; the watermark variant
-    * is the 10^12-event shape). StreamDedupSpec pins stream == batch.
-    */
-  def dedupEventsStream(events: DataFrame,
-                        watermarkDelay: String = "2 hours"): DataFrame =
-    withRetransmissions(events)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("event_id")
-      .select(col("event_id"), unix_millis(col("ts")).as("ts_ms"),
-        col("user_id"), col("event_type"), col("value"))
-
   /** st3: purchase attribution — every (purchase, prior view) pair of the
-    * same user with `purchase_ts − 30 min ≤ view_ts < purchase_ts`.
-    * BATCH entry (the st3 oracle path): composed from the bucketed
-    * interval join, so a hot user's years of events rendezvous per
-    * 1-hour bucket instead of forming pairs quadratically inside one
-    * join group (the RangeJoin scaladoc's hazard). Output in epoch
-    * millis, encoding-free for the oracle compare.
+    * same user with `purchase_ts − 30 min ≤ view_ts < purchase_ts`,
+    * composed from the bucketed interval join, so a hot user's years of
+    * events rendezvous per 1-hour bucket instead of forming pairs
+    * quadratically inside one join group (the RangeJoin scaladoc's
+    * hazard). Output in epoch millis, encoding-free for the oracle compare.
     */
   def attribution(events: DataFrame): DataFrame = {
     val e = events.withColumn("ts", col("ts").cast("timestamp"))
@@ -199,35 +106,6 @@ object EventsStream {
       pointTime = col("view_ts"), start = col("w_start"), end = col("purchase_ts"),
       pointKey = col("v_user"), intervalKey = col("user_id"),
       bucketUs = 3600L * 1000000L)
-      .select(col("purchase_id"), col("view_id"), col("user_id"),
-        unix_millis(col("purchase_ts")).as("purchase_ms"),
-        unix_millis(col("view_ts")).as("view_ms"))
-  }
-
-  /** The STREAMING entry: a watermark-bounded STREAM-STREAM inner join —
-    * the one stateful join shape the other streaming ops don't exercise.
-    * Both legs carry their own watermark and the join condition pairs the
-    * user-id equality with the 30-minute event-time range, so Spark's
-    * symmetric hash join can expire buffered rows once the watermark
-    * passes the range bound: state is (watermark + 30 min) of events per
-    * side, never the full stream. AttributionStreamSpec pins stream ==
-    * batch.
-    */
-  def attributionStream(events: DataFrame,
-                        watermarkDelay: String = "2 hours"): DataFrame = {
-    val e = events.withColumn("ts", col("ts").cast("timestamp"))
-    val views = e.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", watermarkDelay)
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", watermarkDelay)
-    views.join(purchases,
-      col("v_user") === col("user_id") &&
-        col("view_ts") >= col("purchase_ts") - expr("INTERVAL 30 MINUTES") &&
-        col("view_ts") < col("purchase_ts"))
       .select(col("purchase_id"), col("view_id"), col("user_id"),
         unix_millis(col("purchase_ts")).as("purchase_ms"),
         unix_millis(col("view_ts")).as("view_ms"))

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-/** A line scan of the main sources for a call that only a few owners may
-  * make (`CacheOwnerSpec`, `JsonParseSiteSpec`). Comment lines and trailing
-  * `//` comments are skipped.
+/** A line scan of the main sources: for a call that only a few owners may
+  * make (`CacheOwnerSpec`, `JsonParseSiteSpec`), and for the names the code
+  * uses (`MainSurfaceSpec`). Comment lines and trailing `//` comments are
+  * skipped.
   */
 object SourceScan {
 
@@ -33,24 +34,32 @@ object SourceScan {
     var indent = lines(i).indexWhere(_ != ' ') + 1
     (i to 0 by -1).toList.flatMap { j =>
       val ind = lines(j).indexWhere(_ != ' ')
-      if (ind < 0 || ind >= indent || isComment(lines(j))) None
+      if (ind < 0 || ind >= indent) None
       else definition.findFirstMatchIn(lines(j)).map { m => indent = ind; m.group(1) }
     }
   }
+
+  /** Every main source file under `src/main/scala` with its lines, in path
+    * order; a comment line reads as empty and a trailing `//` comment is cut.
+    */
+  lazy val sources: Seq[(String, IndexedSeq[String])] =
+    Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .map { p =>
+        val code = Files.readAllLines(p).asScala.toIndexedSeq
+          .map(l => if (isComment(l)) "" else l.split("//", 2)(0))
+        (root.relativize(p).toString, code)
+      }
 
   /** Every match of `call`; `allowed` maps a file under `src/main/scala` to
     * the definitions allowed to make it (empty: the whole file).
     */
   def calls(call: Regex, allowed: Map[String, Set[String]]): Seq[Call] =
-    Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
-      .flatMap { p =>
-        val file = root.relativize(p).toString
-        val lines = Files.readAllLines(p).asScala.toIndexedSeq
-        lines.indices
-          .filter(i => !isComment(lines(i)) && call.findFirstIn(lines(i).split("//", 2)(0)).isDefined)
-          .map { i =>
-            val ok = allowed.get(file).exists(defs => defs.isEmpty || enclosing(lines, i).exists(defs))
-            Call(file, i + 1, lines(i).trim, ok)
-          }
-      }
+    sources.flatMap { case (file, lines) =>
+      lines.indices
+        .filter(i => call.findFirstIn(lines(i)).isDefined)
+        .map { i =>
+          val ok = allowed.get(file).exists(defs => defs.isEmpty || enclosing(lines, i).exists(defs))
+          Call(file, i + 1, lines(i).trim, ok)
+        }
+    }
 }

@@ -5,7 +5,6 @@ import graft.SparkTestBase
 import graft.operators.KgQueries
 import graft.pipeline.TextifyStage
 import graft.textify.{LangVariant, Textifier, TimeText}
-import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 import scala.util.{Failure, Random, Success, Try}
@@ -208,8 +207,9 @@ class SnakValueSpec extends AnyFunSuite {
       stringUnit.claims.head.claims.head.mainsnak) == Some("+5 nil"))
   }
 
-  test("Dataset[Entity] from DumpSource.entities encodes and decodes every datatype's value") {
+  test("Dataset[Entity] from parsed dump lines encodes and decodes every datatype's value") {
     val spark = SparkTestBase.spark
+    import spark.implicits._
     def claim(pid: String, snak: String) =
       s""""$pid":[{"type":"statement","rank":"normal","mainsnak":$snak,"qualifiers":{"P580":[$snak]}}]"""
     def value(dt: String, v: String) = snakJson("value", dt, Some(s"""{"value":$v}"""))
@@ -225,10 +225,10 @@ class SnakValueSpec extends AnyFunSuite {
       claim("P625", value("globe-coordinate", """{"latitude":1.5,"longitude":2}""")),
       claim("P18", snakJson("somevalue", "string", None)))
     val line = s"""{"id":"Q7","labels":{"en":{"value":"seven"}},"claims":{${claims.mkString(",")}}}"""
-    val dir = Files.createTempDirectory(Paths.get("target"), "snak-value-").toString
-    Files.writeString(Paths.get(dir, "dump.json"), s"[\n$line,\n]\n")
     val want = WikidataJson.normalize(WikidataJson.parseLine(line).get)
-    val got = graft.sources.DumpSource.entities(spark, s"$dir/dump.json").collect().toSeq
+    // parse and normalize in one lambda: JsonNode has no encoder
+    val got = spark.createDataset(Seq(line))
+      .flatMap(l => WikidataJson.parseLine(l).map(WikidataJson.normalize(_, "en"))).collect().toSeq
     assert(got == Seq(want))
     val values = got.head.claims.map(cg => cg.pid -> cg.claims.head.mainsnak.value).toMap
     assert(values("P31").id == "Q5" && values("P1647").id == "P31")

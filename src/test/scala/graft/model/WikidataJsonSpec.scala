@@ -21,5 +21,12 @@ class WikidataJsonSpec extends AnyFunSuite {
       assert(WikidataJson.trimLine(l) == reverseTrim(l), s"line ${l.toSeq}")
     }
     assert(WikidataJson.parseLine(s"[$item,\n").map(_.get("id").asText()).contains("Q1"))
+    assert(WikidataJson.parseLine("BROKEN LINE").isEmpty)
+    // a dump-shaped file: wrapper lines and a bad row drop, a label falls back to mul
+    val q1 = """{"id":"Q1","labels":{"en":{"value":"one"}},"descriptions":{},"aliases":{},"claims":{}}"""
+    val q2 = """{"id":"Q2","labels":{"mul":{"value":"two"}},"descriptions":{},"aliases":{},"claims":{}}"""
+    val dump = s"[\n$q1,\nBROKEN LINE\n$q2,\n]\n"
+    val es = dump.split("\n").toSeq.flatMap(WikidataJson.parseLine).map(WikidataJson.normalize(_, "en"))
+    assert(es.map(e => (e.id, e.label)) == Seq(("Q1", "one"), ("Q2", "two")))
   }
 }

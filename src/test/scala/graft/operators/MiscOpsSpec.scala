@@ -150,16 +150,13 @@ class MiscOpsSpec extends AnyFunSuite {
     assert(m.getAs[Double]("mrr") == 1.0)
   }
 
-  test("multimodal stubs: decode/resize/frames are deterministic with real batching") {
+  test("multimodal stubs: decode/frames are deterministic with real batching") {
     val dir = "/root/testdata/sf0.001"
     val a = graft.multimodal.Media.assets(spark, dir)
     val dec1 = graft.multimodal.Media.decodeImages(a, batchSize = 8).collect().sortBy(_.asset_id)
     val dec2 = graft.multimodal.Media.decodeImages(a, batchSize = 32).collect().sortBy(_.asset_id)
     assert(dec1.map(d => (d.asset_id, d.width, d.height, d.features.toSeq)).toSeq ==
       dec2.map(d => (d.asset_id, d.width, d.height, d.features.toSeq)).toSeq)
-    val resized = graft.multimodal.Media.resize(
-      graft.multimodal.Media.decodeImages(a), 128).collect()
-    assert(resized.forall(d => d.width <= 128 && d.height <= 128))
     val frames = graft.multimodal.Media.sampleFrames(a).collect()
     assert(frames.nonEmpty && frames.forall(_.features.length == 16))
   }
@@ -188,34 +185,20 @@ class MiscOpsSpec extends AnyFunSuite {
     assert(got.forall(_._3 <= 1))
   }
 
-  test("streaming: AvailableNow hourly agg == batch hourly agg; sessions split on gaps") {
-    val dir = "/root/testdata/sf0.001"
-    // round the float sums: accumulation order differs between the streaming
-    // and batch plans (both are correct; doubles are not associative)
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(org.apache.spark.sql.functions.col("hour"),
-        org.apache.spark.sql.functions.col("event_type"),
-        org.apache.spark.sql.functions.col("n_events"),
-        org.apache.spark.sql.functions.round(
-          org.apache.spark.sql.functions.col("sum_value"), 4).as("sum_value"))
-      .collect().map(_.toString).sorted.toSeq
-    val streamed = canon(graft.streaming.EventsStream
-      .runHourlyAvailableNow(spark, dir, "hourly_test")).toSet
-    val batchDf = graft.streaming.EventsStream
-      .hourlyAgg(spark.read.parquet(s"$dir/events.parquet"))
-    val batch = canon(batchDf).toSet
-    // append-mode contract: exactly the windows CLOSED by the final
-    // watermark (max event time - 2h) are emitted; later windows stay open
-    val maxTs = spark.read.parquet(s"$dir/events.parquet")
-      .agg(org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("ts").cast("timestamp"))).collect()(0)
-      .getTimestamp(0).getTime
-    val closed = canon(batchDf.filter(
-      org.apache.spark.sql.functions.col("hour").cast("long") * 1000 + 3600000 <=
-        maxTs - 2 * 3600000)).toSet
-    assert(streamed.subsetOf(batch))
-    assert(closed.subsetOf(streamed), s"missing closed windows: ${(closed -- streamed).take(3)}")
+  test("sessionize: sessions split on gaps; start <= end, positive counts") {
+    import graft.streaming.EventsStream.{Event, Session}
+    val base = 1735689600000L // 2025-01-01T00:00Z
+    def ev(id: Long, offsetMin: Long, user: Long, v: Double) =
+      Event(id, new java.sql.Timestamp(base + offsetMin * 60000L), user, "t", v)
+    // user 1: t+0, t+10, t+20 are one session (gap 30 min); t+120 opens the next
+    val hand = graft.streaming.EventsStream.sessionize(spark, Seq(ev(4, 120, 1L, 4.0),
+      ev(1, 0, 1L, 1.0), ev(3, 20, 1L, 3.0), ev(2, 10, 1L, 2.0), ev(99, 6000, 999L, 0.0)).toDF())
+      .as[Session].collect().sortBy(s => (s.user_id, s.start_ms)).toSeq
+    assert(hand == Seq(Session(1L, base, base + 20 * 60000L, 3, 6.0),
+      Session(1L, base + 120 * 60000L, base + 120 * 60000L, 1, 4.0),
+      Session(999L, base + 6000 * 60000L, base + 6000 * 60000L, 1, 0.0)))
 
+    val dir = "/root/testdata/sf0.001"
     val sessions = graft.streaming.EventsStream
       .sessionize(spark, spark.read.parquet(s"$dir/events.parquet"))
     val s = sessions.collect()
@@ -225,5 +208,32 @@ class MiscOpsSpec extends AnyFunSuite {
       assert(r.getAs[Long]("start_ms") <= r.getAs[Long]("end_ms"))
       assert(r.getAs[Int]("n_events") > 0)
     }
+  }
+
+  test("retransmissions add duplicates; dedupEvents collapses them to the base count") {
+    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val base = events.count()
+    val withDupes = graft.streaming.EventsStream.withRetransmissions(events).count()
+    assert(withDupes > base, "retransmission model injected no duplicates")
+    val batch = graft.streaming.EventsStream.dedupEvents(events)
+      .as[(Long, Long, Long, String, Double)].collect().toSet
+    assert(batch.size == base, "verbatim duplicates must collapse to the original set")
+  }
+
+  test("attribution boundary semantics: window is [p - 30min, p), same user only") {
+    import java.sql.Timestamp
+    def ts(minute: Int) = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
+    val events = Seq(
+      // user 1: purchase at 10:40
+      (100L, ts(40), 1L, "purchase", 1.0, ""),
+      (1L, ts(10), 1L, "view", 0.0, ""),  // exactly p-30min → IN (>= start)
+      (2L, ts(9), 1L, "view", 0.0, ""),   // before window → out
+      (3L, ts(40), 1L, "view", 0.0, ""),  // at purchase instant → out (< p)
+      (4L, ts(39), 1L, "view", 0.0, ""),  // in
+      (5L, ts(25), 2L, "view", 0.0, ""))  // other user → out
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val got = graft.streaming.EventsStream.attribution(events)
+      .select("purchase_id", "view_id").as[(Long, Long)].collect().toSet
+    assert(got == Set((100L, 1L), (100L, 4L)))
   }
 }

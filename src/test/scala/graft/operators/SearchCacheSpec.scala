@@ -72,16 +72,4 @@ class SearchCacheSpec extends AnyFunSuite {
     // and the cached vectors equal the direct encode
     assert(v1("a") == graft.link.Embedder.encode("hello world").toSeq)
   }
-
-  test("DumpSource reads dump-shaped files with wrapper lines and bad rows") {
-    val dir = Files.createTempDirectory(java.nio.file.Paths.get("target"), "dump-").toString
-    val f = s"$dir/dump.json"
-    Files.writeString(java.nio.file.Paths.get(f),
-      "[\n{\"id\":\"Q1\",\"labels\":{\"en\":{\"value\":\"one\"}},\"descriptions\":{},\"aliases\":{},\"claims\":{}},\n" +
-        "BROKEN LINE\n" +
-        "{\"id\":\"Q2\",\"labels\":{\"mul\":{\"value\":\"two\"}},\"descriptions\":{},\"aliases\":{},\"claims\":{}},\n]\n")
-    val es = graft.sources.DumpSource.entities(spark, f).collect().sortBy(_.id)
-    assert(es.map(_.id).toSeq == Seq("Q1", "Q2"))
-    assert(es(0).label == "one" && es(1).label == "two") // mul fallback
-  }
 }

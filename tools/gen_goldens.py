@@ -496,118 +496,6 @@ for raw in FIXTURES:
         json.dump(chunks, f, ensure_ascii=False, indent=1)
 
 # --------------------------------------------------------------------------
-# 7b. REST-datatype phrasing (T13): run the reference's real methods
-#     (ast-extracted, network stubbed) over REST-shaped fixture items
-# --------------------------------------------------------------------------
-
-rest_src = extract_functions(
-    f"{REF}/experimental_run_scripts/wikidata_restapi_textification.py",
-    ["check_and_return_value", "convert_value_to_string", "make_statement",
-     "convert_wikidata_item_to_statements"],
-    class_name="WikidataTextification")
-
-import logging
-from functools import partial
-from multiprocessing.dummy import Pool as ThreadPool
-
-
-class RestShim:
-    def __init__(self):
-        self.counter = 0
-        self.verbose = False
-        self.embedder = None
-        self.n_cores = 2
-        self.lang = "en"
-        self.logger = logging.getLogger("rest")
-
-    # label-store stand-ins for the network fetches (string or '' if absent)
-    def get_property_from_wikidata(self, pid, key=None):
-        return (LABELS.get(pid, ""), None)
-
-    def get_item_from_wikidata(self, qid, key=None):
-        return (LABELS.get(qid, ""), None)
-
-
-rest_ns = {"partial": partial, "ThreadPool": ThreadPool,
-           "tqdm": (lambda x, total=None: x), "isinstance": isinstance}
-exec(rest_src, rest_ns)
-for fn in ("check_and_return_value", "convert_value_to_string",
-           "make_statement", "convert_wikidata_item_to_statements"):
-    setattr(RestShim, fn, rest_ns[fn])
-
-
-def rest_stmt(dtype, content):
-    return {"property": {"id": "X", "data-type": dtype}, "value": {"content": content}}
-
-
-REST_ITEMS = [
-    {"item_data": {
-        "id": "Q90001",
-        "labels": {"en": "Fixture City"},
-        "descriptions": {"en": "synthetic test city"},
-        "statements": {
-            "P31": [rest_stmt("wikibase-item", "Q515")],
-            "P580": [rest_stmt("time", {"time": "+1987-06-17T12:34:56Z", "precision": 11})],
-            "P1082": [rest_stmt("quantity", {"amount": "+120345", "unit": "1"}),
-                      rest_stmt("quantity", {"amount": "+99", "unit": "1"})],  # label-accumulation quirk
-            "P1448": [rest_stmt("monolingualtext", {"text": "City of Fixtures", "language": "en"})],
-            "P123": [rest_stmt("external-id", "EXT-123")],        # no content -> skipped
-            "P17": [rest_stmt("url", "https://example.test")],    # skipped, label mutated
-            "P9999": [rest_stmt("wikibase-item", "Q515")],        # pid without label -> []
-            "P279": [rest_stmt("wikibase-item", "Q404")],         # value label missing -> ''
-            "P361": [rest_stmt("wikibase-item", ["Q515"])],       # list unwrap
-        }}},
-    {"item_data": {
-        "id": "Q90007",
-        "labels": {"en": "Bare Entity"},
-        "descriptions": {},   # .get -> '' description
-        "statements": {}}},
-]
-os.makedirs(f"{OUT}/goldens/rest", exist_ok=True)
-os.makedirs(f"{OUT}/fixtures", exist_ok=True)
-with open(f"{OUT}/fixtures/rest_items.json", "w") as f:
-    json.dump(REST_ITEMS, f, ensure_ascii=False, indent=1)
-for item in REST_ITEMS:
-    shim = RestShim()
-    rows = shim.convert_wikidata_item_to_statements(item)
-    for r in rows:
-        r.pop("embedding", None)
-    with open(f"{OUT}/goldens/rest/{item['item_data']['id']}.json", "w") as f:
-        json.dump(rows, f, ensure_ascii=False, indent=1)
-
-# --------------------------------------------------------------------------
-# 7b2. Alt item chunker (T7): execute the REFERENCE's own
-#      entity_to_item_chunks / chunk_item_string / convert_props_to_string
-#      (wikidata_datadump_item_textification.py:332-540) with query_label
-#      stubbed. Quirks preserved: n_statements counts dict .items() tuples
-#      (always 2 per property), the final partial chunk SKIPS a chunk id,
-#      every claim gets its own line (the comma-join branch is dead code).
-# --------------------------------------------------------------------------
-
-it_src = extract_functions(
-    f"{REF}/experimental_run_scripts/wikidata_datadump_item_textification.py",
-    ["get_value_label", "get_property_label", "convert_props_to_string",
-     "chunk_item_string", "entity_to_item_chunks"])
-it_ns = {"query_label": query_label, "uuid": uuid_mod, "isinstance": isinstance,
-         "print": print}
-exec(it_src, it_ns)
-entity_to_item_chunks = it_ns["entity_to_item_chunks"]
-
-os.makedirs(f"{OUT}/goldens/itemchunks", exist_ok=True)
-for raw in FIXTURES:
-    if "en" not in raw.get("descriptions", {}):
-        continue  # the production loop's F10 guard: skip without lang description
-    out = {}
-    for cs in (5, 100):
-        rows = entity_to_item_chunks(raw, conn=object(), chunksize=cs, lang="en")
-        for r in rows:
-            r.pop("uuid", None)
-            r.pop("embedding", None)
-        out[str(cs)] = rows
-    with open(f"{OUT}/goldens/itemchunks/{raw['id']}.json", "w") as f:
-        json.dump(out, f, ensure_ascii=False, indent=1)
-
-# --------------------------------------------------------------------------
 # 7c. Qualifier + reference triples (P6): execute the REFERENCE notebook's own
 #     get_triplets + cleanup chain (Data_Sample_Preparation.ipynb cells 2/3/5)
 #     over the fixtures. get_labels is stubbed from LABELS (the notebook hits
